@@ -1,29 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan for the named
   * queries (all when none given). Usage:
   *   runMain graft.Explain <sfDir> [query ...]
   * Scale review checklist (what to look for): PushedFilters / ReadSchema
   * on scans (pushdown + pruning), BroadcastHashJoin for KB-sized dims,
   * no single-partition Window/Sort on data-sized inputs, wide
-  * WholeStageCodegen spans.
+  * WholeStageCodegen spans. Plans on Bench's session
+  * ([[GraftSession.local]]), so what it prints is what Bench runs.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.parquet
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive ts -> TimestampType (UTC session)
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n===== $n =====")

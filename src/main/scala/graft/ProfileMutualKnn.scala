@@ -60,16 +60,8 @@ object ProfileMutualKnn {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/tmp/graft-scale/sf0.1x10", "/tmp/graft-scale/sf0.1x30")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = GraftSession.local(extras = Seq(
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString))
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Similarity
 

@@ -70,16 +70,8 @@ object RetrievalScaleCheck {
   def main(args: Array[String]): Unit = {
     val f2 = args.headOption.map(_.toInt).getOrElse(10)
     val f3 = args.drop(1).headOption.map(_.toInt).getOrElse(30)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = GraftSession.local(extras = Seq(
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString))
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.TextAnalysis
 

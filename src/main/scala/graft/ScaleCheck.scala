@@ -278,26 +278,16 @@ object ScaleCheck {
     val small = "/root/testdata/sf0.01"
     val scaled = s"/tmp/graft-scale/sf0.1x$factor"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-      // The fixture convention is ONE parquet file per table (streaming
-      // readers stage single files), and the default 128 MB
-      // maxPartitionBytes turns the 10x table into ~4 scan tasks on 32
-      // cores — the harness would then measure single-file
-      // under-parallelization, not the operator (round-7 finding: q09
-      // read 7.5x at 10x data from scan starvation alone). 16 MB splits
-      // the big file into ~22 tasks; a real 100 TB input is many files
-      // and never hits this.
-      .config("spark.sql.files.maxPartitionBytes", (16 * 1024 * 1024).toString)
-      .getOrCreate()
+    // The fixture convention is ONE parquet file per table (streaming
+    // readers stage single files), and the default 128 MB
+    // maxPartitionBytes turns the 10x table into ~4 scan tasks on 32
+    // cores — the harness would then measure single-file
+    // under-parallelization, not the operator (q09 read 7.5x at 10x
+    // data from scan starvation alone). 16 MB splits
+    // the big file into ~22 tasks; a real 100 TB input is many files
+    // and never hits this.
+    val spark = GraftSession.local(extras = Seq(
+      "spark.sql.files.maxPartitionBytes" -> (16 * 1024 * 1024).toString))
     spark.sparkContext.setLogLevel("WARN")
 
     buildScaled(spark, base, scaled, factor)

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.lit
+import graft.util.Json
 
 /** Incremental-source bookmark — reference A22: Glue job bookmarks track
   * processed input per `transformation_ctx` so re-runs skip old files
@@ -152,15 +153,16 @@ class BookmarkStore(spark: SparkSession, statePath: String,
       save(marks + (plan.source -> SourceMark(committed, seen)))
     }
 
-  // JSON codec via snakeyaml (YAML ⊇ JSON flow style — same parser the
-  // config layer uses). Legacy flat {"source": millis} files load as a
-  // bare watermark with an empty seen-set.
+  // JSON written with Json.str, read via snakeyaml (YAML ⊇ JSON flow
+  // style — same parser the config layer uses; it rejects raw control
+  // characters, which Json.str always escapes). Legacy flat
+  // {"source": millis} files load as a bare watermark with an empty
+  // seen-set.
   private def render(m: Map[String, SourceMark]): String = {
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     m.toSeq.sortBy(_._1).map { case (src, mark) =>
       val seen = mark.seen.toSeq.sorted
-        .map { case (p, t) => s"${jstr(p)}: $t" }.mkString("{", ", ", "}")
-      s"${jstr(src)}: {\"watermark\": ${mark.watermark}, \"seen\": $seen}"
+        .map { case (p, t) => s"${Json.str(p)}: $t" }.mkString("{", ", ", "}")
+      s"${Json.str(src)}: {\"watermark\": ${mark.watermark}, \"seen\": $seen}"
     }.mkString("{", ", ", "}")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.config._
 import graft.sources.Sources
 import graft.sinks.Sinks
+import graft.util.Json
 
 /** Orchestration core — the reference's whole query lifecycle
   * (`glue/glue_etl_framework.py:136-275`, SURVEY.md §3) re-expressed as
@@ -204,7 +205,7 @@ object Engine {
             val dir = new org.apache.hadoop.fs.Path(location)
             val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
             val json = metrics.map { case (k, v) =>
-              "\"" + k.replace("\"", "\\\"") + "\":" + String.valueOf(v)
+              Json.str(k) + ":" + String.valueOf(v)
             }.mkString("{", ",", "}")
             val os = fs.create(
               new org.apache.hadoop.fs.Path(dir, "_graft_metrics.json"), true)
@@ -451,10 +452,6 @@ object Engine {
         }
     }
   }
-
-  /** A18: apply job.spark_config before use (builder passthrough). */
-  def applySparkConfig(builder: SparkSession.Builder, job: JobSpec): SparkSession.Builder =
-    job.sparkConfig.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
 }
 
 /** CLI entry mirroring the reference's `__main__` argument contract
@@ -495,8 +492,17 @@ object EtlMain {
       i += 1
     }
     CliArgs(config.getOrElse(throw new ConfigError("--config <path> required")),
-      pipeline, vars.toMap)
+      pipeline, scala.collection.immutable.ListMap.from(vars))
   }
+
+  /** The job session's conf, later keys winning: the deployment's master
+    * and shuffle width, graft's result settings (so YAML SQL can call the
+    * graft functions and `spark.graft.failOnGlobalWindow` applies), then
+    * `job.spark_config` (A18), which may override any of them. */
+  private[engine] def sessionConf(job: JobSpec): Seq[(String, String)] =
+    Seq("spark.master" -> sys.env.getOrElse("SPARK_MASTER", "local[*]"),
+      "spark.sql.shuffle.partitions" -> sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")) ++
+      graft.GraftSession.resultConf ++ job.sparkConfig
 
   /** Read a text file through Hadoop FS without a SparkSession. */
   private[engine] def readConfigText(path: String): String = {
@@ -511,15 +517,7 @@ object EtlMain {
     val job = ConfigParser.parse(readConfigText(cli.config))
     graft.log.Log.setContext("job" -> job.name, "pipeline" -> cli.pipeline)
     graft.log.Log.info("job starting", "config" -> cli.config)
-    val spark = Engine.applySparkConfig(
-      SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false"),
-      job).getOrCreate()
+    val spark = graft.GraftSession.create(sessionConf(job))
     try {
       Engine.run(spark, job, cli.pipeline, cli.vars)
       graft.log.Log.info("job finished")

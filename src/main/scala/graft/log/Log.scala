@@ -1,5 +1,7 @@
 package graft.log
 
+import graft.util.Json
+
 /** Structured JSON logging — reference A21: the framework logs one JSON
   * object per event with timestamp/level/location plus job-context fields
   * (`glue/glue_etl_framework.py:311-359`). JVM analog: a tiny zero-dep
@@ -19,7 +21,6 @@ object Log {
 
   /** Set job-scoped fields (job name, pipeline) added to every event. */
   def setContext(fields: (String, String)*): Unit = context = fields.toMap
-  def clearContext(): Unit = context = Map.empty
 
   def info(msg: String, fields: (String, String)*): Unit = emit("INFO", msg, fields)
   def warn(msg: String, fields: (String, String)*): Unit = emit("WARN", msg, fields)
@@ -29,20 +30,10 @@ object Log {
                           fields: Seq[(String, String)], ts: String): String = {
     val kv = (Seq("ts" -> ts, "level" -> level, "msg" -> msg) ++
       context.toSeq.sortBy(_._1) ++ fields)
-    kv.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    kv.map { case (k, v) => s"${Json.str(k)}:${Json.str(v)}" }.mkString("{", ",", "}")
   }
 
   private def emit(level: String, msg: String, fields: Seq[(String, String)]): Unit =
     if (enabled)
       System.err.println(render(level, msg, fields, java.time.Instant.now().toString))
-
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

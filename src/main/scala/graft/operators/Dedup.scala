@@ -134,12 +134,6 @@ object Dedup {
         col("jaccard"))
   }
 
-  /** (doc_id, h) rows: the document's distinct word n-gram shingles,
-    * each hashed to 64 bits — an explode over [[shingleSets]]. */
-  def shingleHashes(docs: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    shingleSets(docs, idCol, textCol, n)
-      .select(col("doc_id"), explode(col("hs")).as("h"))
-
   /** MinHash signature per document: k independent permutation-min
     * estimates. Per (doc, shingle) row an array of k universal hashes is
     * computed columnarly; the signatures fold together with elementwise

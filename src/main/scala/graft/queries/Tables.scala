@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * makes `ts` arrive as LongType nanos) and plain timestamp[us]. The
   * reader adapts to what the footer actually says instead of assuming a
   * layout. Either way the timestamps are µs-precision instants and
-  * Spark/DuckDB see identical values (UTC session; the builders also set
+  * Spark/DuckDB see identical values (UTC session; [[graft.GraftSession]] also sets
   * `spark.sql.parquet.inferTimestampNTZ.enabled=false` so naive µs
   * columns load as TimestampType directly, keeping scan-level pushdown).
   */

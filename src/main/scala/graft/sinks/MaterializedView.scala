@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
+import graft.util.Json
 
 /** Version-aware MATERIALIZED VIEW over versioned-table sources: the MV
   * is itself a versioned table, plus a state record of the source
@@ -49,8 +50,8 @@ object MaterializedView {
         out.toString("UTF-8")
       } finally in.close()
       for {
-        fp <- """"fingerprint":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(text)
-          .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+        fp <- """"fingerprint":("(?:[^"\\]|\\.)*")""".r.findFirstMatchIn(text)
+          .map(m => Json.unstr(m.group(1)))
         v <- """"mv_version":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
       } yield (fp, v)
     }
@@ -90,18 +91,12 @@ object MaterializedView {
                   fp: String, version: Long): Unit = {
     val root = new Path(location)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val json = s"""{"fingerprint":${jstr(fp)},"mv_version":$version,""" +
+    val json = s"""{"fingerprint":${Json.str(fp)},"mv_version":$version,""" +
       s""""ts":${System.currentTimeMillis()}}"""
     val os = fs.create(statePath(root), true)
     try os.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
   }
-
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 
   /** INCREMENTAL VIEW MAINTENANCE for ADDITIVE grouped views over ONE
     * append-only versioned source — the IVM fast path: when every commit

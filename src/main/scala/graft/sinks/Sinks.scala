@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.config.{OutputTable, Refresh, TargetSpec}
+import graft.util.Json
 
 /** Output-table writer — reference A8–A16
   * (`glue/glue_etl_framework.py:190-275`), SURVEY.md §7 module 4.
@@ -165,7 +166,8 @@ object Sinks {
       val in = fs.open(p)
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                  finally in.close()
-      "\"gen\"\\s*:\\s*\"([^\"]+)\"".r.findFirstMatchIn(text).map(_.group(1))
+      """"gen"\s*:\s*("(?:[^"\\]|\\.)*")""".r.findFirstMatchIn(text)
+        .map(m => Json.unstr(m.group(1)))
     } catch { case _: java.io.FileNotFoundException => None }
 
   /** Latest published (version, generation-dir name), if any. A purge
@@ -282,8 +284,7 @@ object Sinks {
   private def publishPointer(fs: org.apache.hadoop.fs.FileSystem,
       target: org.apache.hadoop.fs.Path, genName: String, format: String,
       keep: Int): Long = {
-    def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val content = s"""{"gen":${j(genName)},"format":${j(format)}}"""
+    val content = s"""{"gen":${Json.str(genName)},"format":${Json.str(format)}}"""
       .getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val genPath = new org.apache.hadoop.fs.Path(genRoot(target), genName)
     var attempt = 0
@@ -429,11 +430,10 @@ object Sinks {
     val rows = spark.read.format(out.format)
       .options(graft.sources.Sources.mapOptions(out.options))
       .load(dir.toString).count()
-    def j(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     val sorted = files.sortBy(_._1)
-    val fileJson = sorted.map { case (n, b) => s"""{"name":${j(n)},"bytes":$b}""" }
+    val fileJson = sorted.map { case (n, b) => s"""{"name":${Json.str(n)},"bytes":$b}""" }
       .mkString("[", ",", "]")
-    val json = s"""{"table":${j(out.name)},"format":${j(out.format)},""" +
+    val json = s"""{"table":${Json.str(out.name)},"format":${Json.str(out.format)},""" +
       s""""row_count":$rows,"n_files":${sorted.size},""" +
       s""""total_bytes":${sorted.map(_._2).sum},"files":$fileJson}"""
     val os = fs.create(new org.apache.hadoop.fs.Path(dir, "_graft_manifest.json"), true)

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.util.Json
 
 /** Versioned-manifest table — the minimal TABLE FORMAT the A15/A16
   * contracts were missing (SURVEY "what's missing" #2): multi-writer
@@ -213,11 +214,8 @@ object VersionedTable {
     }
   }
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""; case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  // one JSON string token, quotes included: the group Json.unstr decodes
+  private final val JsonTok = """("(?:[^"\\]|\\.)*")"""
 
   /** Publish pre-rendered manifest text at `p` via the same temp-file +
     * rename-if-absent pattern as [[writeManifestCas]] — a crashed writer
@@ -235,17 +233,17 @@ object VersionedTable {
                                dv: Option[(String, Long)] = None,
                                branch: Option[String] = None): Boolean = {
     val fileJson = files.sortBy(_._1)
-      .map { case (n, b) => s"""{"name":${jstr(n)},"bytes":$b}""" }
+      .map { case (n, b) => s"""{"name":${Json.str(n)},"bytes":$b}""" }
       .mkString("[", ",", "]")
     val txnJson = txn.map { case (app, batch) =>
-      s""""txn_app":${jstr(app)},"txn_batch":$batch,""" }.getOrElse("")
-    val statsJson = statsFile.map(sf => s""""stats_file":${jstr(sf)},""").getOrElse("") +
+      s""""txn_app":${Json.str(app)},"txn_batch":$batch,""" }.getOrElse("")
+    val statsJson = statsFile.map(sf => s""""stats_file":${Json.str(sf)},""").getOrElse("") +
       dv.map { case (name, rows) =>
-        s""""dv_file":${jstr(name)},"dv_rows":$rows,""" }.getOrElse("")
+        s""""dv_file":${Json.str(name)},"dv_rows":$rows,""" }.getOrElse("")
     // commit wall clock: what as-of-TIMESTAMP reads resolve against
     // (informational ordering only — the version number is the truth)
     val json = s"""{"version":$v,"ts":${System.currentTimeMillis()},""" +
-      s""""mode":${jstr(mode)},$txnJson$statsJson""" +
+      s""""mode":${Json.str(mode)},$txnJson$statsJson""" +
       s""""n_files":${files.size},"files":$fileJson}"""
     val p = branch.fold(manifestPath(root, v))(branchManifestPath(root, v, _))
     // The publish primitive is PLUGGABLE ([[CommitCoordinator]]): the
@@ -276,15 +274,15 @@ object VersionedTable {
 
   // the manifest is machine-written flat JSON; extract the file names
   private def filesOfText(text: String): Seq[String] =
-    """"name":"((?:[^"\\]|\\.)*)"""".r.findAllMatchIn(text)
-      .map(m => m.group(1).replace("\\\"", "\"").replace("\\\\", "\\")).toSeq
+    ("\"name\":" + JsonTok).r.findAllMatchIn(text)
+      .map(m => Json.unstr(m.group(1))).toSeq
 
   private def readManifest(fs: FileSystem, root: Path, v: Long): Seq[String] =
     filesOfText(manifestText(fs, root, v))
 
   private def manifestField(text: String, key: String): Option[String] =
-    (""""""" + key + """":"((?:[^"\\]|\\.)*)"""").r.findFirstMatchIn(text)
-      .map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+    ("\"" + key + "\":" + JsonTok).r.findFirstMatchIn(text)
+      .map(m => Json.unstr(m.group(1)))
 
   // ------------------------------------------------------- deletion vectors
 
@@ -370,23 +368,7 @@ object VersionedTable {
       canonToken(java.time.Instant.from(t.atZone(java.time.ZoneOffset.UTC)))
     case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
     case d: java.time.LocalDate => d.toEpochDay.toString
-    case s => jstr(s.toString)
-  }
-
-  private def unjstr(tok: String): String = {
-    val body = tok.substring(1, tok.length - 1)
-    val sb = new StringBuilder(body.length)
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c == '\\' && i + 1 < body.length) {
-        body.charAt(i + 1) match {
-          case 'u' => sb.append(Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar); i += 6
-          case e => sb.append(e); i += 2
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
+    case s => Json.str(s.toString)
   }
 
   /** cmp on canonical tokens; None = not comparable (null / kind
@@ -397,7 +379,7 @@ object VersionedTable {
     val aStr = a.startsWith("\""); val bStr = b.startsWith("\"")
     if (a == "null" || b == "null") None
     else if (aStr != bStr) None
-    else if (aStr) Some(unjstr(a).compareTo(unjstr(b)))
+    else if (aStr) Some(Json.unstr(a).compareTo(Json.unstr(b)))
     else Some(BigDecimal(a).compare(BigDecimal(b)))
   }
 
@@ -508,25 +490,26 @@ object VersionedTable {
   }
 
   private def statsLine(file: String, col: String, s: ColStats): String =
-    s"""{"name":${jstr(file)},"col":${jstr(col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}}"""
+    s"""{"name":${Json.str(file)},"col":${Json.str(col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}}"""
 
   private def rowsLine(file: String, rows: Long): String =
-    s"""{"name":${jstr(file)},"rows":$rows}"""
+    s"""{"name":${Json.str(file)},"rows":$rows}"""
 
   private val RowsLineRe =
-    """\{"name":"((?:[^"\\]|\\.)*)","rows":(\d+)\}""".r
+    ("""\{"name":""" + JsonTok + ""","rows":(\d+)\}""").r
 
   private def setLine(file: String, col: String, b64: String): String =
-    s"""{"name":${jstr(file)},"col":${jstr(col)},"buckets":${jstr(b64)}}"""
+    s"""{"name":${Json.str(file)},"col":${Json.str(col)},"buckets":${Json.str(b64)}}"""
 
   private val SetLineRe =
-    """\{"name":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)","buckets":"([A-Za-z0-9+/=]*)"\}""".r
+    ("""\{"name":""" + JsonTok + ""","col":""" + JsonTok +
+      ""","buckets":"([A-Za-z0-9+/=]*)"\}""").r
 
   // min/max are canonical tokens: null | decimal | JSON string — match
   // them precisely (a greedy .* would split wrong on a string value
   // containing ","max":)
   private val StatsLineRe =
-    ("""\{"name":"((?:[^"\\]|\\.)*)","col":"((?:[^"\\]|\\.)*)",""" +
+    ("""\{"name":""" + JsonTok + ""","col":""" + JsonTok + "," +
       """"min":(null|-?\d+(?:\.\d+)?|"(?:[^"\\]|\\.)*"),""" +
       """"max":(null|-?\d+(?:\.\d+)?|"(?:[^"\\]|\\.)*"),"nulls":(\d+)\}""").r
 
@@ -554,13 +537,12 @@ object VersionedTable {
       org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
       out.toString("UTF-8")
     } finally in.close()
-    def un(s: String) = s.replace("\\\"", "\"").replace("\\\\", "\\")
     val lines = text.split('\n').toSeq.filter(_.nonEmpty)
     SidecarStats(
       cols = lines.collect { case StatsLineRe(f, c, mn, mx, nulls) =>
-        (un(f), un(c), ColStats(mn, mx, nulls.toLong)) },
-      rows = lines.collect { case RowsLineRe(f, n) => (un(f), n.toLong) },
-      sets = lines.collect { case SetLineRe(f, c, b) => (un(f), un(c), b) })
+        (Json.unstr(f), Json.unstr(c), ColStats(mn, mx, nulls.toLong)) },
+      rows = lines.collect { case RowsLineRe(f, n) => (Json.unstr(f), n.toLong) },
+      sets = lines.collect { case SetLineRe(f, c, b) => (Json.unstr(f), Json.unstr(c), b) })
   }
 
   private def sidecarOf(fs: FileSystem, root: Path, v: Long): SidecarStats =
@@ -599,17 +581,15 @@ object VersionedTable {
     * REPLAY (crash between sink commit and checkpoint commit) re-offers
     * a batch id the table already holds — the commit must be skipped,
     * not appended twice. */
-  private def lastTxn(fs: FileSystem, root: Path, vs: Seq[Long],
-                      app: String): Option[(Long, Long)] = {
-    val appJson = jstr(app)
+  private def lastTxn(vs: Seq[Long], app: String)(
+      textOf: Long => String): Option[(Long, Long)] =
     vs.sorted.reverse.iterator.map { v =>
-      val text = manifestText(fs, root, v)
-      if (text.contains(s""""txn_app":$appJson"""))
+      val text = textOf(v)
+      if (manifestField(text, "txn_app").contains(app))
         """"txn_batch":(\d+)""".r.findFirstMatchIn(text)
           .map(m => (m.group(1).toLong, v))
       else None
     }.collectFirst { case Some(hit) => hit }
-  }
 
   private def stageAndMove(fs: FileSystem, root: Path, df: DataFrame,
                            format: String, options: Map[String, String]): (String, Seq[(String, Long)]) = {
@@ -681,7 +661,7 @@ object VersionedTable {
     // a WAL replay: skip BEFORE any data is written, return the version
     // that already holds it
     txn.foreach { case (app, batch) =>
-      lastTxn(fs, root, versions(spark, location), app).foreach {
+      lastTxn(versions(spark, location), app)(manifestText(fs, root, _)).foreach {
         case (lastBatch, atV) =>
           if (lastBatch >= batch) {
             graft.log.Log.info("versioned commit: txn replay skipped",
@@ -1488,15 +1468,8 @@ object VersionedTable {
     // (app, batch) — or any later batch of the same app — is skipped
     // before any data is staged (the [[commit]] txn contract)
     txn.foreach { case (app, batch) =>
-      val appJson = jstr(app)
-      val replayedAt = branchVersions(spark, location, branch).sorted.reverse
-        .iterator.map { v =>
-          val text = manifestTextAt(fs, branchManifestPath(root, v, branch))
-          if (text.contains(s""""txn_app":$appJson"""))
-            """"txn_batch":(\d+)""".r.findFirstMatchIn(text)
-              .map(m => (m.group(1).toLong, v))
-          else None
-        }.collectFirst { case Some(hit) => hit }
+      val replayedAt = lastTxn(branchVersions(spark, location, branch), app)(
+        v => manifestTextAt(fs, branchManifestPath(root, v, branch)))
       replayedAt.foreach { case (lastBatch, atV) =>
         if (lastBatch >= batch) {
           graft.log.Log.info("versioned branch commit: txn replay skipped",
@@ -1670,7 +1643,7 @@ object VersionedTable {
     // the uuid-unique name means the CAS always wins.
     val marker = rebaseMarkerPath(root, branch, uuid)
     writeRawManifest(fs, root, marker,
-      s"""{"branch":${jstr(branch)},"tmp":${jstr(tmpBranch)},""" +
+      s"""{"branch":${Json.str(branch)},"tmp":${Json.str(tmpBranch)},""" +
         s""""versions":[$mainLatest,${mainLatest + 1}]}""")
     bvs.foreach(v => fs.delete(branchManifestPath(root, v, branch), false))
     // publish the new lineage under the real name THROUGH the

@@ -7,13 +7,16 @@ import graft.functions.CosineSimilarity
 
 /** Session extensions registering graft's native Catalyst functions, so
   * they're callable from SQL text (the config surface's single SELECT)
-  * and via `functions.call_function`:
+  * and via `functions.call_function`. Every session built by
+  * [[graft.GraftSession]] — `EtlMain` jobs included — sets
+  * `spark.sql.extensions=graft.sql.GraftExtensions`.
   *
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-  *
-  * Currently: `cosine_sim(array, array)` — codegen'd cosine similarity
-  * ([[graft.functions.CosineSimilarity]]).
+  * Registers the 15 functions in `entries` (`cosine_sim`, `minhash_sig`,
+  * `simhash64`, `shingle_hashes`, `shingle_pos_hashes`, `nfc_normalize`,
+  * `greedy_pieces`, `kmv_sketch`, `top_k_by`, `bloom_might_contain`,
+  * `winnow_fps`, `misra_gries`, `misra_gries_weighted`, `hilbert_index`,
+  * `gram_cells`), the [[GuardUnpartitionedWindow]] optimizer rule and the
+  * as-of join planner strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -1,0 +1,60 @@
+package graft.util
+
+/** The one JSON string codec behind every hand-rendered JSON file and line
+  * graft writes: log events, Bench's result line, `oracle_sql.json`,
+  * versioned-table manifests and stats sidecars, materialized-view state,
+  * generation pointers, sink manifests, `_graft_metrics.json` and bookmark
+  * state. */
+object Json {
+
+  /** `s` as a quoted JSON string: `\"`, `\\`, `\n`, `\r`, `\t`, and every
+    * other control character as `\u00XX`. The line and paragraph
+    * separators are escaped too: bookmark state is read back by a YAML
+    * parser, which rejects raw C0/C1 controls and folds raw line breaks. */
+  def str(s: String): String = {
+    val sb = new java.lang.StringBuilder(s.length + 2).append('"')
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\r' => sb.append("\\r")
+      case '\t' => sb.append("\\t")
+      case c if Character.isISOControl(c) || c == '\u2028' || c == '\u2029' =>
+        sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
+  /** The string a quoted JSON token encodes. Accepts every JSON escape,
+    * so files written with `\u000a` for a newline read back unchanged. */
+  def unstr(tok: String): String = {
+    require(tok.length >= 2 && tok.head == '"' && tok.last == '"',
+      s"not a JSON string token: $tok")
+    val sb = new java.lang.StringBuilder(tok.length)
+    var i = 1
+    while (i < tok.length - 1) {
+      val c = tok.charAt(i)
+      if (c != '\\') { sb.append(c); i += 1 }
+      else {
+        require(i + 1 < tok.length - 1, s"dangling escape in JSON string: $tok")
+        tok.charAt(i + 1) match {
+          case 'u' =>
+            require(i + 6 <= tok.length - 1, s"short \\u escape in JSON string: $tok")
+            sb.append(Integer.parseInt(tok.substring(i + 2, i + 6), 16).toChar)
+            i += 6
+          case e =>
+            sb.append(e match {
+              case '"' => '"'; case '\\' => '\\'; case '/' => '/'
+              case 'b' => '\b'; case 'f' => '\f'; case 'n' => '\n'
+              case 'r' => '\r'; case 't' => '\t'
+              case other => throw new IllegalArgumentException(
+                s"bad escape \\$other in JSON string: $tok")
+            })
+            i += 2
+        }
+      }
+    }
+    sb.toString
+  }
+}

@@ -5,17 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (tests fork one JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.warehouse.dir", "/tmp/graft-test-warehouse")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.parquet
-    .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false") // naive ts -> TimestampType (UTC session)
-    .config("spark.sql.extensions", "graft.sql.GraftExtensions")
-    .getOrCreate()
+  val conf: Seq[(String, String)] = GraftSession.localConf(4, Seq(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" -> "/tmp/graft-test-warehouse"))
+
+  lazy val spark: SparkSession = GraftSession.create(conf)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

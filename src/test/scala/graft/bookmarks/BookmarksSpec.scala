@@ -118,4 +118,17 @@ class BookmarksSpec extends SparkSpec {
     store.commit(store.plan("s1", src))
     assert(store.plan("other-source", src).files.size == 1) // independent watermark
   }
+
+  test("file names with control characters survive the state file") {
+    val (store, src, tmp) = setup()
+    // all inside the grace window: every path lands in the seen-set
+    Seq("plain.parquet", "ctl\u0001.parquet", "new\nline.parquet")
+      .foreach(n => writeFile(src, n, Seq(1), 1000000L))
+    val p1 = store.plan("s1", src)
+    assert(p1.files.size == 3)
+    store.commit(p1)
+    val fresh = new BookmarkStore(spark, s"$tmp/state.json")
+    assert(fresh.load()("s1").seen.keySet == p1.files.toSet)
+    assert(fresh.plan("s1", src).files.isEmpty)
+  }
 }

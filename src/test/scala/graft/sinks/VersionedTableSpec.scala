@@ -203,6 +203,19 @@ class VersionedTableSpec extends SparkSpec {
     assert(sv.df.select("v").as[String].collect().toSet == Set("x"))
   }
 
+  test("zone maps: string values holding newline, quote and backslash prune by =") {
+    val loc = tmp("zm4")
+    val odd = "a\nb\"c\\d"
+    VersionedTable.commit(spark, loc,
+      Seq((1, odd), (2, "a\nb")).toDF("k", "v").coalesce(1),
+      "overwrite", statsColumns = Seq("v"))
+    VersionedTable.commit(spark, loc,
+      Seq((3, "zz")).toDF("k", "v").coalesce(1), "append", statsColumns = Seq("v"))
+    val s = VersionedTable.readPruned(spark, loc, Seq(Prune("v", "=", odd)))
+    assert(s.totalFiles == 2 && s.keptFiles == 1)
+    assert(rows(s.df.filter($"v" === odd)) == Set((1, odd)))
+  }
+
   test("zone maps: canonical tokens order timestamps/dates numerically") {
     // Timestamp.toString renders in the writer JVM's default zone (not
     // comparable across writers); the canonical token is epoch micros
@@ -789,6 +802,24 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.vacuumVersions(spark, loc, keepFromVersion = 1L,
       minOrphanAgeMillis = 0L)
     assert(nDataFiles < before)
+    assert(rows(VersionedTable.read(spark, loc)) == Set((1, "a")))
+  }
+
+  test("manifests holding the older \\u000a escape read back unchanged") {
+    val loc = tmp("t6u")
+    val app = "ckpt\nA"
+    VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v"),
+      "append", txn = Some((app, 0L)))
+    // rewrite v1 the way earlier writers escaped a newline
+    val log = java.nio.file.Paths.get(loc, "_graft_log")
+    val m = log.resolve("v00001.json")
+    val text = java.nio.file.Files.readString(m)
+    assert(text.contains("ckpt\\nA"))
+    java.nio.file.Files.writeString(m, text.replace("ckpt\\nA", "ckpt\\u000aA"))
+    java.nio.file.Files.deleteIfExists(log.resolve(".v00001.json.crc"))
+    val vReplay = VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v"),
+      "append", txn = Some((app, 0L)))
+    assert(vReplay == 1L && VersionedTable.versions(spark, loc) == Seq(1L))
     assert(rows(VersionedTable.read(spark, loc)) == Set((1, "a")))
   }
 
