@@ -124,15 +124,16 @@ class BookmarkStore(spark: SparkSession, statePath: String,
     IncrementalPlan(source, planned.keys.toSeq.sorted, maxT, location, planned)
   }
 
-  /** Read the planned files. An empty plan returns an empty frame with
-    * the location's schema (schema-only read, no data scan); if the
-    * location has no data at all, that schema can't exist — fail with a
-    * named error instead of UNABLE_TO_INFER_SCHEMA. */
+  /** Read the planned files (through [[graft.sources.Sources.loadFiles]]:
+    * a parquet plan opens with one driver-side footer read, no Spark
+    * job). An empty plan returns an empty frame with the location's
+    * schema (schema-only read, no data scan); if the location has no
+    * data at all, that schema can't exist — fail with a named error
+    * instead of UNABLE_TO_INFER_SCHEMA. */
   def read(plan: IncrementalPlan, format: String,
            options: Map[String, String] = Map.empty): DataFrame = {
-    val reader = spark.read.format(format).options(options)
-    if (plan.files.nonEmpty) reader.load(plan.files: _*)
-    else try reader.load(plan.location).filter(lit(false))
+    if (plan.files.nonEmpty) graft.sources.Sources.loadFiles(spark, format, options, plan.files)
+    else try spark.read.format(format).options(options).load(plan.location).filter(lit(false))
     catch { case e: org.apache.spark.sql.AnalysisException =>
       throw new graft.config.ConfigError(
         s"incremental source '${plan.source}': location '${plan.location}' has no readable " +

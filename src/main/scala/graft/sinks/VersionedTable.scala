@@ -297,8 +297,21 @@ object VersionedTable {
     }
   }
 
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
+
+  // the sidecar's schema is fixed, so opening it reads no footer
   private def readDv(spark: SparkSession, root: Path, name: String): DataFrame =
-    spark.read.parquet(new Path(logDir(root), name).toString)
+    spark.read.schema(DvSchema).parquet(new Path(logDir(root), name).toString)
+
+  /** The data files `names` of the table at `root`, opened through
+    * [[graft.sources.Sources.loadFiles]]: a parquet schema is pinned
+    * from one driver-side footer read, so opening starts no Spark job.
+    * The only way this file reads table data. */
+  private def loadData(spark: SparkSession, root: Path, names: Seq[String],
+                       format: String, options: Map[String, String]): DataFrame =
+    graft.sources.Sources.loadFiles(spark, format,
+      graft.sources.Sources.mapOptions(options),
+      names.map(n => new Path(dataDir(root), n).toString))
 
   /** `df` (which must carry parquet `_metadata`) with its row
     * positions exposed as `__dv_file` (file basename) / `__dv_pos`
@@ -429,16 +442,15 @@ object VersionedTable {
     (bytes(bucket >> 3) & (1 << (bucket & 7))) != 0
   }
 
-  /** Compute per-file stats for `cols` over exactly `paths` (the NEW
-    * files of one commit). One scan of the new data; the collect is
-    * bounded by n_new_files × n_cols triples. */
-  private def computeStats(spark: SparkSession, paths: Seq[String],
+  /** Compute per-file stats for `cols` over exactly the data files
+    * `names` (the NEW files of one commit). One scan of the new data;
+    * the collect is bounded by n_new_files × n_cols triples. */
+  private def computeStats(spark: SparkSession, root: Path, names: Seq[String],
                            cols: Seq[String], format: String,
                            options: Map[String, String]): SidecarStats = {
     import org.apache.spark.sql.functions._
-    if (paths.isEmpty || cols.isEmpty) return SidecarStats.empty
-    val df = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options)).load(paths: _*)
+    if (names.isEmpty || cols.isEmpty) return SidecarStats.empty
+    val df = loadData(spark, root, names, format, options)
     val missing = cols.filterNot(df.columns.contains)
     if (missing.nonEmpty) throw new graft.config.ConfigError(
       s"versioned commit: stats columns ${missing.mkString(", ")} not in the " +
@@ -639,9 +651,7 @@ object VersionedTable {
         val existing = readManifest(fs, root, lv)
         if (existing.nonEmpty &&
           !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-          val tableCols = spark.read.format(format)
-            .options(graft.sources.Sources.mapOptions(options))
-            .load(new Path(dataDir(root), existing.head).toString)
+          val tableCols = loadData(spark, root, Seq(existing.head), format, options)
             .columns.toSet
           val newCols = df.columns.toSet
           if (tableCols != newCols) {
@@ -678,8 +688,7 @@ object VersionedTable {
     // commit's data, never of the table
     val newStats: SidecarStats =
       if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark,
-        moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+      else computeStats(spark, root, moved.map(_._1),
         statsColumns, format, options)
     var attempt = 0
     while (attempt < maxRetries) {
@@ -727,7 +736,10 @@ object VersionedTable {
 
   /** Snapshot read: exactly the file list of `asOf` (default: latest).
     * The returned frame is pinned to that version — later commits never
-    * change what it reads. */
+    * change what it reads. Opening it starts no Spark job: the manifest
+    * and the deletion-vector reference are read on the driver, and a
+    * parquet schema comes from one footer read
+    * ([[graft.sources.Sources.loadFiles]]). */
   def read(spark: SparkSession, location: String,
            asOf: Option[Long] = None, format: String = "parquet",
            options: Map[String, String] = Map.empty): DataFrame = {
@@ -739,14 +751,11 @@ object VersionedTable {
     val v = asOf.getOrElse(vs.last)
     if (!vs.contains(v)) throw new graft.config.ConfigError(
       s"versioned read: version $v not in committed set ${vs.mkString("[", ",", "]")}")
-    val files = readManifest(fs, root, v)
-      .map(n => new Path(dataDir(root), n).toString)
-    if (files.isEmpty)
+    val names = readManifest(fs, root, v)
+    if (names.isEmpty)
       throw new graft.config.ConfigError(
         s"versioned read: version $v of '$location' references no files")
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(files: _*)
+    val base = loadData(spark, root, names, format, options)
     dvOf(fs, root, v).fold(base) { case (name, _) =>
       applyDv(spark, root, base, name) }
   }
@@ -893,9 +902,7 @@ object VersionedTable {
         s"versioned merge: version $latest of '$location' references no data " +
           "files — conditional MERGE needs the target schema; seed the table " +
           "with a committed snapshot first")
-      spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(new Path(dataDir(root), files.head).toString).schema
+      loadData(spark, root, Seq(files.head), format, options).schema
     }
     // the conditional evaluator projects to the TARGET schema (star
     // actions validate the source carries every target column below),
@@ -923,9 +930,7 @@ object VersionedTable {
     // (one footer read), or v+1 would mix schemas across its files
     if (!conditional && touched.isEmpty && files.nonEmpty &&
       !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-      val tableCols = spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(new Path(dataDir(root), files.head).toString).columns.toSet
+      val tableCols = loadData(spark, root, Seq(files.head), format, options).columns.toSet
       val newCols = arrivals.columns.toSet
       if (tableCols != newCols) {
         val missing = (tableCols -- newCols).toSeq.sorted
@@ -946,9 +951,7 @@ object VersionedTable {
     // zone-miss file's rows from the rewrite); the no-matched-action
     // anti-join reads the probe set alone.
     def liveOf(names: Seq[String]): DataFrame = {
-      val base = spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(names.map(n => new Path(dataDir(root), n).toString): _*)
+      val base = loadData(spark, root, names, format, options)
       latestDv.fold(base) { case (name, _) =>
         applyDv(spark, root, base, name) }
     }
@@ -990,9 +993,7 @@ object VersionedTable {
     val bySourceClaimed: Option[(DataFrame, Long)] =
       if (!bySourceViaDv || untouched.isEmpty) None
       else {
-        val base = spark.read.format(format)
-          .options(graft.sources.Sources.mapOptions(options))
-          .load(untouched.map(n => new Path(dataDir(root), n).toString): _*)
+        val base = loadData(spark, root, untouched, format, options)
         val live = livePositions(spark, root, base, latestDv.map(_._1))
         // zone-miss files cannot hold an arrival key, but carried
         // zone-HIT files (no matched actions) can — those matched rows
@@ -1019,8 +1020,7 @@ object VersionedTable {
       format, options)
     val newStats =
       if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark,
-        moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+      else computeStats(spark, root, moved.map(_._1),
         statsColumns, format, options)
     val carried = sidecarOf(fs, root, latest).filterFiles(untouched.toSet)
     val all = carried ++ newStats
@@ -1120,9 +1120,7 @@ object VersionedTable {
     }
     val files = readManifest(fs, root, latest)
     val dvPrev = dvOf(fs, root, latest)
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(files.map(n => new Path(dataDir(root), n).toString): _*)
+    val base = loadData(spark, root, files, format, options)
     // only LIVE rows can match (a row deleted twice would double-count)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     // PINNED once (localCheckpoint, eager): the matched set feeds both
@@ -1193,9 +1191,7 @@ object VersionedTable {
     }
     val files = readManifest(fs, root, latest)
     val dvPrev = dvOf(fs, root, latest)
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(files.map(n => new Path(dataDir(root), n).toString): _*)
+    val base = loadData(spark, root, files, format, options)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     val dataCols = base.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
     set.keys.foreach { c =>
@@ -1252,8 +1248,7 @@ object VersionedTable {
         .map(readStatsLines(fs, root, _)).getOrElse(SidecarStats.empty)
       val fresh =
         if (tracked.isEmpty) SidecarStats.empty
-        else computeStats(spark,
-          moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+        else computeStats(spark, root, moved.map(_._1),
           tracked, format, options)
       val all = carried ++ fresh
       if (all.isEmpty) None
@@ -1333,9 +1328,7 @@ object VersionedTable {
       files.contains(f) && !knownRows.contains(f)).toSeq
     val countedRows: Map[String, Long] =
       if (uncounted.isEmpty) Map.empty
-      else spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(uncounted.map(n => new Path(dataDir(root), n).toString): _*)
+      else loadData(spark, root, uncounted, format, options)
         .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -1347,9 +1340,7 @@ object VersionedTable {
     }
     if (rewrite.isEmpty) return (latest, 0)
     val carried = files.filterNot(rewrite.toSet)
-    val liveBase = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(rewrite.map(n => new Path(dataDir(root), n).toString): _*)
+    val liveBase = loadData(spark, root, rewrite, format, options)
     val live = applyDv(spark, root, liveBase, dvPrev._1)
     val (commitId, moved) = stageAndMove(fs, root, live, format, options)
     // DV: drop entries for the rewritten files, keep the rest
@@ -1369,8 +1360,7 @@ object VersionedTable {
     val carriedStats = sidecarOf(fs, root, latest).filterFiles(carried.toSet)
     val fresh =
       if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark,
-        moved.map { case (n, _) => new Path(dataDir(root), n).toString },
+      else computeStats(spark, root, moved.map(_._1),
         tracked, format, options)
     val all = carriedStats ++ fresh
     val statsFile =
@@ -1526,9 +1516,7 @@ object VersionedTable {
     val files = filesOfText(text)
     if (files.isEmpty) throw new graft.config.ConfigError(
       s"versioned branch read: v$v@$branch of '$location' references no files")
-    val base = spark.read.format(format)
-      .options(graft.sources.Sources.mapOptions(options))
-      .load(files.map(n => new Path(dataDir(root), n).toString): _*)
+    val base = loadData(spark, root, files, format, options)
     manifestField(text, "dv_file").fold(base)(applyDv(spark, root, base, _))
   }
 
@@ -1807,9 +1795,7 @@ object VersionedTable {
         // table's schema, zero files opened
         read(spark, location, Some(v), format, options).limit(0)
       else {
-        val base = spark.read.format(format)
-          .options(graft.sources.Sources.mapOptions(options))
-          .load(kept.map(n => new Path(dataDir(root), n).toString): _*)
+        val base = loadData(spark, root, kept, format, options)
         // deleted rows stay invisible on the pruned path too (DV entries
         // for pruned-away files anti-join to nothing, harmlessly)
         dvOf(fs, root, v).fold(base) { case (name, _) =>
@@ -1884,9 +1870,7 @@ object VersionedTable {
       if (added.isEmpty)
         read(spark, location, Some(v), format, options).limit(0)
           .withColumn("_commit_version", lit(v))
-      else spark.read.format(format)
-        .options(graft.sources.Sources.mapOptions(options))
-        .load(added.map(n => new Path(dataDir(root), n).toString): _*)
+      else loadData(spark, root, added, format, options)
         .withColumn("_commit_version", lit(v))
     }
     frames.reduceLeft(_.unionByName(_))

@@ -1,6 +1,9 @@
 package graft.sources
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 import graft.config.{ConfigError, SourceSpec}
 
 /** `InputTable => DataFrame` — reference A1/A2/A3
@@ -119,6 +122,69 @@ object Sources {
         .option("dbtable", options.getOrElse("dbtable", qualified))
         .options(options - "dbtable")
         .load()
+  }
+
+  /** Load an explicit data-file list — a versioned table's manifest, a
+    * bookmark plan — with `options` passed to the reader as given.
+    *
+    * Parquet schema inference is a Spark job even for one file. With
+    * `mergeSchema` off, that job reads only the footer of the first file
+    * in path order, and returns the Spark schema stored in it under
+    * `org.apache.spark.sql.parquet.row.metadata`. This loader reads the
+    * same footer on the driver and pins the schema with `.schema(…)`,
+    * so opening the files starts no job until the frame's first action.
+    * The result is the schema inference would return.
+    *
+    * It loads exactly as a plain `load(paths)` (inference included) when
+    * the format is not parquet, when `mergeSchema` is on (the reader
+    * option, else the session's `spark.sql.parquet.mergeSchema`), when a
+    * file-filter option may drop the first file, or when the footer
+    * cannot be read or carries no parseable Spark schema (files written
+    * by other parquet writers). A missing file therefore fails as it
+    * always did, at load. */
+  def loadFiles(spark: SparkSession, format: String,
+                options: Map[String, String], paths: Seq[String]): DataFrame = {
+    val reader = spark.read.format(format).options(options)
+    footerSchema(spark, format, options, paths).fold(reader)(s => reader.schema(s))
+      .load(paths: _*)
+  }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  // reader options that can drop files from an explicit list: the file
+  // inference reads may then not be the smallest path given
+  private val fileFilterOptions = Set("pathglobfilter", "modifiedbefore", "modifiedafter")
+
+  /** The Spark schema in the footer of the first of `paths` (Spark's
+    * pick: the smallest qualified path), or None where [[loadFiles]]
+    * falls back to inference. */
+  private[graft] def footerSchema(spark: SparkSession, format: String,
+                                  options: Map[String, String],
+                                  paths: Seq[String]): Option[StructType] = {
+    val mergeSchema = options.collectFirst {
+      case (k, v) if k.equalsIgnoreCase("mergeSchema") => v
+    }.getOrElse(spark.conf.get("spark.sql.parquet.mergeSchema", "false"))
+    if (format != "parquet" || paths.isEmpty || !mergeSchema.equalsIgnoreCase("false") ||
+        options.keys.exists(k => fileFilterOptions(k.toLowerCase))) None
+    else try {
+      import org.apache.hadoop.fs.Path
+      import org.apache.parquet.hadoop.ParquetFileReader
+      import org.apache.parquet.hadoop.util.HadoopInputFile
+      val conf = org.apache.spark.sql.GraftSqlBridge.newHadoopConf(spark, options)
+      val first = paths.map { p =>
+        val path = new Path(p)
+        path.getFileSystem(conf).makeQualified(path)
+      }.minBy(_.toString)
+      val readOptions = org.apache.parquet.HadoopReadOptions.builder(conf, first)
+        .withMetadataFilter(
+          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .build()
+      val in = ParquetFileReader.open(
+        HadoopInputFile.fromStatus(first.getFileSystem(conf).getFileStatus(first), conf),
+        readOptions)
+      val kv = try in.getFooter.getFileMetaData.getKeyValueMetaData finally in.close()
+      Option(kv.get(SparkSchemaKey)).map(DataType.fromJson).collect { case s: StructType => s }
+    } catch { case NonFatal(_) => None }
   }
 
   /** File scan with MALFORMED-ROW quarantine (beyond-reference; the

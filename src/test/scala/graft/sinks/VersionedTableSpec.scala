@@ -1256,4 +1256,164 @@ class VersionedTableSpec extends SparkSpec {
     assert(live.select("k").distinct().count() == live.count(),
       "a nondeterministic delete must not duplicate surviving rows")
   }
+
+  /** `body`'s result and the Spark jobs it started (jobs tagged with a
+    * fresh job group, so no other thread's job is counted; the listener
+    * bus is drained before the count is read). */
+  private def jobsStarted[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet(): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsStarted")
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def dataFiles(loc: String): Seq[String] =
+    new java.io.File(s"$loc/data").listFiles().toSeq
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).sorted
+
+  test("opening a version starts no Spark job: read with a DV, asOf, readPruned, bookmarks") {
+    val loc = tmp("nojob")
+    VersionedTable.commit(spark, loc, Seq((1, "a"), (2, "b")).toDF("k", "v"),
+      "overwrite", statsColumns = Seq("k"))
+    VersionedTable.commit(spark, loc, Seq((3, "c")).toDF("k", "v"), "append",
+      statsColumns = Seq("k"))
+    VersionedTable.deleteWhere(spark, loc, "k = 2") // v3 carries a DV
+    val (latest, j1) = jobsStarted(VersionedTable.read(spark, loc))
+    val (asOf, j2) = jobsStarted(VersionedTable.read(spark, loc, asOf = Some(1L)))
+    val (pruned, j3) = jobsStarted(VersionedTable.readPruned(spark, loc,
+      Seq(VersionedTable.Prune("k", ">=", 3))))
+    val bmDir = java.nio.file.Files.createTempDirectory("nojob-bm").toString
+    Seq(7, 8).toDF("n").write.parquet(s"$bmDir/src")
+    val store = new graft.bookmarks.BookmarkStore(spark, s"$bmDir/state.json")
+    val plan = store.plan("s", s"$bmDir/src")
+    val (bm, j4) = jobsStarted(store.read(plan, "parquet"))
+    assert((j1, j2, j3, j4) == ((0, 0, 0, 0)))
+    // the pinned frames read what they always read
+    assert(rows(latest) == Set((1, "a"), (3, "c")))
+    assert(rows(asOf) == Set((1, "a"), (2, "b")))
+    assert(pruned.keptFiles == 1 && rows(pruned.df) == Set((3, "c")))
+    assert(bm.as[Int].collect().sorted.toSeq == Seq(7, 8))
+    // the counter sees jobs: an action counts
+    assert(jobsStarted(latest.count())._2 > 0)
+  }
+
+  test("the pinned schema equals Spark's inferred schema, nullability included") {
+    import org.apache.spark.sql.functions._
+    import graft.sources.Sources
+    val loc = tmp("pin")
+    val df = spark.range(3).select(
+      col("id"),
+      (col("id") / 7).cast("decimal(38,10)").as("dec"),
+      timestamp_seconds(col("id") * 86400).as("ts"),
+      date_add(lit("2024-02-28").cast("date"), col("id").cast("int")).as("d"),
+      col("id").cast("string").cast("binary").as("bin"),
+      array(struct(col("id").as("a"), lit("x").as("b"))).as("arr"),
+      map(lit("k"), col("id")).as("m"),
+      struct(col("id").as("x"),
+        struct(lit(1.5).as("y"), lit(null).cast("string").as("z")).as("inner")).as("nested"),
+      lit(7).as("lit_not_null"))
+    VersionedTable.commit(spark, loc, df, "overwrite")
+    val files = dataFiles(loc)
+    val inferred = spark.read.parquet(files: _*).schema
+    assert(Sources.footerSchema(spark, "parquet", Map.empty, files).isDefined)
+    assert(Sources.loadFiles(spark, "parquet", Map.empty, files).schema == inferred)
+    assert(VersionedTable.read(spark, loc).schema == inferred)
+    assert(Seq("dec", "ts", "d", "bin", "arr", "m", "nested")
+      .forall(c => inferred.fieldNames.contains(c)))
+  }
+
+  test("pinned schema: files that disagree take Spark's first-file pick; mergeSchema merges") {
+    val loc = tmp("pin-drift")
+    val ms = Map("mergeSchema" -> "true")
+    VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v").coalesce(1), "overwrite")
+    VersionedTable.commit(spark, loc,
+      Seq((2, "b", 7L)).toDF("k", "v", "extra").coalesce(1), "append", options = ms)
+    val files = dataFiles(loc)
+    assert(files.size == 2)
+    assert(spark.read.parquet(files.head).schema != spark.read.parquet(files.last).schema)
+    // whichever order the list names them in, Spark infers from the
+    // smallest path; the loader must pick the same file
+    Seq(files, files.reverse).foreach { fs =>
+      assert(graft.sources.Sources.loadFiles(spark, "parquet", Map.empty, fs).schema ==
+        spark.read.parquet(fs: _*).schema)
+    }
+    assert(VersionedTable.read(spark, loc).schema == spark.read.parquet(files: _*).schema)
+    // mergeSchema (option or session conf) and file-filter options take
+    // the inference path
+    assert(graft.sources.Sources.footerSchema(spark, "parquet", ms, files).isEmpty)
+    assert(graft.sources.Sources.footerSchema(spark, "parquet",
+      Map("pathGlobFilter" -> "*.parquet"), files).isEmpty)
+    assert(VersionedTable.read(spark, loc, options = ms).schema ==
+      spark.read.options(ms).parquet(files: _*).schema)
+    spark.conf.set("spark.sql.parquet.mergeSchema", "true")
+    try assert(graft.sources.Sources.footerSchema(spark, "parquet", Map.empty, files).isEmpty)
+    finally spark.conf.unset("spark.sql.parquet.mergeSchema")
+  }
+
+  test("pinned schema: a footer without Spark's schema key falls back to inference") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val dir = java.nio.file.Files.createTempDirectory("pin-mr").toString
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 id; optional binary name (UTF8); }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(s"$dir/mr.parquet")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(path, conf))
+      .withType(schema).withConf(conf).build()
+    val groups = new SimpleGroupFactory(schema)
+    try Seq(1L -> "one", 2L -> "two").foreach { case (i, n) =>
+      w.write(groups.newGroup().append("id", i).append("name", n)) }
+    finally w.close()
+    val files = Seq(path.toString)
+    assert(graft.sources.Sources.footerSchema(spark, "parquet", Map.empty, files).isEmpty)
+    val df = graft.sources.Sources.loadFiles(spark, "parquet", Map.empty, files)
+    assert(df.schema == spark.read.parquet(files: _*).schema)
+    assert(df.as[(Long, String)].collect().toSet == Set(1L -> "one", 2L -> "two"))
+  }
+
+  test("pinned schema: a manifest naming a missing file still fails loudly") {
+    val loc = tmp("pin-missing")
+    VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v").coalesce(1), "overwrite")
+    VersionedTable.commit(spark, loc, Seq((2, "b")).toDF("k", "v").coalesce(1), "append")
+    // either file missing: the one the footer is read from, or another
+    dataFiles(loc).foreach { f =>
+      val aside = java.nio.file.Paths.get(s"$f.aside")
+      java.nio.file.Files.move(java.nio.file.Paths.get(f), aside)
+      try {
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          VersionedTable.read(spark, loc))
+        assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      } finally java.nio.file.Files.move(aside, java.nio.file.Paths.get(f))
+    }
+    assert(rows(VersionedTable.read(spark, loc)) == Set((1, "a"), (2, "b")))
+  }
+
+  test("only readDv and the loader open data files in VersionedTable and BookmarkStore") {
+    // a DataFrameReader chain, however it is spelled across lines
+    val Read = """\.\s*read\s*\.[^\n]*""".r
+    def reads(path: String): Seq[String] =
+      Read.findAllIn(graft.SourceCode.of(path)).toSeq
+    // the DV sidecar has a fixed schema; an empty bookmark plan reads
+    // only the location's schema, never data
+    assert(reads("src/main/scala/graft/sinks/VersionedTable.scala") ==
+      Seq(".read.schema(DvSchema).parquet(new Path(logDir(root), name).toString)"))
+    assert(reads("src/main/scala/graft/bookmarks/Bookmarks.scala") ==
+      Seq(".read.format(format).options(options).load(plan.location).filter(lit(false))"))
+    // the scan sees a chain split over lines, and skips comments
+    assert(Read.findAllIn(graft.SourceCode.withoutComments(
+      "// spark.read.load(x)\nspark\n  .read\n  .parquet(p)")).size == 1)
+  }
 }
