@@ -49,11 +49,13 @@ object MaterializedView {
         org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
         out.toString("UTF-8")
       } finally in.close()
-      for {
-        fp <- """"fingerprint":("(?:[^"\\]|\\.)*")""".r.findFirstMatchIn(text)
-          .map(m => Json.unstr(m.group(1)))
-        v <- """"mv_version":(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
-      } yield (fp, v)
+      // the state is overwritten in place: a torn record reads as none
+      // (the next refresh recomputes and rewrites it)
+      try {
+        val n = Json.read(text)
+        for (fp <- Json.string(n, "fingerprint"); v <- Json.long(n, "mv_version"))
+          yield (fp, v)
+      } catch { case _: com.fasterxml.jackson.core.JsonProcessingException => None }
     }
   }
 

@@ -166,8 +166,7 @@ object Sinks {
       val in = fs.open(p)
       val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                  finally in.close()
-      """"gen"\s*:\s*("(?:[^"\\]|\\.)*")""".r.findFirstMatchIn(text)
-        .map(m => Json.unstr(m.group(1)))
+      Json.string(Json.read(text), "gen")
     } catch { case _: java.io.FileNotFoundException => None }
 
   /** Latest published (version, generation-dir name), if any. A purge

@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.util.Json
+import scala.jdk.CollectionConverters._
 
 /** Versioned-manifest table — the minimal TABLE FORMAT the A15/A16
   * contracts were missing (SURVEY "what's missing" #2): multi-writer
@@ -16,6 +17,8 @@ import graft.util.Json
   *   <table>/data/<commit-uuid>-part-*.parquet   (append-only namespace)
   *   <table>/_graft_log/v00001.json              (one manifest per version)
   * }}}
+  * A manifest's fields are listed once, on [[Manifest]] — the one record
+  * that writes and reads the log.
   *
   * Protocol:
   *  - WRITE: stage the frame to a scratch dir, move the part files into
@@ -138,21 +141,18 @@ object VersionedTable {
     var acted = false
     markers.foreach { mn =>
       try {
-        val text = manifestTextAt(fs, new Path(logDir(root), mn))
-        val tmpName = manifestField(text, "tmp")
-        val vs = """"versions":\[([0-9, ]+)\]""".r.findFirstMatchIn(text)
-          .map(_.group(1).split(',').map(_.trim.toLong).toSet)
-        for (tmp <- tmpName; versions <- vs) {
+        val marker = Json.read(readText(fs, new Path(logDir(root), mn)))
+        val vs = Option(marker.get("versions")).filter(_.isArray)
+          .map(_.elements.asScala.map(_.longValue).toSet)
+        for (tmp <- Json.string(marker, "tmp"); versions <- vs) {
           versions.toSeq.sorted.foreach { v =>
             val tmpPath = branchManifestPath(root, v, tmp)
             if (fs.exists(tmpPath)) {
-              val content = manifestTextAt(fs, tmpPath)
+              val content = manifestAt(fs, tmpPath)
               // anything at this version under the real name is the old
               // lineage (possibly version-colliding) — the marker decided
               fs.delete(branchManifestPath(root, v, branch), false)
-              coordinatorImpl.publish(fs, logDir(root),
-                branchManifestPath(root, v, branch),
-                content.getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+              publish(fs, root, branchManifestPath(root, v, branch), content.render): Unit
               fs.delete(tmpPath, false)
             } // temp gone = already published (temp deletion follows publish)
           }
@@ -214,38 +214,81 @@ object VersionedTable {
     }
   }
 
-  // one JSON string token, quotes included: the group Json.unstr decodes
-  private final val JsonTok = """("(?:[^"\\]|\\.)*")"""
+  /** One log entry: the only way the versioned-table log is written
+    * ([[render]]) and read ([[Manifest.parse]]). On disk it is one flat
+    * JSON object, fields in this order (strings through [[Json.str]]):
+    *  - `version`: the version number (a branch fork keeps its base's);
+    *  - `ts`: the commit wall clock, epoch millis — what as-of-TIMESTAMP
+    *    reads resolve against (informational ordering only; the version
+    *    number is the truth). Absent on pre-upgrade manifests;
+    *  - `mode`: the commit kind (overwrite, append, merge, delete,
+    *    update, compact_deletes, branch, publish, restore; read as
+    *    overwrite when absent);
+    *  - `txn_app`, `txn_batch`: the exactly-once streaming txn, if any;
+    *  - `stats_file`: the zone-map sidecar under `_graft_log/`, if any;
+    *  - `dv_file`, `dv_rows`: the deletion-vector sidecar under
+    *    `_graft_log/` and its row count, if any;
+    *  - `n_files`, then `files`: the data files under `data/`, each
+    *    `{"name","bytes"}`, in name order. Data file names are
+    *    commit-unique in an append-only namespace, so a carried file's
+    *    recorded bytes are what a stat of it returns. */
+  private[sinks] final case class Manifest(version: Long, ts: Option[Long],
+      mode: String, txn: Option[(String, Long)], statsFile: Option[String],
+      dv: Option[(String, Long)], files: Seq[(String, Long)]) {
+    def names: Seq[String] = files.map(_._1)
 
-  /** Publish pre-rendered manifest text at `p` via the same temp-file +
-    * rename-if-absent pattern as [[writeManifestCas]] — a crashed writer
-    * can never expose a torn manifest. Throws if `p` already exists. */
-  private def writeRawManifest(fs: FileSystem, root: Path, p: Path,
-                               text: String): Unit =
-    if (!coordinatorImpl.publish(fs, logDir(root), p,
-      text.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    def render: String =
+      s"""{"version":$version,""" + ts.fold("")(t => s""""ts":$t,""") +
+        s""""mode":${Json.str(mode)},""" +
+        txn.fold("") { case (app, batch) =>
+          s""""txn_app":${Json.str(app)},"txn_batch":$batch,""" } +
+        statsFile.fold("")(sf => s""""stats_file":${Json.str(sf)},""") +
+        dv.fold("") { case (name, rows) =>
+          s""""dv_file":${Json.str(name)},"dv_rows":$rows,""" } +
+        s""""n_files":${files.size},"files":""" +
+        files.map { case (n, b) => s"""{"name":${Json.str(n)},"bytes":$b}""" }
+          .mkString("[", ",", "]") + "}"
+  }
+
+  private[sinks] object Manifest {
+    /** A new commit's manifest, stamped with the wall clock. */
+    def next(version: Long, mode: String, files: Seq[(String, Long)],
+             txn: Option[(String, Long)] = None, statsFile: Option[String] = None,
+             dv: Option[(String, Long)] = None): Manifest =
+      Manifest(version, Some(System.currentTimeMillis()), mode, txn, statsFile,
+        dv, files.sortBy(_._1))
+
+    def parse(text: String): Manifest = {
+      val n = Json.read(text)
+      def num(k: String) = Json.long(n, k)
+      Manifest(
+        version = num("version").getOrElse(
+          throw new java.io.IOException(s"not a versioned-table manifest: ${text.take(200)}")),
+        ts = num("ts"),
+        mode = Json.string(n, "mode").getOrElse("overwrite"),
+        txn = for (app <- Json.string(n, "txn_app"); b <- num("txn_batch")) yield (app, b),
+        statsFile = Json.string(n, "stats_file"),
+        dv = Json.string(n, "dv_file").map((_, num("dv_rows").getOrElse(0L))),
+        files = Option(n.get("files")).toSeq.flatMap(_.elements.asScala).flatMap { f =>
+          Json.string(f, "name").map((_, Json.long(f, "bytes").getOrElse(0L))) })
+    }
+  }
+
+  /** Publish `text` at `p` through the commit coordinator — a crashed
+    * writer can never expose a torn file. False: `p` already exists. */
+  private def publish(fs: FileSystem, root: Path, p: Path, text: String): Boolean =
+    coordinatorImpl.publish(fs, logDir(root), p,
+      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+
+  /** [[publish]] where a lost race cannot happen (a uuid-unique name). */
+  private def publishNew(fs: FileSystem, root: Path, p: Path, text: String): Unit =
+    if (!publish(fs, root, p, text))
       throw new java.io.IOException(s"manifest '$p' already exists")
 
-  private def writeManifestCas(fs: FileSystem, root: Path, v: Long,
-                               mode: String, files: Seq[(String, Long)],
-                               txn: Option[(String, Long)],
-                               statsFile: Option[String] = None,
-                               dv: Option[(String, Long)] = None,
-                               branch: Option[String] = None): Boolean = {
-    val fileJson = files.sortBy(_._1)
-      .map { case (n, b) => s"""{"name":${Json.str(n)},"bytes":$b}""" }
-      .mkString("[", ",", "]")
-    val txnJson = txn.map { case (app, batch) =>
-      s""""txn_app":${Json.str(app)},"txn_batch":$batch,""" }.getOrElse("")
-    val statsJson = statsFile.map(sf => s""""stats_file":${Json.str(sf)},""").getOrElse("") +
-      dv.map { case (name, rows) =>
-        s""""dv_file":${Json.str(name)},"dv_rows":$rows,""" }.getOrElse("")
-    // commit wall clock: what as-of-TIMESTAMP reads resolve against
-    // (informational ordering only — the version number is the truth)
-    val json = s"""{"version":$v,"ts":${System.currentTimeMillis()},""" +
-      s""""mode":${Json.str(mode)},$txnJson$statsJson""" +
-      s""""n_files":${files.size},"files":$fileJson}"""
-    val p = branch.fold(manifestPath(root, v))(branchManifestPath(root, v, _))
+  /** CAS-publish `m` as its version on main (or on `branch`). False: a
+    * concurrent writer won the version. */
+  private def writeManifestCas(fs: FileSystem, root: Path, m: Manifest,
+                               branch: Option[String] = None): Boolean =
     // The publish primitive is PLUGGABLE ([[CommitCoordinator]]): the
     // default is write-complete-content-then-rename-if-absent
     // (FileContext + Options.Rename.NONE — the Delta HDFSLogStore
@@ -256,11 +299,11 @@ object VersionedTable {
     // crashed writer can never expose a torn manifest that readers
     // would treat as a committed version (and whose empty file list the
     // next append would silently adopt as its base).
-    coordinatorImpl.publish(fs, logDir(root), p,
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
+    publish(fs, root,
+      branch.fold(manifestPath(root, m.version))(branchManifestPath(root, m.version, _)),
+      m.render)
 
-  private def manifestTextAt(fs: FileSystem, p: Path): String = {
+  private def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
     try {
       val out = new java.io.ByteArrayOutputStream()
@@ -269,34 +312,22 @@ object VersionedTable {
     } finally in.close()
   }
 
-  private def manifestText(fs: FileSystem, root: Path, v: Long): String =
-    manifestTextAt(fs, manifestPath(root, v))
+  private def manifestAt(fs: FileSystem, p: Path): Manifest =
+    Manifest.parse(readText(fs, p))
 
-  // the manifest is machine-written flat JSON; extract the file names
-  private def filesOfText(text: String): Seq[String] =
-    ("\"name\":" + JsonTok).r.findAllMatchIn(text)
-      .map(m => Json.unstr(m.group(1))).toSeq
+  private def manifestOf(fs: FileSystem, root: Path, v: Long): Manifest =
+    manifestAt(fs, manifestPath(root, v))
 
-  private def readManifest(fs: FileSystem, root: Path, v: Long): Seq[String] =
-    filesOfText(manifestText(fs, root, v))
-
-  private def manifestField(text: String, key: String): Option[String] =
-    ("\"" + key + "\":" + JsonTok).r.findFirstMatchIn(text)
-      .map(m => Json.unstr(m.group(1)))
+  /** Main manifests by version, each opened at most once per operation. */
+  private def manifestCache(fs: FileSystem, root: Path): Long => Manifest = {
+    val opened = scala.collection.mutable.Map.empty[Long, Manifest]
+    v => opened.getOrElseUpdate(v, manifestOf(fs, root, v))
+  }
 
   // ------------------------------------------------------- deletion vectors
 
-  /** The version's deletion-vector sidecar (a parquet DIRECTORY under
-    * `_graft_log/`, columns `file: string, pos: long`) and its total
-    * row count — absent for versions with no deletes. */
-  private def dvOf(fs: FileSystem, root: Path, v: Long): Option[(String, Long)] = {
-    val text = manifestText(fs, root, v)
-    manifestField(text, "dv_file").map { name =>
-      (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
-  }
-
+  /** A deletion-vector sidecar ([[Manifest]] `dv_file`) is a parquet
+    * DIRECTORY under `_graft_log/` of (data file name, row position). */
   private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL("file STRING, pos BIGINT")
 
   // the sidecar's schema is fixed, so opening it reads no footer
@@ -342,6 +373,24 @@ object VersionedTable {
     import org.apache.spark.sql.functions.col
     val outCols = df.columns.toSeq
     livePositions(spark, root, df, Some(dvName)).select(outCols.map(col): _*)
+  }
+
+  /** The live rows of the data files `names`: `dv`'s rows anti-joined away. */
+  private def liveRows(spark: SparkSession, root: Path, names: Seq[String],
+                       dv: Option[(String, Long)], format: String,
+                       options: Map[String, String]): DataFrame = {
+    val base = loadData(spark, root, names, format, options)
+    dv.fold(base) { case (name, _) => applyDv(spark, root, base, name) }
+  }
+
+  /** The snapshot `m` of the main table at `location`: exactly its files,
+    * minus its deletion vector. */
+  private def snapshot(spark: SparkSession, root: Path, location: String,
+                       m: Manifest, format: String,
+                       options: Map[String, String]): DataFrame = {
+    if (m.files.isEmpty) throw new graft.config.ConfigError(
+      s"versioned read: version ${m.version} of '$location' references no files")
+    liveRows(spark, root, m.names, m.dv, format, options)
   }
 
   // ---------------------------------------------------------------- stats
@@ -501,6 +550,9 @@ object VersionedTable {
       })
   }
 
+  // one JSON string token, quotes included: the group Json.unstr decodes
+  private final val JsonTok = """("(?:[^"\\]|\\.)*")"""
+
   private def statsLine(file: String, col: String, s: ColStats): String =
     s"""{"name":${Json.str(file)},"col":${Json.str(col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}}"""
 
@@ -543,13 +595,7 @@ object VersionedTable {
                              name: String): SidecarStats = {
     val p = new Path(logDir(root), name)
     if (!fs.exists(p)) return SidecarStats.empty // conservative: prune nothing
-    val in = fs.open(p)
-    val text = try {
-      val out = new java.io.ByteArrayOutputStream()
-      org.apache.hadoop.io.IOUtils.copyBytes(in, out, 8192, false)
-      out.toString("UTF-8")
-    } finally in.close()
-    val lines = text.split('\n').toSeq.filter(_.nonEmpty)
+    val lines = readText(fs, p).split('\n').toSeq.filter(_.nonEmpty)
     SidecarStats(
       cols = lines.collect { case StatsLineRe(f, c, mn, mx, nulls) =>
         (Json.unstr(f), Json.unstr(c), ColStats(mn, mx, nulls.toLong)) },
@@ -557,36 +603,56 @@ object VersionedTable {
       sets = lines.collect { case SetLineRe(f, c, b) => (Json.unstr(f), Json.unstr(c), b) })
   }
 
-  private def sidecarOf(fs: FileSystem, root: Path, v: Long): SidecarStats =
-    manifestField(manifestText(fs, root, v), "stats_file") match {
-      case None => SidecarStats.empty
-      case Some(name) => readStatsLines(fs, root, name)
+  /** The stats sidecar `m` references (empty when it has none). */
+  private def sidecarOf(fs: FileSystem, root: Path, m: Manifest): SidecarStats =
+    m.statsFile.fold(SidecarStats.empty)(readStatsLines(fs, root, _))
+
+  private def sidecarAt(spark: SparkSession, location: String, v: Long): SidecarStats = {
+    val root = new Path(location)
+    val fs = fsFor(spark, root)
+    sidecarOf(fs, root, manifestOf(fs, root, v))
+  }
+
+  /** A sidecar's zone maps: file -> column -> stats. */
+  private def statsByFile(sc: SidecarStats): Map[String, Map[String, ColStats]] =
+    sc.cols.groupBy(_._1).map { case (f, xs) =>
+      (f, xs.map { case (_, c, s) => (c, s) }.toMap) }
+
+  /** The columns a sidecar tracks zone maps for. */
+  private def trackedColumns(sc: SidecarStats): Seq[String] =
+    sc.cols.map(_._2).distinct.sorted
+
+  /** Write `all` as the commit's sidecar `stats-<commitId>.jsonl` — BEFORE
+    * the CAS (commit-unique name: a rebase retry overwrites it, a loser
+    * leaves a vacuumable orphan, never a dangling reference). None when
+    * there is nothing to record. */
+  private def writeSidecar(fs: FileSystem, root: Path, commitId: String,
+                           all: SidecarStats): Option[String] =
+    if (all.isEmpty) None
+    else {
+      val name = s"stats-$commitId.jsonl"
+      writeStatsFile(fs, root, name, renderSidecar(all))
+      Some(name)
     }
 
   /** Per-file stats of version `v`: file -> column -> stats. Empty map if
     * the version carries no stats (readers then prune nothing). */
   def fileStats(spark: SparkSession, location: String,
                 v: Long): Map[String, Map[String, ColStats]] =
-    sidecarOf(fsFor(spark, new Path(location)), new Path(location), v)
-      .cols.groupBy(_._1).map { case (f, xs) =>
-        (f, xs.map { case (_, c, s) => (c, s) }.toMap) }
+    statsByFile(sidecarAt(spark, location, v))
 
   /** Per-file row counts of version `v` (recorded when the commit ran
     * with statsColumns). Empty if the version carries no sidecar. */
   def fileRows(spark: SparkSession, location: String,
                v: Long): Map[String, Long] =
-    sidecarOf(fsFor(spark, new Path(location)), new Path(location), v)
-      .rows.toMap
+    sidecarAt(spark, location, v).rows.toMap
 
   /** The columns the table's LATEST version tracks zone maps for —
     * what a maintenance rewrite (compact / cluster) must recompute so
     * its overwrite commit doesn't silently drop the pruning tier. */
-  def trackedStatsColumns(spark: SparkSession, location: String): Seq[String] = {
-    val vs = versions(spark, location)
-    if (vs.isEmpty) Nil
-    else sidecarOf(fsFor(spark, new Path(location)), new Path(location), vs.last)
-      .cols.map(_._2).distinct.sorted
-  }
+  def trackedStatsColumns(spark: SparkSession, location: String): Seq[String] =
+    versions(spark, location).lastOption
+      .fold(Seq.empty[String])(v => trackedColumns(sidecarAt(spark, location, v)))
 
   /** The highest batch id `app` has committed (and its version), scanning
     * newest-first. The streaming exactly-once check: a foreachBatch
@@ -594,14 +660,34 @@ object VersionedTable {
     * a batch id the table already holds — the commit must be skipped,
     * not appended twice. */
   private def lastTxn(vs: Seq[Long], app: String)(
-      textOf: Long => String): Option[(Long, Long)] =
-    vs.sorted.reverse.iterator.map { v =>
-      val text = textOf(v)
-      if (manifestField(text, "txn_app").contains(app))
-        """"txn_batch":(\d+)""".r.findFirstMatchIn(text)
-          .map(m => (m.group(1).toLong, v))
-      else None
-    }.collectFirst { case Some(hit) => hit }
+      manifest: Long => Manifest): Option[(Long, Long)] =
+    vs.sorted.reverse.iterator.map(v => (v, manifest(v).txn)).collectFirst {
+      case (v, Some((a, batch))) if a == app => (batch, v) }
+
+  /** Schema-drift guard for a write whose new files join `head`'s: the
+    * snapshot read loads an explicit file list, so a drifted column set
+    * would surface only at read time (missing/extra columns depending on
+    * which file the reader samples first). Evolution is opt-in: commit
+    * AND read with mergeSchema=true. One footer read — metadata, not
+    * data. `what` names the write in the message. */
+  private def checkDrift(spark: SparkSession, root: Path, location: String,
+                         what: String, head: Manifest, columns: Seq[String],
+                         format: String, options: Map[String, String]): Unit =
+    if (head.files.nonEmpty &&
+      !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
+      val tableCols = loadData(spark, root, head.names.take(1), format, options)
+        .columns.toSet
+      val newCols = columns.toSet
+      if (tableCols != newCols) {
+        val missing = (tableCols -- newCols).toSeq.sorted
+        val added = (newCols -- tableCols).toSeq.sorted
+        throw new graft.config.ConfigError(
+          s"versioned $what schema drift at '$location' v${head.version} — " +
+            (if (missing.nonEmpty) s"missing: ${missing.mkString(", ")}; " else "") +
+            (if (added.nonEmpty) s"added: ${added.mkString(", ")}; " else "") +
+            "pass mergeSchema=true in options (commit AND read) to evolve")
+      }
+    }
 
   private def stageAndMove(fs: FileSystem, root: Path, df: DataFrame,
                            format: String, options: Map[String, String]): (String, Seq[(String, Long)]) = {
@@ -641,37 +727,22 @@ object VersionedTable {
     val fs = fsFor(spark, root)
     fs.mkdirs(dataDir(root))
     fs.mkdirs(logDir(root))
-    // appends must match the table's column set: the snapshot read loads
-    // an explicit file list, so a silently drifted schema would surface
-    // only at read time (missing/extra columns depending on which file
-    // the reader samples first). Evolution is opt-in: commit AND read
-    // with mergeSchema=true (one footer read — metadata, not data).
-    if (mode == "append") {
-      versions(spark, location).lastOption.foreach { lv =>
-        val existing = readManifest(fs, root, lv)
-        if (existing.nonEmpty &&
-          !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-          val tableCols = loadData(spark, root, Seq(existing.head), format, options)
-            .columns.toSet
-          val newCols = df.columns.toSet
-          if (tableCols != newCols) {
-            val missing = (tableCols -- newCols).toSeq.sorted
-            val added = (newCols -- tableCols).toSeq.sorted
-            throw new graft.config.ConfigError(
-              s"versioned commit: append schema drift at '$location' v$lv — " +
-                (if (missing.nonEmpty) s"missing: ${missing.mkString(", ")}; " else "") +
-                (if (added.nonEmpty) s"added: ${added.mkString(", ")}; " else "") +
-                "pass mergeSchema=true in options (commit AND read) to evolve")
-          }
-        }
-      }
+    // every manifest this commit consults is opened once: the head the
+    // drift check and the txn scan read is the append base unless a
+    // concurrent commit moved it
+    val manifest = manifestCache(fs, root)
+    lazy val listed = versions(spark, location)
+    // appends must match the table's column set
+    if (mode == "append") listed.lastOption.foreach { lv =>
+      checkDrift(spark, root, location, "commit: append", manifest(lv),
+        df.columns.toSeq, format, options)
     }
     // exactly-once for streaming foreachBatch: if this (app, batch) — or
     // a later batch of the same app — is already committed, the offer is
     // a WAL replay: skip BEFORE any data is written, return the version
     // that already holds it
     txn.foreach { case (app, batch) =>
-      lastTxn(versions(spark, location), app)(manifestText(fs, root, _)).foreach {
+      lastTxn(listed, app)(manifest).foreach {
         case (lastBatch, atV) =>
           if (lastBatch >= batch) {
             graft.log.Log.info("versioned commit: txn replay skipped",
@@ -698,36 +769,19 @@ object VersionedTable {
           s"versioned commit: serializable conflict at '$location' — snapshot " +
             s"was v$exp, latest is v${latest.getOrElse(0L)}; re-read and re-merge")
       }
-      val base: Seq[(String, Long)] =
-        if (mode == "append")
-          latest.toSeq.flatMap(v => readManifest(fs, root, v)).map { n =>
-            (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-          }
-        else Seq.empty
+      // an append carries the base's files, their stats by name (so one
+      // sidecar per manifest covers every file it references) and its
+      // deletion vector verbatim (every base file is kept, so the DV
+      // stays valid — zero rewrite); an overwrite replaces the file set
+      // and clears both
+      val head = if (mode == "append") latest.map(manifest) else None
       val v = latest.getOrElse(0L) + 1
-      // an append carries the base files' stats forward by name, so one
-      // sidecar per manifest covers every file it references; written
-      // BEFORE the CAS (commit-unique name — losers leave a vacuumable
-      // orphan, never a dangling reference)
-      val statsFile: Option[String] = {
-        val baseStats =
-          if (mode == "append" && latest.nonEmpty)
-            sidecarOf(fs, root, latest.get).filterFiles(base.map(_._1).toSet)
-          else SidecarStats.empty
-        val all = baseStats ++ newStats
-        if (all.isEmpty) None
-        else {
-          val name = s"stats-$commitId.jsonl"
-          writeStatsFile(fs, root, name, renderSidecar(all))
-          Some(name)
-        }
-      }
-      // an append keeps every base file, so the base deletion vector
-      // stays valid verbatim — carry the sidecar BY NAME (zero rewrite);
-      // an overwrite replaces the file set and clears it
-      val dvCarry: Option[(String, Long)] =
-        if (mode == "append") latest.flatMap(dvOf(fs, root, _)) else None
-      if (writeManifestCas(fs, root, v, mode, base ++ moved, txn, statsFile, dvCarry)) return v
+      val baseStats = head.fold(SidecarStats.empty)(h =>
+        sidecarOf(fs, root, h).filterFiles(h.names.toSet))
+      val statsFile = writeSidecar(fs, root, commitId, baseStats ++ newStats)
+      if (writeManifestCas(fs, root, Manifest.next(v, mode,
+        head.fold(Seq.empty[(String, Long)])(_.files) ++ moved, txn, statsFile,
+        head.flatMap(_.dv)))) return v
       attempt += 1 // lost the race: re-read latest and rebase
     }
     throw new java.io.IOException(
@@ -751,13 +805,7 @@ object VersionedTable {
     val v = asOf.getOrElse(vs.last)
     if (!vs.contains(v)) throw new graft.config.ConfigError(
       s"versioned read: version $v not in committed set ${vs.mkString("[", ",", "]")}")
-    val names = readManifest(fs, root, v)
-    if (names.isEmpty)
-      throw new graft.config.ConfigError(
-        s"versioned read: version $v of '$location' references no files")
-    val base = loadData(spark, root, names, format, options)
-    dvOf(fs, root, v).fold(base) { case (name, _) =>
-      applyDv(spark, root, base, name) }
+    snapshot(spark, root, location, manifestOf(fs, root, v), format, options)
   }
 
   /** FILE-LEVEL MERGE (upsert): arrivals replace table rows with equal
@@ -863,8 +911,10 @@ object VersionedTable {
         format, options, statsColumns = statsColumns,
         expectedLatest = Some(0L))
     val latest = vs.last
-    val files = readManifest(fs, root, latest)
-    val stats = fileStats(spark, location, latest)
+    val head = manifestOf(fs, root, latest)
+    val files = head.names
+    val sidecar = sidecarOf(fs, root, head)
+    val stats = statsByFile(sidecar)
     val k0 = keys.head
     val bounds = arrivals.agg(fmin(col(k0)), fmax(col(k0))).head()
     val (lo, hi) = (canonToken(bounds.get(0)), canonToken(bounds.get(1)))
@@ -893,7 +943,9 @@ object VersionedTable {
       else if (actions.bySource.nonEmpty && !bySourceViaDv) files
       else if (actions.matched.nonEmpty) touchedProbe
       else Nil // insert/BY SOURCE only: nothing rewrites in place
-    val untouched = files.filterNot(touched.toSet)
+    val isTouched = touched.toSet
+    val untouched = files.filterNot(isTouched)
+    val untouchedSized = head.files.filterNot(f => isTouched(f._1))
     // ONE footer read serves the conditional path's target-schema needs
     // (star-action validation + the insert-only projection) — lazy so
     // the row-replace path never pays it
@@ -928,21 +980,10 @@ object VersionedTable {
     // when nothing is touched, the unionByName that would otherwise
     // catch a drifted arrival schema never runs — check it explicitly
     // (one footer read), or v+1 would mix schemas across its files
-    if (!conditional && touched.isEmpty && files.nonEmpty &&
-      !options.get("mergeSchema").exists(_.equalsIgnoreCase("true"))) {
-      val tableCols = loadData(spark, root, Seq(files.head), format, options).columns.toSet
-      val newCols = arrivals.columns.toSet
-      if (tableCols != newCols) {
-        val missing = (tableCols -- newCols).toSeq.sorted
-        val added = (newCols -- tableCols).toSeq.sorted
-        throw new graft.config.ConfigError(
-          s"versioned merge: arrival schema drift at '$location' v$latest — " +
-            (if (missing.nonEmpty) s"missing: ${missing.mkString(", ")}; " else "") +
-            (if (added.nonEmpty) s"added: ${added.mkString(", ")}; " else "") +
-            "pass mergeSchema=true in options (commit AND read) to evolve")
-      }
-    }
-    val latestDv = dvOf(fs, root, latest)
+    if (!conditional && touched.isEmpty)
+      checkDrift(spark, root, location, "merge: arrival", head,
+        arrivals.columns.toSeq, format, options)
+    val latestDv = head.dv
     // live rows of the named files (a touched file's deleted rows must
     // not resurrect — the DV applies to the snapshot being merged).
     // The EVALUATOR reads the rewrite set (`touched` — which is ALL
@@ -950,11 +991,8 @@ object VersionedTable {
     // zone-hit probe set: loading the probe set there would drop every
     // zone-miss file's rows from the rewrite); the no-matched-action
     // anti-join reads the probe set alone.
-    def liveOf(names: Seq[String]): DataFrame = {
-      val base = loadData(spark, root, names, format, options)
-      latestDv.fold(base) { case (name, _) =>
-        applyDv(spark, root, base, name) }
-    }
+    def liveOf(names: Seq[String]): DataFrame =
+      liveRows(spark, root, names, latestDv, format, options)
     val merged =
       if (!conditional) {
         if (touched.isEmpty) arrivals
@@ -1022,18 +1060,8 @@ object VersionedTable {
       if (statsColumns.isEmpty) SidecarStats.empty
       else computeStats(spark, root, moved.map(_._1),
         statsColumns, format, options)
-    val carried = sidecarOf(fs, root, latest).filterFiles(untouched.toSet)
-    val all = carried ++ newStats
-    val statsFile =
-      if (all.isEmpty) None
-      else {
-        val name = s"stats-$commitId.jsonl"
-        writeStatsFile(fs, root, name, renderSidecar(all))
-        Some(name)
-      }
-    val untouchedSized = untouched.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
+    val statsFile = writeSidecar(fs, root, commitId,
+      sidecar.filterFiles(untouched.toSet) ++ newStats)
     // deletion vector: rewritten files materialized their deletes away;
     // entries for the CARRIED files stay live and move to a fresh
     // filtered sidecar, joined by the BY SOURCE claimed positions
@@ -1065,8 +1093,8 @@ object VersionedTable {
     // serializable: exactly one CAS attempt at latest+1 — losing means a
     // concurrent commit landed since our snapshot, and our merged frame
     // is stale (it would silently drop that writer's rows)
-    if (!writeManifestCas(fs, root, latest + 1, "merge",
-      untouchedSized ++ moved, None, statsFile, dvNext))
+    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "merge",
+      untouchedSized ++ moved, None, statsFile, dvNext)))
       throw new java.util.ConcurrentModificationException(
         s"versioned merge: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-read and re-merge")
@@ -1118,9 +1146,9 @@ object VersionedTable {
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$exp, latest is v$latest; re-read and re-delete")
     }
-    val files = readManifest(fs, root, latest)
-    val dvPrev = dvOf(fs, root, latest)
-    val base = loadData(spark, root, files, format, options)
+    val head = manifestOf(fs, root, latest)
+    val dvPrev = head.dv
+    val base = loadData(spark, root, head.names, format, options)
     // only LIVE rows can match (a row deleted twice would double-count)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     // PINNED once (localCheckpoint, eager): the matched set feeds both
@@ -1144,12 +1172,8 @@ object VersionedTable {
     newDv.write.mode(SaveMode.Overwrite)
       .parquet(new Path(logDir(root), dvName).toString)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    val sized = files.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    val statsFile = manifestField(manifestText(fs, root, latest), "stats_file")
-    if (!writeManifestCas(fs, root, latest + 1, "delete", sized, None,
-      statsFile, Some((dvName, dvRows))))
+    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "delete", head.files,
+      None, head.statsFile, Some((dvName, dvRows)))))
       throw new java.util.ConcurrentModificationException(
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-delete")
@@ -1189,9 +1213,9 @@ object VersionedTable {
         s"versioned update: serializable conflict at '$location' — snapshot " +
           s"was v$exp, latest is v$latest; re-read and re-update")
     }
-    val files = readManifest(fs, root, latest)
-    val dvPrev = dvOf(fs, root, latest)
-    val base = loadData(spark, root, files, format, options)
+    val head = manifestOf(fs, root, latest)
+    val dvPrev = head.dv
+    val base = loadData(spark, root, head.names, format, options)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
     val dataCols = base.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
     set.keys.foreach { c =>
@@ -1237,29 +1261,16 @@ object VersionedTable {
     newDv.write.mode(SaveMode.Overwrite)
       .parquet(new Path(logDir(root), dvName).toString)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    val sized = files.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
     // stats: carried by name (still sound over-approximations for the
     // old files); the NEW files get fresh stats for the tracked columns
-    val statsFile: Option[String] = {
-      val tracked = trackedStatsColumns(spark, location)
-      val carried = manifestField(manifestText(fs, root, latest), "stats_file")
-        .map(readStatsLines(fs, root, _)).getOrElse(SidecarStats.empty)
-      val fresh =
-        if (tracked.isEmpty) SidecarStats.empty
-        else computeStats(spark, root, moved.map(_._1),
-          tracked, format, options)
-      val all = carried ++ fresh
-      if (all.isEmpty) None
-      else {
-        val name = s"stats-$commitId.jsonl"
-        writeStatsFile(fs, root, name, renderSidecar(all))
-        Some(name)
-      }
-    }
-    if (!writeManifestCas(fs, root, latest + 1, "update", sized ++ moved, None,
-      statsFile, Some((dvName, dvRows))))
+    val carried = sidecarOf(fs, root, head)
+    val tracked = trackedColumns(carried)
+    val fresh =
+      if (tracked.isEmpty) SidecarStats.empty
+      else computeStats(spark, root, moved.map(_._1), tracked, format, options)
+    val statsFile = writeSidecar(fs, root, commitId, carried ++ fresh)
+    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "update",
+      head.files ++ moved, None, statsFile, Some((dvName, dvRows)))))
       throw new java.util.ConcurrentModificationException(
         s"versioned update: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-update")
@@ -1314,16 +1325,18 @@ object VersionedTable {
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned compactDeletes: no committed versions at '$location'")
     val latest = vs.last
-    val dvPrev = dvOf(fs, root, latest) match {
+    val head = manifestOf(fs, root, latest)
+    val dvPrev = head.dv match {
       case None => return (latest, 0)
       case Some(x) => x
     }
-    val files = readManifest(fs, root, latest)
+    val files = head.names
+    val sidecar = sidecarOf(fs, root, head)
     // deleted counts per file — the DV is delete-sized
     val delCounts = readDv(spark, root, dvPrev._1)
       .groupBy(col("file")).agg(count(lit(1)).as("n_del"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val knownRows = fileRows(spark, location, latest)
+    val knownRows = sidecar.rows.toMap
     val uncounted = delCounts.keySet.filter(f =>
       files.contains(f) && !knownRows.contains(f)).toSeq
     val countedRows: Map[String, Long] =
@@ -1339,7 +1352,8 @@ object VersionedTable {
       }
     }
     if (rewrite.isEmpty) return (latest, 0)
-    val carried = files.filterNot(rewrite.toSet)
+    val isRewritten = rewrite.toSet
+    val carried = files.filterNot(isRewritten)
     val liveBase = loadData(spark, root, rewrite, format, options)
     val live = applyDv(spark, root, liveBase, dvPrev._1)
     val (commitId, moved) = stageAndMove(fs, root, live, format, options)
@@ -1356,25 +1370,15 @@ object VersionedTable {
         Some((name, nRemain))
       }
     // stats: carry for untouched files; fresh for the rewritten output
-    val tracked = trackedStatsColumns(spark, location)
-    val carriedStats = sidecarOf(fs, root, latest).filterFiles(carried.toSet)
+    val tracked = trackedColumns(sidecar)
     val fresh =
       if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark, root, moved.map(_._1),
-        tracked, format, options)
-    val all = carriedStats ++ fresh
-    val statsFile =
-      if (all.isEmpty) None
-      else {
-        val name = s"stats-$commitId.jsonl"
-        writeStatsFile(fs, root, name, renderSidecar(all))
-        Some(name)
-      }
-    val carriedSized = carried.map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    if (!writeManifestCas(fs, root, latest + 1, "compact_deletes",
-      carriedSized ++ moved, None, statsFile, dvNext))
+      else computeStats(spark, root, moved.map(_._1), tracked, format, options)
+    val statsFile = writeSidecar(fs, root, commitId,
+      sidecar.filterFiles(carried.toSet) ++ fresh)
+    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "compact_deletes",
+      head.files.filterNot(f => isRewritten(f._1)) ++ moved, None,
+      statsFile, dvNext)))
       throw new java.util.ConcurrentModificationException(
         s"versioned compactDeletes: serializable conflict at '$location' — " +
           s"a concurrent commit won v${latest + 1}; re-run")
@@ -1411,24 +1415,13 @@ object VersionedTable {
     if (branchVersions(spark, location, branch).nonEmpty)
       throw new graft.config.ConfigError(
         s"versioned branch: branch '$branch' already exists at '$location'")
-    // the fork manifest: the base's text with mode rewritten — file,
-    // stats and DV references copied by name, zero bytes moved
-    val text = manifestText(fs, root, base)
-      .replaceFirst(""""mode":"[^"]*"""", s""""mode":"branch"""")
-    val p = branchManifestPath(root, base, branch)
-    val tmp = new Path(logDir(root), s".tmp-branch-$branch-${java.util.UUID.randomUUID().toString.take(8)}")
-    val os = fs.create(tmp, true)
-    try os.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(root.toUri, fs.getConf)
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.NONE)
-    } catch {
-      case e @ (_: org.apache.hadoop.fs.FileAlreadyExistsException | _: java.io.IOException) =>
-        fs.delete(tmp, false)
-        throw new java.util.ConcurrentModificationException(
-          s"versioned branch: branch '$branch' creation raced at '$location': ${e.getMessage}")
-    }
+    // the fork manifest: the base's with mode rewritten — file, stats
+    // and DV references copied by name, zero bytes moved — published
+    // through the coordinator like every other manifest
+    if (!publish(fs, root, branchManifestPath(root, base, branch),
+      manifestOf(fs, root, base).copy(mode = "branch").render))
+      throw new java.util.ConcurrentModificationException(
+        s"versioned branch: branch '$branch' creation raced at '$location'")
     graft.log.Log.info("versioned branch created",
       "location" -> location, "branch" -> branch, "base" -> s"v$base")
     base
@@ -1459,7 +1452,7 @@ object VersionedTable {
     // before any data is staged (the [[commit]] txn contract)
     txn.foreach { case (app, batch) =>
       val replayedAt = lastTxn(branchVersions(spark, location, branch), app)(
-        v => manifestTextAt(fs, branchManifestPath(root, v, branch)))
+        v => manifestAt(fs, branchManifestPath(root, v, branch)))
       replayedAt.foreach { case (lastBatch, atV) =>
         if (lastBatch >= batch) {
           graft.log.Log.info("versioned branch commit: txn replay skipped",
@@ -1473,22 +1466,13 @@ object VersionedTable {
     var attempt = 0
     while (attempt < maxRetries) {
       val head = branchVersions(spark, location, branch).last
-      val headText = manifestTextAt(fs, branchManifestPath(root, head, branch))
-      val base: Seq[(String, Long)] =
-        if (mode == "append") filesOfText(headText).map { n =>
-          (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-        } else Seq.empty
-      val statsCarry =
-        if (mode == "append") manifestField(headText, "stats_file") else None
-      val dvCarry =
-        if (mode == "append")
-          manifestField(headText, "dv_file").map { name =>
-            (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(headText)
-              .map(_.group(1).toLong).getOrElse(0L))
-          }
+      // an append carries the head's files, stats and DV by name
+      val carry =
+        if (mode == "append") Some(manifestAt(fs, branchManifestPath(root, head, branch)))
         else None
-      if (writeManifestCas(fs, root, head + 1, mode, base ++ moved, txn,
-        statsCarry, dvCarry, Some(branch))) {
+      if (writeManifestCas(fs, root, Manifest.next(head + 1, mode,
+        carry.fold(Seq.empty[(String, Long)])(_.files) ++ moved, txn,
+        carry.flatMap(_.statsFile), carry.flatMap(_.dv)), Some(branch))) {
         graft.log.Log.info("versioned branch commit",
           "location" -> location, "branch" -> branch, "version" -> s"v${head + 1}")
         return head + 1
@@ -1512,12 +1496,10 @@ object VersionedTable {
     val v = asOf.getOrElse(bvs.last)
     if (!bvs.contains(v)) throw new graft.config.ConfigError(
       s"versioned branch read: version $v not on branch '$branch' ${bvs.mkString("[", ",", "]")}")
-    val text = manifestTextAt(fs, branchManifestPath(root, v, branch))
-    val files = filesOfText(text)
-    if (files.isEmpty) throw new graft.config.ConfigError(
+    val m = manifestAt(fs, branchManifestPath(root, v, branch))
+    if (m.files.isEmpty) throw new graft.config.ConfigError(
       s"versioned branch read: v$v@$branch of '$location' references no files")
-    val base = loadData(spark, root, files, format, options)
-    manifestField(text, "dv_file").fold(base)(applyDv(spark, root, base, _))
+    liveRows(spark, root, m.names, m.dv, format, options)
   }
 
   /** PUBLISH a branch to main — the WAP promote: the branch head's file
@@ -1541,17 +1523,9 @@ object VersionedTable {
         s"versioned publish: serializable conflict at '$location' — branch " +
           s"'$branch' forked at v$forkBase but main is at v$mainLatest; " +
           "rebaseBranch (append-only staging) or re-fork and re-stage")
-    val headText = manifestTextAt(fs, branchManifestPath(root, bvs.last, branch))
-    val files = filesOfText(headText).map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    val statsCarry = manifestField(headText, "stats_file")
-    val dvCarry = manifestField(headText, "dv_file").map { name =>
-      (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(headText)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
-    if (!writeManifestCas(fs, root, forkBase + 1, "publish", files, None,
-      statsCarry, dvCarry))
+    val head = manifestAt(fs, branchManifestPath(root, bvs.last, branch))
+    if (!writeManifestCas(fs, root, Manifest.next(forkBase + 1, "publish",
+      head.files, None, head.statsFile, head.dv)))
       throw new java.util.ConcurrentModificationException(
         s"versioned publish: serializable conflict at '$location' — a " +
           s"concurrent commit won v${forkBase + 1}; re-fork and re-stage")
@@ -1579,34 +1553,20 @@ object VersionedTable {
     val bvs = branchVersions(spark, location, branch)
     if (bvs.isEmpty) throw new graft.config.ConfigError(
       s"versioned rebase: branch '$branch' does not exist at '$location'")
-    val modes = bvs.map(v => manifestField(
-      manifestTextAt(fs, branchManifestPath(root, v, branch)), "mode")
-      .getOrElse("overwrite"))
-    val nonAppend = modes.drop(1).filterNot(_ == "append")
+    val lineage = bvs.map(v => manifestAt(fs, branchManifestPath(root, v, branch)))
+    val nonAppend = lineage.drop(1).map(_.mode).filterNot(_ == "append")
     if (nonAppend.nonEmpty) throw new graft.config.ConfigError(
       s"versioned rebase: branch '$branch' has non-append commits " +
         s"(${nonAppend.mkString(", ")}) — a rebase would change their " +
         "semantics; drop the branch and re-stage against the new head")
-    val forkFiles = filesOfText(
-      manifestTextAt(fs, branchManifestPath(root, bvs.head, branch))).toSet
-    val staged = filesOfText(
-      manifestTextAt(fs, branchManifestPath(root, bvs.last, branch)))
-      .filterNot(forkFiles)
+    val forkFiles = lineage.head.names.toSet
+    val staged = lineage.last.files.filterNot(f => forkFiles(f._1))
     val mainLatest = versions(spark, location).last
     if (mainLatest == bvs.head)
       return bvs.head // nothing to rebase onto
-    val newBase = readManifest(fs, root, mainLatest)
-    val sized = (newBase ++ staged).map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
     // carry the NEW main head's stats/DV (they cover its files; the
     // staged files simply have no stats — conservative)
-    val headText = manifestText(fs, root, mainLatest)
-    val statsCarry = manifestField(headText, "stats_file")
-    val dvCarry = manifestField(headText, "dv_file").map { name =>
-      (name, """"dv_rows":(\d+)""".r.findFirstMatchIn(headText)
-        .map(_.group(1).toLong).getOrElse(0L))
-    }
+    val head = manifestOf(fs, root, mainLatest)
     // rewrite the branch lineage CRASH-SAFELY: the complete new lineage
     // (fork + append) is written under a TEMP branch name first, so the
     // staged data files are referenced by at least one full lineage at
@@ -1617,10 +1577,10 @@ object VersionedTable {
     // main head's version number overlaps the old staged range.
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val tmpBranch = s"$branch.rebase-$uuid"
-    val forkText = headText.replaceFirst(""""mode":"[^"]*"""", """"mode":"branch"""")
-    writeRawManifest(fs, root, branchManifestPath(root, mainLatest, tmpBranch), forkText)
-    if (!writeManifestCas(fs, root, mainLatest + 1, "append", sized, None,
-      statsCarry, dvCarry, Some(tmpBranch)))
+    publishNew(fs, root, branchManifestPath(root, mainLatest, tmpBranch),
+      head.copy(mode = "branch").render)
+    if (!writeManifestCas(fs, root, Manifest.next(mainLatest + 1, "append",
+      head.files ++ staged, None, head.statsFile, head.dv), Some(tmpBranch)))
       throw new java.util.ConcurrentModificationException(
         s"versioned rebase: branch '$branch' raced at '$location'")
     // COMMIT MARKER: from this instant the rebase is DECIDED — a crash
@@ -1630,7 +1590,7 @@ object VersionedTable {
     // is expired as debris. Published via the coordinator (never torn);
     // the uuid-unique name means the CAS always wins.
     val marker = rebaseMarkerPath(root, branch, uuid)
-    writeRawManifest(fs, root, marker,
+    publishNew(fs, root, marker,
       s"""{"branch":${Json.str(branch)},"tmp":${Json.str(tmpBranch)},""" +
         s""""versions":[$mainLatest,${mainLatest + 1}]}""")
     bvs.foreach(v => fs.delete(branchManifestPath(root, v, branch), false))
@@ -1651,14 +1611,12 @@ object VersionedTable {
     Seq(mainLatest, mainLatest + 1).foreach { v =>
       val tmpPath = branchManifestPath(root, v, tmpBranch)
       val dst = branchManifestPath(root, v, branch)
-      val tmpText =
-        try Some(manifestTextAt(fs, tmpPath))
+      val tmpManifest =
+        try Some(manifestAt(fs, tmpPath))
         catch { case _: java.io.FileNotFoundException => None }
-      tmpText match {
-        case Some(text) =>
-          if (!coordinatorImpl.publish(fs, logDir(root), dst,
-                text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) &&
-              manifestTextAt(fs, dst) != text)
+      tmpManifest match {
+        case Some(m) =>
+          if (!publish(fs, root, dst, m.render) && manifestAt(fs, dst) != m)
             throw new java.util.ConcurrentModificationException(
               s"versioned rebase: branch '$branch' manifest v$v raced at '$location'")
           fs.delete(tmpPath, false)
@@ -1743,9 +1701,11 @@ object VersionedTable {
     val v = asOf.getOrElse(vs.last)
     if (!vs.contains(v)) throw new graft.config.ConfigError(
       s"versioned read: version $v not in committed set ${vs.mkString("[", ",", "]")}")
-    val files = readManifest(fs, root, v)
-    val stats = fileStats(spark, location, v)
-    val sets = sidecarOf(fs, root, v).sets
+    val m = manifestOf(fs, root, v)
+    val files = m.names
+    val sidecar = sidecarOf(fs, root, m)
+    val stats = statsByFile(sidecar)
+    val sets = sidecar.sets
       .groupBy(_._1).map { case (f, xs) =>
         (f, xs.map { case (_, c, b) => (c, b) }.toMap) }
     // the bucket-bitmap tier applies to `=` probes whose toString equals
@@ -1793,26 +1753,16 @@ object VersionedTable {
       if (kept.isEmpty)
         // provably empty under the predicates: an empty frame with the
         // table's schema, zero files opened
-        read(spark, location, Some(v), format, options).limit(0)
-      else {
-        val base = loadData(spark, root, kept, format, options)
+        snapshot(spark, root, location, m, format, options).limit(0)
+      else
         // deleted rows stay invisible on the pruned path too (DV entries
         // for pruned-away files anti-join to nothing, harmlessly)
-        dvOf(fs, root, v).fold(base) { case (name, _) =>
-          applyDv(spark, root, base, name) }
-      }
+        liveRows(spark, root, kept, m.dv, format, options)
     graft.log.Log.info("versioned pruned read",
       "location" -> location, "version" -> s"v$v",
       "files_total" -> files.size.toString, "files_kept" -> kept.size.toString)
     PrunedScan(df, files.size, kept.size)
   }
-
-  private def manifestMode(fs: FileSystem, root: Path, v: Long): String =
-    manifestField(manifestText(fs, root, v), "mode").getOrElse("overwrite")
-
-  private def manifestTs(fs: FileSystem, root: Path, v: Long): Option[Long] =
-    """"ts":(\d+)""".r.findFirstMatchIn(manifestText(fs, root, v))
-      .map(_.group(1).toLong)
 
   /** Time travel by WALL CLOCK: the latest version committed at or
     * before `tsMillis` (versions without a recorded ts — pre-upgrade
@@ -1827,7 +1777,7 @@ object VersionedTable {
     val vs = versions(spark, location)
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned read: no committed versions at '$location'")
-    vs.filter(v => manifestTs(fs, root, v).getOrElse(0L) <= tsMillis)
+    vs.filter(v => manifestOf(fs, root, v).ts.getOrElse(0L) <= tsMillis)
       .lastOption.getOrElse(throw new graft.config.ConfigError(
         s"versioned read: no version at or before ts $tsMillis at '$location' " +
           s"(earliest is v${vs.head})"))
@@ -1857,18 +1807,19 @@ object VersionedTable {
         s"versioned changes: version $v not in committed set ${vs.mkString("[", ",", "]")}")
     }
     val range = vs.filter(v => v > fromVersion && v <= toVersion)
+    val manifest = manifestCache(fs, root)
     val frames = range.map { v =>
-      val m = manifestMode(fs, root, v)
-      if (m != "append")
+      val m = manifest(v)
+      if (m.mode != "append")
         throw new graft.config.ConfigError(
-          s"versioned changes: v$v of '$location' is a $m commit — " +
+          s"versioned changes: v$v of '$location' is a ${m.mode} commit — " +
             "its row-level delta is a full two-snapshot diff; use " +
             s"diffVersions(${v - 1}, $v) or read the snapshot " +
             s"(as_of_version: $v) instead")
-      val prev = readManifest(fs, root, v - 1).toSet
-      val added = readManifest(fs, root, v).filterNot(prev.contains)
+      val prev = manifest(v - 1).names.toSet
+      val added = m.names.filterNot(prev.contains)
       if (added.isEmpty)
-        read(spark, location, Some(v), format, options).limit(0)
+        snapshot(spark, root, location, m, format, options).limit(0)
           .withColumn("_commit_version", lit(v))
       else loadData(spark, root, added, format, options)
         .withColumn("_commit_version", lit(v))
@@ -1905,14 +1856,9 @@ object VersionedTable {
         "location" -> location, "version" -> s"v$latest")
       return latest
     }
-    val text = manifestText(fs, root, toVersion)
-    val sized = filesOfText(text).map { n =>
-      (n, fs.getFileStatus(new Path(dataDir(root), n)).getLen)
-    }
-    val statsCarry = manifestField(text, "stats_file")
-    val dvCarry = dvOf(fs, root, toVersion)
-    if (!writeManifestCas(fs, root, latest + 1, "restore", sized, None,
-      statsCarry, dvCarry))
+    val target = manifestOf(fs, root, toVersion)
+    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "restore",
+      target.files, None, target.statsFile, target.dv)))
       throw new java.util.ConcurrentModificationException(
         s"versioned restore: serializable conflict at '$location' — a " +
           s"concurrent commit won v${latest + 1}; re-inspect and re-restore")
@@ -1929,8 +1875,7 @@ object VersionedTable {
   private[graft] def manifestTotalBytes(spark: SparkSession, location: String,
                                         version: Long): Long = {
     val root = new Path(location)
-    val text = manifestText(fsFor(spark, root), root, version)
-    """"bytes":(\d+)""".r.findAllMatchIn(text).map(_.group(1).toLong).sum
+    manifestOf(fsFor(spark, root), root, version).files.map(_._2).sum
   }
 
   def history(spark: SparkSession, location: String): DataFrame = {
@@ -1941,26 +1886,15 @@ object VersionedTable {
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned history: no committed versions at '$location'")
     val rows = vs.map { v =>
-      // ONE manifest fetch per version: mode/ts/bytes/n_files/stats_file
-      // all parse from the same text (a 10k-commit DESCRIBE HISTORY on
-      // an object store pays 10k GETs, not 40k)
-      val text = manifestText(fs, root, v)
-      val bytes = """"bytes":(\d+)""".r.findAllMatchIn(text)
-        .map(_.group(1).toLong).sum
-      val nFiles = """"n_files":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(0L)
-      val mode = manifestField(text, "mode").getOrElse("overwrite")
-      val ts = """"ts":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong)
-      val sc = manifestField(text, "stats_file")
-        .map(readStatsLines(fs, root, _)).getOrElse(SidecarStats.empty)
+      // ONE manifest fetch per version (a 10k-commit DESCRIBE HISTORY
+      // on an object store pays 10k GETs, not 40k)
+      val m = manifestOf(fs, root, v)
+      val sc = sidecarOf(fs, root, m)
       // deletion vectors hide rows the per-file counts still include
-      val dvRows = """"dv_rows":(\d+)""".r.findFirstMatchIn(text)
-        .map(_.group(1).toLong).getOrElse(0L)
       val nRows: Any =
-        if (sc.rows.isEmpty) null else sc.rows.map(_._2).sum - dvRows
-      org.apache.spark.sql.Row(v, mode, nFiles, bytes,
-        nRows, ts.map(Long.box).orNull)
+        if (sc.rows.isEmpty) null else sc.rows.map(_._2).sum - m.dv.fold(0L)(_._2)
+      org.apache.spark.sql.Row(v, m.mode, m.files.size.toLong,
+        m.files.map(_._2).sum, nRows, m.ts.map(Long.box).orNull)
     }
     spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](
@@ -2000,27 +1934,19 @@ object VersionedTable {
     // are deleted mid-way and can't be consulted after. LIVE BRANCHES
     // are unconditionally kept: their manifests' file/stats/DV refs
     // must survive until dropBranch (a branch is a ref, not history).
-    val branchTexts = fs.listStatus(logDir(root)).toSeq
-      .map(_.getPath)
-      .filter { p => val n = p.getName
-        n.startsWith("v") && n.contains("@") && n.endsWith(".json") }
-      .map(manifestTextAt(fs, _))
-    val keptRefs = (kept.flatMap(v => readManifest(fs, root, v)) ++
-      branchTexts.flatMap(filesOfText)).toSet
-    val anyRefs = (vs.flatMap(v => readManifest(fs, root, v)) ++
-      branchTexts.flatMap(filesOfText)).toSet
-    val keptStats = (kept.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "stats_file")) ++
-      branchTexts.flatMap(manifestField(_, "stats_file"))).toSet
-    val anyStats = (vs.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "stats_file")) ++
-      branchTexts.flatMap(manifestField(_, "stats_file"))).toSet
-    val keptDvs = (kept.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "dv_file")) ++
-      branchTexts.flatMap(manifestField(_, "dv_file"))).toSet
-    val anyDvs = (vs.flatMap(v =>
-      manifestField(manifestText(fs, root, v), "dv_file")) ++
-      branchTexts.flatMap(manifestField(_, "dv_file"))).toSet
+    // Each manifest is read once.
+    val keptMs = kept.map(manifestOf(fs, root, _)) ++
+      fs.listStatus(logDir(root)).toSeq.map(_.getPath)
+        .filter { p => val n = p.getName
+          n.startsWith("v") && n.contains("@") && n.endsWith(".json") }
+        .map(manifestAt(fs, _))
+    val anyMs = keptMs ++ vs.filter(_ < keepFromVersion).map(manifestOf(fs, root, _))
+    val keptRefs = keptMs.flatMap(_.names).toSet
+    val anyRefs = anyMs.flatMap(_.names).toSet
+    val keptStats = keptMs.flatMap(_.statsFile).toSet
+    val anyStats = anyMs.flatMap(_.statsFile).toSet
+    val keptDvs = keptMs.flatMap(_.dv.map(_._1)).toSet
+    val anyDvs = anyMs.flatMap(_.dv.map(_._1)).toSet
     val now = System.currentTimeMillis()
     val dropped = scala.collection.mutable.ArrayBuffer.empty[String]
     fs.listStatus(dataDir(root)).foreach { st =>

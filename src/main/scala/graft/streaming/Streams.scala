@@ -792,7 +792,7 @@ object Streams {
         val in = fs.open(offsetPath)
         val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
                    finally in.close()
-        """"version"\s*:\s*(\d+)""".r.findFirstMatchIn(text).map(_.group(1).toLong)
+        graft.util.Json.long(graft.util.Json.read(text), "version")
       }
     val vs = graft.sinks.VersionedTable.versions(spark, location)
     require(vs.nonEmpty, s"cdc drain: '$location' is not a versioned table")

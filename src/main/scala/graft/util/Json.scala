@@ -4,8 +4,25 @@ package graft.util
   * graft writes: log events, Bench's result line, `oracle_sql.json`,
   * versioned-table manifests and stats sidecars, materialized-view state,
   * generation pointers, sink manifests, `_graft_metrics.json` and bookmark
-  * state. */
+  * state — and the one reader ([[read]]) for the state files graft parses
+  * back: manifests, rebase markers, materialized-view state, generation
+  * pointers and CDC offsets. */
 object Json {
+  import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+
+  private val mapper = new ObjectMapper()
+
+  /** `text` as a JSON tree (Jackson's). An empty text is a missing node,
+    * whose fields are all absent; malformed JSON throws an IOException. */
+  def read(text: String): JsonNode = mapper.readTree(text)
+
+  /** The string field `key` of the object `n`, if present. */
+  def string(n: JsonNode, key: String): Option[String] =
+    Option(n.get(key)).filter(_.isTextual).map(_.textValue)
+
+  /** The integer field `key` of the object `n`, if present. */
+  def long(n: JsonNode, key: String): Option[Long] =
+    Option(n.get(key)).filter(_.isIntegralNumber).map(_.longValue)
 
   /** `s` as a quoted JSON string: `\"`, `\\`, `\n`, `\r`, `\t`, and every
     * other control character as `\u00XX`. The line and paragraph

@@ -1416,4 +1416,104 @@ class VersionedTableSpec extends SparkSpec {
     assert(Read.findAllIn(graft.SourceCode.withoutComments(
       "// spark.read.load(x)\nspark\n  .read\n  .parquet(p)")).size == 1)
   }
+
+  test("manifest record: render writes the earlier writer's bytes, parse reads them back") {
+    import VersionedTable.Manifest
+    val odd = "q\"b\\c\nd\u007fe\u2028f"
+    val full = Manifest(7L, Some(1792303409925L), "branch", Some((s"app-$odd", 42L)),
+      Some("stats-ab12cd34.jsonl"), Some(("dv-ab12cd34", 3L)),
+      Seq(("ab12cd34-part-00000.parquet", 456L), (s"part-$odd.parquet", 123L)))
+    val bare = Manifest(1L, Some(1792303410062L), "overwrite", None, None, None, Nil)
+    // the bytes the hand-built writer produced for these two manifests
+    val fullBytes = """{"version":7,"ts":1792303409925,"mode":"branch","txn_app":"app-q\"b\\c\nd%u007fe%u2028f","txn_batch":42,"stats_file":"stats-ab12cd34.jsonl","dv_file":"dv-ab12cd34","dv_rows":3,"n_files":2,"files":[{"name":"ab12cd34-part-00000.parquet","bytes":456},{"name":"part-q\"b\\c\nd%u007fe%u2028f.parquet","bytes":123}]}"""
+      .replace("%u", "\\u") // spelled %u: a triple-quoted literal decodes unicode escapes
+    val bareBytes = """{"version":1,"ts":1792303410062,"mode":"overwrite","n_files":0,"files":[]}"""
+    assert(fullBytes.forall(c => c >= ' ' && c < '\u007f'), "every escape stays ASCII text")
+    assert(full.render == fullBytes)
+    assert(bare.render == bareBytes)
+    Seq(full, bare).foreach(m => assert(Manifest.parse(m.render) == m))
+    // a new manifest lists its files in name order
+    assert(Manifest.next(7L, "branch", full.files.reverse).files == full.files)
+    // fields an older writer left out read with their old defaults
+    assert(Manifest.parse("""{"version":2,"n_files":1,"files":[{"name":"a","bytes":5}]}""") ==
+      Manifest(2L, None, "overwrite", None, None, None, Seq(("a", 5L))))
+  }
+
+  test("createBranch publishes its fork manifest through the commit coordinator") {
+    val loc = tmp("br-coord")
+    VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v"), "overwrite")
+    val published = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    final class Recording(win: Boolean) extends CommitCoordinator {
+      def publish(fs: org.apache.hadoop.fs.FileSystem,
+                  logDir: org.apache.hadoop.fs.Path,
+                  dst: org.apache.hadoop.fs.Path,
+                  content: Array[Byte]): Boolean = {
+        published.add(dst.getName)
+        win && RenameCommitCoordinator.publish(fs, logDir, dst, content)
+      }
+    }
+    val prev = VersionedTable.commitCoordinator
+    VersionedTable.setCommitCoordinator(new Recording(win = true))
+    try VersionedTable.createBranch(spark, loc, "wap")
+    finally VersionedTable.setCommitCoordinator(prev)
+    assert(published.toArray.toSeq == Seq("v00001@wap.json"))
+    assert(rows(VersionedTable.readBranch(spark, loc, "wap")) == Set((1, "a")))
+    // a lost publish is a named race, and leaves no branch behind
+    VersionedTable.setCommitCoordinator(new Recording(win = false))
+    val e = try intercept[java.util.ConcurrentModificationException](
+      VersionedTable.createBranch(spark, loc, "lost"))
+    finally VersionedTable.setCommitCoordinator(prev)
+    assert(e.getMessage.contains("creation raced"), e.getMessage)
+    assert(VersionedTable.branches(spark, loc) == Seq("wap"))
+  }
+
+  test("each operation opens the head manifest once and its stats sidecar at most once") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    CountingFileSystem.install(conf)
+    try {
+      val loc = s"${CountingFileSystem.Scheme}://" + tmp("opens")
+      val k = Seq("k")
+      // (opens of the head manifest, opens of any stats sidecar) during `op`
+      def opens(op: => Any): (Int, Int) = {
+        val head = f"v${VersionedTable.versions(spark, loc).last}%05d.json"
+        CountingFileSystem.reset()
+        op
+        val o = CountingFileSystem.opens
+        (o.getOrElse(head, 0), o.collect { case (n, c) if n.startsWith("stats-") => c }.sum)
+      }
+      VersionedTable.commit(spark, loc, (1 to 40).map(i => (i, s"v$i")).toDF("k", "v")
+        .repartition(2), "overwrite", statsColumns = k)
+      val counts = Seq(
+        "commit append" -> opens(VersionedTable.commit(spark, loc,
+          Seq((41, "n")).toDF("k", "v"), "append", statsColumns = k)),
+        "merge" -> opens(VersionedTable.merge(spark, loc,
+          Seq((1, "m"), (50, "x")).toDF("k", "v"), k, statsColumns = k)),
+        "readPruned" -> opens(VersionedTable.readPruned(spark, loc,
+          Seq(VersionedTable.Prune("k", "<=", 10)))),
+        "deleteWhere" -> opens(VersionedTable.deleteWhere(spark, loc, "k <= 5")),
+        "updateWhere" -> opens(VersionedTable.updateWhere(spark, loc, "k = 41",
+          Map("v" -> "'u'"))),
+        "compactDeletes" -> opens(VersionedTable.compactDeletes(spark, loc,
+          minDeletedFraction = 0.01)))
+      assert(counts.forall { case (_, (m, s)) => m == 1 && s <= 1 }, counts)
+      // every operation did its work
+      assert(VersionedTable.history(spark, loc).collect().map(_.getString(1)).toSeq ==
+        Seq("overwrite", "append", "merge", "delete", "update", "compact_deletes"))
+      assert(rows(VersionedTable.read(spark, loc)) ==
+        (6 to 40).map(i => (i, s"v$i")).toSet ++ Set((41, "u"), (50, "x")))
+    } finally CountingFileSystem.uninstall(conf)
+  }
+
+  test("VersionedTable reads its log only through the manifest record") {
+    val src = graft.SourceCode.of("src/main/scala/graft/sinks/VersionedTable.scala")
+    // no text scrape of a manifest; the stats sidecar's line regexes
+    // match whole lines by extractor
+    assert("findFirstMatchIn|findAllMatchIn|replaceFirst".r.findAllIn(src).isEmpty)
+    // carried files take their recorded bytes: the one stat left is a
+    // rebase temp manifest's age
+    assert("""getFileStatus\([^)]*\)""".r.findAllIn(src).toSeq == Seq("getFileStatus(p)"))
+    // one stats-sidecar write site, one schema-drift check
+    assert("""writeStatsFile\(""".r.findAllIn(src).size == 2)
+    assert("schema drift at".r.findAllIn(src).size == 1)
+  }
 }
