@@ -67,11 +67,11 @@ class BookmarkStore(spark: SparkSession, statePath: String,
     }
   }
 
+  /** Replace the state file atomically: a crash mid-save leaves the
+    * previous state readable, never a torn file. */
   def save(marks: Map[String, SourceMark]): Unit = {
     val p = new org.apache.hadoop.fs.Path(statePath)
-    val f = fs(p)
-    val out = f.create(p, true)
-    try out.write(render(marks).getBytes("UTF-8")) finally out.close()
+    graft.util.Fs.replace(fs(p), p, render(marks).getBytes("UTF-8"))
   }
 
   /** True when any path component BELOW `root` is hidden (`_`/`.`
@@ -108,9 +108,7 @@ class BookmarkStore(spark: SparkSession, statePath: String,
     var maxT = mark.watermark
     if (f.exists(root)) {
       val qualifiedRoot = f.makeQualified(root)
-      val it = f.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
+      graft.util.Fs.leafFiles(f, root).foreach { st =>
         val path = st.getPath.toString
         if (!underHiddenDir(qualifiedRoot, st.getPath) &&
             st.getModificationTime > mark.watermark &&

@@ -6,10 +6,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * point where "exactly one writer wins version N" must hold.
   *
   * The default ([[RenameCommitCoordinator]]) is the Delta HDFSLogStore
-  * shape: write the full manifest to a temp file, then atomic
-  * rename-if-absent. That primitive exists on HDFS and local file
-  * systems but NOT on plain object stores whose only write is an
-  * overwriting PUT — there, two racing writers can both "succeed" and
+  * shape: write the full manifest to a temp file, then atomically
+  * publish it if absent (`link(2)` on a local disk, rename elsewhere).
+  * That primitive exists on HDFS and local file systems but NOT on
+  * plain object stores whose only write is an overwriting PUT —
+  * there, two racing writers can both "succeed" and
   * one manifest silently clobbers the other (the reference delegates
   * this whole problem to its managed catalog/lake layer;
   * `/root/reference/glue/glue_etl_framework.py:235-266`).
@@ -33,17 +34,33 @@ trait CommitCoordinator {
   def publish(fs: FileSystem, logDir: Path, dst: Path, content: Array[Byte]): Boolean
 }
 
-/** Atomic rename-if-absent (FileContext + Rename.NONE) — correct and
-  * cheapest wherever the file system provides it: HDFS, local FS, and
-  * object stores with conditional PUT. */
+/** Atomic publish-if-absent — correct and cheapest wherever the file
+  * system provides it: HDFS, local FS, and object stores with
+  * conditional PUT. The full content goes to a temp file first, so a
+  * crashed writer never exposes a torn `dst`.
+  *
+  * On `file:` the temp file is written with `java.nio` and published
+  * with `link(2)` (`Files.createLink`), which fails with EEXIST when
+  * `dst` exists: a true CAS. Hadoop's local `FileContext.rename(…,
+  * Rename.NONE)` is not one — it checks for `dst`, then renames over
+  * it, so two racing writers can both "win" — and it runs `readlink`
+  * and `chmod` subprocesses. Every other scheme publishes with
+  * `FileContext.rename(…, Rename.NONE)`. */
 object RenameCommitCoordinator extends CommitCoordinator {
   def publish(fs: FileSystem, logDir: Path, dst: Path,
               content: Array[Byte]): Boolean = {
     val tmp = new Path(logDir,
       s".tmp-${dst.getName}-${java.util.UUID.randomUUID().toString.take(8)}")
-    val os = fs.create(tmp, true)
-    try os.write(content) finally os.close()
-    try {
+    graft.util.Fs.write(fs, tmp, content)
+    if (graft.util.Fs.isLocal(fs)) {
+      val localTmp = graft.util.Fs.local(fs, tmp)
+      try {
+        java.nio.file.Files.createLink(graft.util.Fs.local(fs, dst), localTmp)
+        true
+      } catch {
+        case _: java.nio.file.FileAlreadyExistsException => false
+      } finally java.nio.file.Files.deleteIfExists(localTmp): Unit
+    } else try {
       val fc = org.apache.hadoop.fs.FileContext.getFileContext(
         logDir.toUri, fs.getConf)
       fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.NONE)

@@ -418,9 +418,7 @@ object Sinks {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = dir.toUri.getPath.stripSuffix("/")
     val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val st = it.next()
+    graft.util.Fs.leafFiles(fs, dir).foreach { st =>
       val name = st.getPath.getName
       if (st.isFile && !name.startsWith("_") && !name.startsWith(".")) {
         files += ((st.getPath.toUri.getPath.stripPrefix(base).stripPrefix("/"), st.getLen))

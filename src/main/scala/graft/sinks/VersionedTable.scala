@@ -14,22 +14,28 @@ import scala.jdk.CollectionConverters._
   *
   * Layout:
   * {{{
-  *   <table>/data/<commit-uuid>-part-*.parquet   (append-only namespace)
-  *   <table>/_graft_log/v00001.json              (one manifest per version)
+  *   <table>/data/<commitId>-part-<split>-<uuid>.<ext>  (append-only namespace)
+  *   <table>/_graft_log/v00001.json                     (one manifest per version)
+  *   <table>/_graft_log/stats-<commitId>.jsonl          (zone-map sidecar)
+  *   <table>/_graft_log/dv-<commitId>/                  (deletion-vector sidecar)
   * }}}
+  * Data files are written once, by the commit's one Spark job, directly
+  * under these final names ([[FileWrite]]) — there is no staging
+  * directory and no rename; the same job's write tasks compute the
+  * sidecar's per-file stats.
   * A manifest's fields are listed once, on [[Manifest]] — the one record
   * that writes and reads the log.
   *
   * Protocol:
-  *  - WRITE: stage the frame to a scratch dir, move the part files into
-  *    `data/` under a commit-unique prefix (invisible: readers only see
-  *    files a manifest references), then publish manifest `v{N+1}` with
-  *    `fs.create(path, overwrite = false)` — the CREATE-IF-ABSENT is the
-  *    commit point and the CAS: two writers racing to the same version
-  *    number have exactly one winner; the loser re-reads the new latest
-  *    and REBASES (append: new base file list; overwrite: nothing to
-  *    rebase) up to `maxRetries` times. Optimistic concurrency, the
-  *    Delta/Iceberg commit shape.
+  *  - WRITE: write the frame's files straight into `data/` under a
+  *    commit-unique prefix (invisible: readers only see files a manifest
+  *    references), then publish manifest `v{N+1}` through the commit
+  *    coordinator's publish-if-absent ([[CommitCoordinator]]; `link(2)`
+  *    on a local disk) — that CAS is the commit point: two writers
+  *    racing to the same version number have exactly one winner; the
+  *    loser re-reads the new latest and REBASES (append: new base file
+  *    list; overwrite: nothing to rebase) up to `maxRetries` times.
+  *    Optimistic concurrency, the Delta/Iceberg commit shape.
   *  - READ: resolve the latest (or `asOf`) manifest and load EXACTLY its
   *    file list. A reader planned at version N never sees version N+1's
   *    files — snapshot isolation by construction. Data files never
@@ -74,8 +80,9 @@ import scala.jdk.CollectionConverters._
   * manifest-level data skipping a 100 TB table needs before any byte of
   * parquet is opened (file pruning from one small JSON beats opening a
   * million parquet footers; the footers then prune row groups WITHIN
-  * the kept files). Stats cost one extra pass over the NEW files of the
-  * commit only, and appends carry base-file stats forward by name.
+  * the kept files). Stats are computed by the write tasks as they write
+  * the commit's NEW files (no extra pass), and appends carry base-file
+  * stats forward by name.
   */
 object VersionedTable {
 
@@ -225,6 +232,12 @@ object VersionedTable {
     *    update, compact_deletes, branch, publish, restore; read as
     *    overwrite when absent);
     *  - `txn_app`, `txn_batch`: the exactly-once streaming txn, if any;
+    *  - `txns`: every app's last committed txn as of this version,
+    *    `{"<app>":[batch,version]}` in app order — the exactly-once
+    *    check reads it off the head instead of walking the log. Written
+    *    on every new manifest (a branch fork's holds only its base's own
+    *    txn, as the branch lineage starts there); absent on manifests
+    *    written before it existed, for which the check walks back;
     *  - `stats_file`: the zone-map sidecar under `_graft_log/`, if any;
     *  - `dv_file`, `dv_rows`: the deletion-vector sidecar under
     *    `_graft_log/` and its row count, if any;
@@ -234,7 +247,8 @@ object VersionedTable {
     *    recorded bytes are what a stat of it returns. */
   private[sinks] final case class Manifest(version: Long, ts: Option[Long],
       mode: String, txn: Option[(String, Long)], statsFile: Option[String],
-      dv: Option[(String, Long)], files: Seq[(String, Long)]) {
+      dv: Option[(String, Long)], files: Seq[(String, Long)],
+      txns: Option[Map[String, (Long, Long)]] = None) {
     def names: Seq[String] = files.map(_._1)
 
     def render: String =
@@ -242,6 +256,9 @@ object VersionedTable {
         s""""mode":${Json.str(mode)},""" +
         txn.fold("") { case (app, batch) =>
           s""""txn_app":${Json.str(app)},"txn_batch":$batch,""" } +
+        txns.fold("") { m =>
+          m.toSeq.sortBy(_._1).map { case (app, (batch, v)) => s"${Json.str(app)}:[$batch,$v]" }
+            .mkString(""""txns":{""", ",", "},") } +
         statsFile.fold("")(sf => s""""stats_file":${Json.str(sf)},""") +
         dv.fold("") { case (name, rows) =>
           s""""dv_file":${Json.str(name)},"dv_rows":$rows,""" } +
@@ -251,12 +268,15 @@ object VersionedTable {
   }
 
   private[sinks] object Manifest {
-    /** A new commit's manifest, stamped with the wall clock. */
+    /** A new commit's manifest, stamped with the wall clock; its `txns`
+      * are `carried` (the parent version's) plus its own txn. */
     def next(version: Long, mode: String, files: Seq[(String, Long)],
              txn: Option[(String, Long)] = None, statsFile: Option[String] = None,
-             dv: Option[(String, Long)] = None): Manifest =
+             dv: Option[(String, Long)] = None,
+             carried: Map[String, (Long, Long)] = Map.empty): Manifest =
       Manifest(version, Some(System.currentTimeMillis()), mode, txn, statsFile,
-        dv, files.sortBy(_._1))
+        dv, files.sortBy(_._1),
+        Some(carried ++ txn.map { case (app, batch) => app -> ((batch, version)) }))
 
     def parse(text: String): Manifest = {
       val n = Json.read(text)
@@ -270,7 +290,9 @@ object VersionedTable {
         statsFile = Json.string(n, "stats_file"),
         dv = Json.string(n, "dv_file").map((_, num("dv_rows").getOrElse(0L))),
         files = Option(n.get("files")).toSeq.flatMap(_.elements.asScala).flatMap { f =>
-          Json.string(f, "name").map((_, Json.long(f, "bytes").getOrElse(0L))) })
+          Json.string(f, "name").map((_, Json.long(f, "bytes").getOrElse(0L))) },
+        txns = Option(n.get("txns")).filter(_.isObject).map(_.properties.asScala.map { e =>
+          e.getKey -> ((e.getValue.get(0).longValue, e.getValue.get(1).longValue)) }.toMap))
     }
   }
 
@@ -466,88 +488,50 @@ object VersionedTable {
   }
   private object SidecarStats { val empty: SidecarStats = SidecarStats(Nil, Nil) }
 
-  private[sinks] val BitmapBuckets = 4096
-
-  /** The bucket of one value under the bitmap's hashing: murmur3 (Spark's
-    * `hash()`, seed 42) of the value's CANONICAL STRING form — columns
-    * are cast to string before hashing so an Int column and a Long probe
-    * agree; consulted only for integral/string probes (whose toString
-    * matches Spark's cast-to-string exactly). */
-  private def bitmapBucket(canonical: String): Int = {
-    val h = org.apache.spark.sql.catalyst.expressions.Murmur3Hash(
-      Seq(org.apache.spark.sql.catalyst.expressions.Literal(canonical)), 42)
-      .eval(null).asInstanceOf[Int]
-    ((h % BitmapBuckets) + BitmapBuckets) % BitmapBuckets
-  }
-
-  private def renderBitmap(buckets: Iterable[Int]): String = {
-    val bytes = new Array[Byte](BitmapBuckets / 8)
-    buckets.foreach { b => bytes(b >> 3) = (bytes(b >> 3) | (1 << (b & 7))).toByte }
-    java.util.Base64.getEncoder.encodeToString(bytes)
-  }
+  /** The bucket of one probe value under the bitmap's hashing
+    * ([[FileWrite.bucketOf]]: murmur3, Spark's `hash()` with seed 42, of
+    * the value's string form — columns are hashed as cast to string, so
+    * an Int column and a Long probe agree); consulted only for
+    * integral/string probes, whose toString matches Spark's cast to
+    * string exactly. */
+  private def bitmapBucket(canonical: String): Int =
+    FileWrite.bucketOf(org.apache.spark.unsafe.types.UTF8String.fromString(canonical))
 
   private def bitmapHas(b64: String, bucket: Int): Boolean = {
     val bytes = java.util.Base64.getDecoder.decode(b64)
     (bytes(bucket >> 3) & (1 << (bucket & 7))) != 0
   }
 
-  /** Compute per-file stats for `cols` over exactly the data files
-    * `names` (the NEW files of one commit). One scan of the new data;
-    * the collect is bounded by n_new_files × n_cols triples. */
-  private def computeStats(spark: SparkSession, root: Path, names: Seq[String],
-                           cols: Seq[String], format: String,
-                           options: Map[String, String]): SidecarStats = {
-    import org.apache.spark.sql.functions._
-    if (names.isEmpty || cols.isEmpty) return SidecarStats.empty
-    val df = loadData(spark, root, names, format, options)
+  /** Write `df` as this commit's new data files under their final names
+    * in `data/` ([[FileWrite]]: one Spark job, no staging or rename), with
+    * zone maps for `cols` computed inside the write tasks. Returns the
+    * files `(name, bytes)` and their sidecar stats: min/max as canonical
+    * tokens of the values Spark's own min/max pick, null and row counts,
+    * and bucket bitmaps for integral and string columns (the bitmap feed
+    * is bounded at 4096 buckets per file and column). A stats column the
+    * frame lacks fails before any file is written. */
+  private def writeData(root: Path, df: DataFrame, commitId: String, cols: Seq[String],
+                        format: String, options: Map[String, String]): (Seq[(String, Long)], SidecarStats) = {
     val missing = cols.filterNot(df.columns.contains)
     if (missing.nonEmpty) throw new graft.config.ConfigError(
       s"versioned commit: stats columns ${missing.mkString(", ")} not in the " +
         s"frame (has: ${df.columns.mkString(", ")})")
-    // bitmaps only for columns whose cast-to-string form a probe's
-    // toString reproduces EXACTLY — integral and string kinds. A double
-    // column would hash "50.0" while an integral probe hashes "50"
-    // (matching under Spark's casting equality), so fractional/decimal/
-    // temporal columns get no bitmap and fall back to the range tier.
-    val bitmapCols = cols.filter { c =>
-      df.schema(c).dataType match {
-        case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-             org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.StringType => true
-        case _ => false
-      }
-    }.toSet
-    val aggs = count(lit(1)).as("__rows") +: cols.flatMap(c => Seq(
-      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")) ++
-      // bucket bitmap feed: murmur3 of the canonical string form,
-      // bounded at BitmapBuckets distinct ints per (file, col)
-      (if (bitmapCols(c)) Seq(
-        collect_set(pmod(hash(col(c).cast("string")), lit(BitmapBuckets)))
-          .as(s"__set_$c")) else Nil))
-    val collected = df.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect().toSeq
-    SidecarStats(
-      cols = collected.flatMap { r =>
-        val fileName = new Path(r.getAs[String]("__file")).getName
-        cols.map { c =>
-          (fileName, c, ColStats(
-            canonToken(r.getAs[Any](s"__min_$c")),
-            canonToken(r.getAs[Any](s"__max_$c")),
-            Option(r.getAs[Any](s"__nulls_$c")).fold(0L)(_.toString.toLong)))
-        }
+    val written = FileWrite(df, format, graft.sources.Sources.mapOptions(options),
+      dataDir(root).toString, commitId, cols)
+    val types = cols.map(c => df.schema(c).dataType)
+    def token(v: Any, t: org.apache.spark.sql.types.DataType): String =
+      canonToken(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(v, t))
+    val stats = SidecarStats(
+      cols = written.stats.flatMap { f =>
+        cols.indices.map(i => (f.name, cols(i),
+          ColStats(token(f.min(i), types(i)), token(f.max(i), types(i)), f.nulls(i))))
       },
-      rows = collected.map { r =>
-        (new Path(r.getAs[String]("__file")).getName, r.getAs[Long]("__rows"))
-      },
-      sets = collected.flatMap { r =>
-        val fileName = new Path(r.getAs[String]("__file")).getName
-        cols.filter(bitmapCols).map { c =>
-          (fileName, c,
-            renderBitmap(r.getAs[Seq[Int]](s"__set_$c")))
-        }
+      rows = written.stats.map(f => (f.name, f.rows)),
+      sets = written.stats.flatMap { f =>
+        cols.indices.collect { case i if f.buckets(i) != null =>
+          (f.name, cols(i), java.util.Base64.getEncoder.encodeToString(f.buckets(i))) }
       })
+    (written.files, stats)
   }
 
   // one JSON string token, quotes included: the group Json.unstr decodes
@@ -585,10 +569,8 @@ object VersionedTable {
   private def writeStatsFile(fs: FileSystem, root: Path, name: String,
                              lines: Seq[String]): Unit = {
     // commit-unique name: safe to overwrite on a rebase retry
-    val os = fs.create(new Path(logDir(root), name), true)
-    try os.write((lines.mkString("\n") + "\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally os.close()
+    graft.util.Fs.write(fs, new Path(logDir(root), name),
+      (lines.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   private def readStatsLines(fs: FileSystem, root: Path,
@@ -654,15 +636,32 @@ object VersionedTable {
     versions(spark, location).lastOption
       .fold(Seq.empty[String])(v => trackedColumns(sidecarAt(spark, location, v)))
 
-  /** The highest batch id `app` has committed (and its version), scanning
-    * newest-first. The streaming exactly-once check: a foreachBatch
-    * REPLAY (crash between sink commit and checkpoint commit) re-offers
-    * a batch id the table already holds — the commit must be skipped,
-    * not appended twice. */
-  private def lastTxn(vs: Seq[Long], app: String)(
-      manifest: Long => Manifest): Option[(Long, Long)] =
-    vs.sorted.reverse.iterator.map(v => (v, manifest(v).txn)).collectFirst {
-      case (v, Some((a, batch))) if a == app => (batch, v) }
+  /** Every app's last committed txn, app -> (batch, version), as of the
+    * newest of `vs`: the `txns` map of the newest manifest carrying one,
+    * plus the own txn of any newer manifest written before the map
+    * existed (walked newest-first). A new manifest carries this forward,
+    * so on a table written by this code it costs the head's open alone.
+    * The streaming exactly-once check: a foreachBatch REPLAY (crash
+    * between sink commit and checkpoint commit) re-offers a batch id the
+    * table already holds — the commit must be skipped, not appended
+    * twice. */
+  private def txnsAt(vs: Seq[Long])(
+      manifest: Long => Manifest): Map[String, (Long, Long)] = {
+    val walked = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
+    val carried = vs.sorted.reverseIterator.map(v => (v, manifest(v))).flatMap {
+      case (v, m) =>
+        m.txn.foreach { case (app, batch) => if (!walked.contains(app)) walked(app) = (batch, v) }
+        m.txns
+    }.nextOption().getOrElse(Map.empty)
+    carried ++ walked
+  }
+
+  /** A branch's first manifest, forked from main's `base`: the base's
+    * file, stats and DV references by name, mode `branch`, and of the
+    * txns only the base's own — a branch's lineage starts at its fork. */
+  private def forkOf(base: Manifest): Manifest =
+    base.copy(mode = "branch",
+      txns = Some(base.txn.map { case (app, batch) => app -> ((batch, base.version)) }.toMap))
 
   /** Schema-drift guard for a write whose new files join `head`'s: the
     * snapshot read loads an explicit file list, so a drifted column set
@@ -689,22 +688,17 @@ object VersionedTable {
       }
     }
 
-  private def stageAndMove(fs: FileSystem, root: Path, df: DataFrame,
-                           format: String, options: Map[String, String]): (String, Seq[(String, Long)]) = {
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
-    val stage = new Path(root, s".stage-$commitId")
-    df.write.format(format).options(graft.sources.Sources.mapOptions(options))
-      .mode(SaveMode.Overwrite).save(stage.toString)
-    val moved = fs.globStatus(new Path(stage, "part-*")).toSeq.map { st =>
-      val name = s"$commitId-${st.getPath.getName}"
-      val dst = new Path(dataDir(root), name)
-      if (!fs.rename(st.getPath, dst))
-        throw new java.io.IOException(s"versioned commit: move ${st.getPath} -> $dst failed")
-      (name, st.getLen)
-    }
-    fs.delete(stage, true)
-    (commitId, moved)
-  }
+  private def newCommitId(): String = java.util.UUID.randomUUID().toString.take(8)
+
+  /** Write `df` as the deletion-vector sidecar `name` under `_graft_log/`.
+    * DV sidecars keep Spark's committer path (`df.write`: a temporary
+    * directory, then a rename into place), unlike data files
+    * ([[writeData]]): readers load a DV by listing its directory, so a
+    * failed task attempt's file written in place would join the DV.
+    * Writing DVs under final names needs the DV's file list in the
+    * manifest first. */
+  private def writeDv(root: Path, df: DataFrame, name: String): Unit =
+    df.write.mode(SaveMode.Overwrite).parquet(new Path(logDir(root), name).toString)
 
   /** Atomically commit `df` as the next version. `mode` = "overwrite"
     * (the new version IS this frame) or "append" (new version = latest
@@ -742,28 +736,23 @@ object VersionedTable {
     // a WAL replay: skip BEFORE any data is written, return the version
     // that already holds it
     txn.foreach { case (app, batch) =>
-      lastTxn(listed, app)(manifest).foreach {
-        case (lastBatch, atV) =>
-          if (lastBatch >= batch) {
-            graft.log.Log.info("versioned commit: txn replay skipped",
-              "location" -> location, "app" -> app,
-              "batch" -> batch.toString, "committed_at" -> s"v$atV")
-            return atV
-          }
+      txnsAt(listed)(manifest).get(app).filter(_._1 >= batch).foreach {
+        case (_, atV) =>
+          graft.log.Log.info("versioned commit: txn replay skipped",
+            "location" -> location, "app" -> app,
+            "batch" -> batch.toString, "committed_at" -> s"v$atV")
+          return atV
       }
     }
-    // stage, then move parts into the append-only data namespace under a
-    // commit-unique prefix (invisible until a manifest references them)
-    val (commitId, moved) = stageAndMove(fs, root, df, format, options)
-    // zone maps: stats for the NEW files only — one scan of this
-    // commit's data, never of the table
-    val newStats: SidecarStats =
-      if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark, root, moved.map(_._1),
-        statsColumns, format, options)
+    // the new files go straight into the append-only data namespace
+    // under a commit-unique prefix (invisible until a manifest references
+    // them), zone maps computed by the same job
+    val commitId = newCommitId()
+    val (written, newStats) = writeData(root, df, commitId, statsColumns, format, options)
     var attempt = 0
     while (attempt < maxRetries) {
-      val latest = versions(spark, location).lastOption
+      val now = versions(spark, location)
+      val latest = now.lastOption
       expectedLatest.foreach { exp =>
         if (latest.getOrElse(0L) != exp) throw new java.util.ConcurrentModificationException(
           s"versioned commit: serializable conflict at '$location' — snapshot " +
@@ -780,8 +769,8 @@ object VersionedTable {
         sidecarOf(fs, root, h).filterFiles(h.names.toSet))
       val statsFile = writeSidecar(fs, root, commitId, baseStats ++ newStats)
       if (writeManifestCas(fs, root, Manifest.next(v, mode,
-        head.fold(Seq.empty[(String, Long)])(_.files) ++ moved, txn, statsFile,
-        head.flatMap(_.dv)))) return v
+        head.fold(Seq.empty[(String, Long)])(_.files) ++ written,
+        txn, statsFile, head.flatMap(_.dv), txnsAt(now)(manifest)))) return v
       attempt += 1 // lost the race: re-read latest and rebase
     }
     throw new java.io.IOException(
@@ -911,7 +900,8 @@ object VersionedTable {
         format, options, statsColumns = statsColumns,
         expectedLatest = Some(0L))
     val latest = vs.last
-    val head = manifestOf(fs, root, latest)
+    val manifest = manifestCache(fs, root)
+    val head = manifest(latest)
     val files = head.names
     val sidecar = sidecarOf(fs, root, head)
     val stats = statsByFile(sidecar)
@@ -1054,12 +1044,9 @@ object VersionedTable {
         else None
     }
     val publishFrame = bySourceReimages.fold(merged)(merged.unionByName(_))
-    val (commitId, moved) = stageAndMove(fs, root, publishTransform(publishFrame),
-      format, options)
-    val newStats =
-      if (statsColumns.isEmpty) SidecarStats.empty
-      else computeStats(spark, root, moved.map(_._1),
-        statsColumns, format, options)
+    val commitId = newCommitId()
+    val (written, newStats) = writeData(root, publishTransform(publishFrame), commitId,
+      statsColumns, format, options)
     val statsFile = writeSidecar(fs, root, commitId,
       sidecar.filterFiles(untouched.toSet) ++ newStats)
     // deletion vector: rewritten files materialized their deletes away;
@@ -1085,8 +1072,7 @@ object VersionedTable {
       }
       combined.map { case (dvDf, n) =>
         val dvName = s"dv-$commitId"
-        dvDf.write.mode(SaveMode.Overwrite)
-          .parquet(new Path(logDir(root), dvName).toString)
+        writeDv(root, dvDf, dvName)
         (dvName, n)
       }
     }
@@ -1094,7 +1080,7 @@ object VersionedTable {
     // concurrent commit landed since our snapshot, and our merged frame
     // is stale (it would silently drop that writer's rows)
     if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "merge",
-      untouchedSized ++ moved, None, statsFile, dvNext)))
+      untouchedSized ++ written, None, statsFile, dvNext, txnsAt(vs)(manifest))))
       throw new java.util.ConcurrentModificationException(
         s"versioned merge: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-read and re-merge")
@@ -1146,7 +1132,8 @@ object VersionedTable {
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$exp, latest is v$latest; re-read and re-delete")
     }
-    val head = manifestOf(fs, root, latest)
+    val manifest = manifestCache(fs, root)
+    val head = manifest(latest)
     val dvPrev = head.dv
     val base = loadData(spark, root, head.names, format, options)
     // only LIVE rows can match (a row deleted twice would double-count)
@@ -1165,15 +1152,12 @@ object VersionedTable {
         "location" -> location, "version" -> s"v$latest")
       return latest
     }
-    val commitId = java.util.UUID.randomUUID().toString.take(8)
-    val dvName = s"dv-$commitId"
-    val newDv = dvPrev.fold(matches) { case (name, _) =>
-      readDv(spark, root, name).unionByName(matches) }
-    newDv.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(logDir(root), dvName).toString)
+    val dvName = s"dv-${newCommitId()}"
+    writeDv(root, dvPrev.fold(matches) { case (name, _) =>
+      readDv(spark, root, name).unionByName(matches) }, dvName)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
     if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "delete", head.files,
-      None, head.statsFile, Some((dvName, dvRows)))))
+      None, head.statsFile, Some((dvName, dvRows)), txnsAt(vs)(manifest))))
       throw new java.util.ConcurrentModificationException(
         s"versioned delete: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-delete")
@@ -1213,7 +1197,8 @@ object VersionedTable {
         s"versioned update: serializable conflict at '$location' — snapshot " +
           s"was v$exp, latest is v$latest; re-read and re-update")
     }
-    val head = manifestOf(fs, root, latest)
+    val manifest = manifestCache(fs, root)
+    val head = manifest(latest)
     val dvPrev = head.dv
     val base = loadData(spark, root, head.names, format, options)
     val live = livePositions(spark, root, base, dvPrev.map(_._1))
@@ -1251,26 +1236,22 @@ object VersionedTable {
         s"versioned update: SET would change column '$c' from $oldT to $newT — " +
           s"add an explicit CAST(... AS ${oldT.sql}) to the expression")
     }
-    val (commitId, moved) = stageAndMove(fs, root, updated, format, options)
+    // stats: carried by name (still sound over-approximations for the
+    // old files); the NEW files get fresh stats for the tracked columns
+    val carried = sidecarOf(fs, root, head)
+    val commitId = newCommitId()
+    val (written, fresh) = writeData(root, updated, commitId, trackedColumns(carried),
+      format, options)
     // old positions join the DV
     val dvName = s"dv-$commitId"
     val oldPositions = matched
       .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-    val newDv = dvPrev.fold(oldPositions) { case (name, _) =>
-      readDv(spark, root, name).unionByName(oldPositions) }
-    newDv.write.mode(SaveMode.Overwrite)
-      .parquet(new Path(logDir(root), dvName).toString)
+    writeDv(root, dvPrev.fold(oldPositions) { case (name, _) =>
+      readDv(spark, root, name).unionByName(oldPositions) }, dvName)
     val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    // stats: carried by name (still sound over-approximations for the
-    // old files); the NEW files get fresh stats for the tracked columns
-    val carried = sidecarOf(fs, root, head)
-    val tracked = trackedColumns(carried)
-    val fresh =
-      if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark, root, moved.map(_._1), tracked, format, options)
     val statsFile = writeSidecar(fs, root, commitId, carried ++ fresh)
     if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "update",
-      head.files ++ moved, None, statsFile, Some((dvName, dvRows)))))
+      head.files ++ written, None, statsFile, Some((dvName, dvRows)), txnsAt(vs)(manifest))))
       throw new java.util.ConcurrentModificationException(
         s"versioned update: serializable conflict at '$location' — snapshot " +
           s"was v$latest; a concurrent commit won v${latest + 1}; re-update")
@@ -1325,7 +1306,8 @@ object VersionedTable {
     if (vs.isEmpty) throw new graft.config.ConfigError(
       s"versioned compactDeletes: no committed versions at '$location'")
     val latest = vs.last
-    val head = manifestOf(fs, root, latest)
+    val manifest = manifestCache(fs, root)
+    val head = manifest(latest)
     val dvPrev = head.dv match {
       case None => return (latest, 0)
       case Some(x) => x
@@ -1356,7 +1338,10 @@ object VersionedTable {
     val carried = files.filterNot(isRewritten)
     val liveBase = loadData(spark, root, rewrite, format, options)
     val live = applyDv(spark, root, liveBase, dvPrev._1)
-    val (commitId, moved) = stageAndMove(fs, root, live, format, options)
+    // stats: fresh for the rewritten output; carried for untouched files
+    val commitId = newCommitId()
+    val (written, fresh) = writeData(root, live, commitId, trackedColumns(sidecar),
+      format, options)
     // DV: drop entries for the rewritten files, keep the rest
     val remaining = readDv(spark, root, dvPrev._1)
       .filter(!col("file").isin(rewrite: _*))
@@ -1365,20 +1350,14 @@ object VersionedTable {
       if (nRemain == 0L) None
       else {
         val name = s"dv-$commitId"
-        remaining.write.mode(SaveMode.Overwrite)
-          .parquet(new Path(logDir(root), name).toString)
+        writeDv(root, remaining, name)
         Some((name, nRemain))
       }
-    // stats: carry for untouched files; fresh for the rewritten output
-    val tracked = trackedColumns(sidecar)
-    val fresh =
-      if (tracked.isEmpty) SidecarStats.empty
-      else computeStats(spark, root, moved.map(_._1), tracked, format, options)
     val statsFile = writeSidecar(fs, root, commitId,
       sidecar.filterFiles(carried.toSet) ++ fresh)
     if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "compact_deletes",
-      head.files.filterNot(f => isRewritten(f._1)) ++ moved, None,
-      statsFile, dvNext)))
+      head.files.filterNot(f => isRewritten(f._1)) ++ written, None,
+      statsFile, dvNext, txnsAt(vs)(manifest))))
       throw new java.util.ConcurrentModificationException(
         s"versioned compactDeletes: serializable conflict at '$location' — " +
           s"a concurrent commit won v${latest + 1}; re-run")
@@ -1416,10 +1395,10 @@ object VersionedTable {
       throw new graft.config.ConfigError(
         s"versioned branch: branch '$branch' already exists at '$location'")
     // the fork manifest: the base's with mode rewritten — file, stats
-    // and DV references copied by name, zero bytes moved — published
-    // through the coordinator like every other manifest
+    // and DV references copied by name, zero bytes moved ([[forkOf]]) —
+    // published through the coordinator like every other manifest
     if (!publish(fs, root, branchManifestPath(root, base, branch),
-      manifestOf(fs, root, base).copy(mode = "branch").render))
+      forkOf(manifestOf(fs, root, base)).render))
       throw new java.util.ConcurrentModificationException(
         s"versioned branch: branch '$branch' creation raced at '$location'")
     graft.log.Log.info("versioned branch created",
@@ -1450,29 +1429,28 @@ object VersionedTable {
     // exactly-once for streaming foreachBatch INTO a branch: a replayed
     // (app, batch) — or any later batch of the same app — is skipped
     // before any data is staged (the [[commit]] txn contract)
+    val branchManifest = (v: Long) => manifestAt(fs, branchManifestPath(root, v, branch))
     txn.foreach { case (app, batch) =>
-      val replayedAt = lastTxn(branchVersions(spark, location, branch), app)(
-        v => manifestAt(fs, branchManifestPath(root, v, branch)))
-      replayedAt.foreach { case (lastBatch, atV) =>
-        if (lastBatch >= batch) {
+      txnsAt(branchVersions(spark, location, branch))(branchManifest).get(app)
+        .filter(_._1 >= batch).foreach { case (_, atV) =>
           graft.log.Log.info("versioned branch commit: txn replay skipped",
             "location" -> location, "branch" -> branch,
             "batch" -> batch.toString, "committed_at" -> s"v$atV")
           return atV
         }
-      }
     }
-    val (commitId, moved) = stageAndMove(fs, root, df, format, options)
+    val (written, _) = writeData(root, df, newCommitId(), Nil, format, options)
     var attempt = 0
     while (attempt < maxRetries) {
-      val head = branchVersions(spark, location, branch).last
+      val bvs = branchVersions(spark, location, branch)
+      val head = bvs.last
+      val headManifest = branchManifest(head)
       // an append carries the head's files, stats and DV by name
-      val carry =
-        if (mode == "append") Some(manifestAt(fs, branchManifestPath(root, head, branch)))
-        else None
+      val carry = if (mode == "append") Some(headManifest) else None
       if (writeManifestCas(fs, root, Manifest.next(head + 1, mode,
-        carry.fold(Seq.empty[(String, Long)])(_.files) ++ moved, txn,
-        carry.flatMap(_.statsFile), carry.flatMap(_.dv)), Some(branch))) {
+        carry.fold(Seq.empty[(String, Long)])(_.files) ++ written, txn,
+        carry.flatMap(_.statsFile), carry.flatMap(_.dv),
+        txnsAt(bvs)(v => if (v == head) headManifest else branchManifest(v))), Some(branch))) {
         graft.log.Log.info("versioned branch commit",
           "location" -> location, "branch" -> branch, "version" -> s"v${head + 1}")
         return head + 1
@@ -1517,15 +1495,17 @@ object VersionedTable {
     if (bvs.isEmpty) throw new graft.config.ConfigError(
       s"versioned publish: branch '$branch' does not exist at '$location'")
     val forkBase = bvs.head
-    val mainLatest = versions(spark, location).last
+    val mainVs = versions(spark, location)
+    val mainLatest = mainVs.last
     if (mainLatest != forkBase)
       throw new java.util.ConcurrentModificationException(
         s"versioned publish: serializable conflict at '$location' — branch " +
           s"'$branch' forked at v$forkBase but main is at v$mainLatest; " +
           "rebaseBranch (append-only staging) or re-fork and re-stage")
     val head = manifestAt(fs, branchManifestPath(root, bvs.last, branch))
+    // main's txns carry on; the branch's own stay on the branch
     if (!writeManifestCas(fs, root, Manifest.next(forkBase + 1, "publish",
-      head.files, None, head.statsFile, head.dv)))
+      head.files, None, head.statsFile, head.dv, txnsAt(mainVs)(manifestCache(fs, root)))))
       throw new java.util.ConcurrentModificationException(
         s"versioned publish: serializable conflict at '$location' — a " +
           s"concurrent commit won v${forkBase + 1}; re-fork and re-stage")
@@ -1575,12 +1555,12 @@ object VersionedTable {
     // manifests and the staged files were eligible for reclamation.
     // Temp names can't collide with old manifests even when the new
     // main head's version number overlaps the old staged range.
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
+    val uuid = newCommitId()
     val tmpBranch = s"$branch.rebase-$uuid"
-    publishNew(fs, root, branchManifestPath(root, mainLatest, tmpBranch),
-      head.copy(mode = "branch").render)
+    val fork = forkOf(head)
+    publishNew(fs, root, branchManifestPath(root, mainLatest, tmpBranch), fork.render)
     if (!writeManifestCas(fs, root, Manifest.next(mainLatest + 1, "append",
-      head.files ++ staged, None, head.statsFile, head.dv), Some(tmpBranch)))
+      head.files ++ staged, None, head.statsFile, head.dv, fork.txns.get), Some(tmpBranch)))
       throw new java.util.ConcurrentModificationException(
         s"versioned rebase: branch '$branch' raced at '$location'")
     // COMMIT MARKER: from this instant the rebase is DECIDED — a crash
@@ -1856,9 +1836,11 @@ object VersionedTable {
         "location" -> location, "version" -> s"v$latest")
       return latest
     }
-    val target = manifestOf(fs, root, toVersion)
+    val manifest = manifestCache(fs, root)
+    val target = manifest(toVersion)
+    // the log's txns are history, not table content: they carry from the head
     if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "restore",
-      target.files, None, target.statsFile, target.dv)))
+      target.files, None, target.statsFile, target.dv, txnsAt(vs)(manifest))))
       throw new java.util.ConcurrentModificationException(
         s"versioned restore: serializable conflict at '$location' — a " +
           s"concurrent commit won v${latest + 1}; re-inspect and re-restore")
@@ -1913,7 +1895,9 @@ object VersionedTable {
     * AGE-GATED — files no manifest ever referenced. The age gate
     * (`minOrphanAgeMillis`, default 10 min) is what makes vacuum safe
     * beside LIVE writers: a commit's files sit unreferenced in `data/`
-    * between stageAndMove and its manifest CAS, and deleting them there
+    * from the moment its write job creates them until its manifest CAS
+    * (and forever, when a task attempt or the CAS fails), and deleting
+    * them inside that window
     * would let the commit publish a manifest pointing at nothing (the
     * Delta retention-window rule). Files referenced by a DROPPED
     * manifest were committed — their writer is done — so they reclaim

@@ -1,10 +1,16 @@
 package org.apache.spark.sql
 
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, DataSource, FileFormat, FileFormatWriter, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.v2.FileDataSourceV2
+import org.apache.spark.util.SerializableConfiguration
 
 /** The `private[sql]` doorways graft needs: turn a hand-built
   * LogicalPlan into a DataFrame, parse SQL with the session's parser,
-  * and build the Hadoop conf a file read runs with. Lives in
+  * build the Hadoop conf a file read runs with, and write a frame's
+  * files through a caller's commit protocol. Lives in
   * `org.apache.spark.sql` for the access scope only — the standard
   * pattern for Spark-extension libraries that contribute their own plan
   * nodes (no Spark internals are modified or shadowed here).
@@ -26,4 +32,44 @@ object GraftSqlBridge {
   def newHadoopConf(spark: SparkSession,
                     options: Map[String, String]): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConfWithOptions(options)
+
+  /** The file format `format` names, as `df.write.format(format)`
+    * resolves it (a v2 file source falls back to its v1 format); None
+    * when it is not a file format. */
+  def fileFormat(spark: SparkSession, format: String): Option[FileFormat] =
+    DataSource.lookupDataSource(format, spark.asInstanceOf[classic.SparkSession].sessionState.conf)
+      .getConstructor().newInstance() match {
+      case f: FileFormat => Some(f)
+      case v2: FileDataSourceV2 => Some(v2.fallbackFileFormat.getConstructor().newInstance())
+      case _ => None
+    }
+
+  /** Write `df`'s rows as unpartitioned `fileFormat` files under `dir`
+    * with `committer` naming and committing them — the same
+    * `FileFormatWriter` job `df.write.save` runs, with the caller's
+    * commit protocol and stats trackers beside Spark's own (which keeps
+    * the task output metrics). One SQL execution on `df`'s own
+    * QueryExecution, so QueryExecutionListeners and Observations see the
+    * write exactly once. */
+  def writeFiles(df: DataFrame, fileFormat: FileFormat, options: Map[String, String],
+                 dir: String, committer: FileCommitProtocol,
+                 trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    util.SchemaUtils.checkColumnNameDuplication(df.columns.toSeq,
+      spark.sessionState.conf.caseSensitiveAnalysis)
+    SQLExecution.withNewExecutionId(qe, Some("save")) {
+      val plan = qe.executedPlan
+      plan.resetMetrics()
+      val output = plan.output.zip(df.schema.fieldNames).map { case (a, n) => a.withName(n) }
+      FileFormatWriter.write(spark, plan, fileFormat, committer,
+        FileFormatWriter.OutputSpec(dir, Map.empty, output), hadoopConf,
+        partitionColumns = Nil, bucketSpec = None,
+        statsTrackers = trackers :+ new BasicWriteJobStatsTracker(
+          new SerializableConfiguration(hadoopConf), BasicWriteJobStatsTracker.metrics),
+        options = options): Unit
+    }
+  }
 }

@@ -131,4 +131,76 @@ class BookmarksSpec extends SparkSpec {
     assert(fresh.load()("s1").seen.keySet == p1.files.toSet)
     assert(fresh.plan("s1", src).files.isEmpty)
   }
+
+  /** A landing layout with nested and hidden directories and files;
+    * plan lists files only, so their bytes need not be parquet. */
+  private def layout(src: String): Unit =
+    Seq("a.parquet", "x/b.parquet", "x/y/c.parquet", "x/y/z/d.parquet",
+      "_temporary/0/e.parquet", ".staging/f.parquet", "x/_tmp/g.parquet", "x/.h/y/h.parquet",
+      "x/_SUCCESS", "x/.i.parquet", "x/y/_j", "k.parquet").zipWithIndex.foreach { case (n, i) =>
+      val f = java.nio.file.Paths.get(src, n)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.write(f, Array[Byte](1, 2, 3))
+      f.toFile.setLastModified(1000000L + i * 1000L)
+    }
+
+  test("plans are unchanged for nested and hidden layouts") {
+    val (store, src, _) = setup()
+    layout(src)
+    // the listing the plan used to take: recursive located statuses,
+    // minus anything under a hidden path component below the root
+    val fs = new org.apache.hadoop.fs.Path(src).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(new org.apache.hadoop.fs.Path(src))
+    val it = fs.listFiles(root, true)
+    val reference = Map.newBuilder[String, Long]
+    while (it.hasNext) {
+      val st = it.next()
+      val below = st.getPath.toString.stripPrefix(root.toString).split('/').filter(_.nonEmpty)
+      if (!below.exists(c => c.startsWith("_") || c.startsWith(".")))
+        reference += st.getPath.toString -> st.getModificationTime
+    }
+    val p = store.plan("s1", src)
+    assert(p.planned == reference.result())
+    assert(p.files.map(_.stripPrefix(root.toString)) ==
+      Seq("/a.parquet", "/k.parquet", "/x/b.parquet", "/x/y/c.parquet", "/x/y/z/d.parquet"))
+    assert(p.newWatermark == 1000000L + 11 * 1000L)
+  }
+
+  test("plan reads no file's permission, owner or group") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    PermissionCountingFileSystem.install(conf)
+    try {
+      val (store, src, _) = setup()
+      layout(src)
+      PermissionCountingFileSystem.reads.set(0)
+      val p = store.plan("s1", s"${PermissionCountingFileSystem.Scheme}://$src")
+      assert(p.files.size == 5)
+      assert(PermissionCountingFileSystem.reads.get == 0)
+    } finally PermissionCountingFileSystem.uninstall(conf)
+  }
+
+  test("a save that dies mid-write leaves the previous state loadable") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    FailingWriteFileSystem.install(conf)
+    try {
+      val (_, src, tmp) = setup()
+      val stateDir = java.nio.file.Files.createDirectories(tmp.resolve("state"))
+      val store = new BookmarkStore(spark, s"${FailingWriteFileSystem.Scheme}://$stateDir/state.json")
+      layout(src)
+      store.commit(store.plan("s1", src))
+      val before = store.load()
+      assert(before("s1").seen.size == 5)
+      java.nio.file.Files.write(java.nio.file.Paths.get(src, "late.parquet"), Array[Byte](1))
+      val next = store.plan("s1", src)
+      assert(next.files.size == 1)
+      FailingWriteFileSystem.failAfter = 20
+      try intercept[java.io.IOException](store.commit(next))
+      finally FailingWriteFileSystem.failAfter = -1
+      assert(store.load() == before)
+      assert(stateDir.toFile.list().toSeq == Seq("state.json"), "the failed temp file is gone")
+      // the next save goes through
+      store.commit(next)
+      assert(store.load() != before && store.plan("s1", src).files.isEmpty)
+    } finally FailingWriteFileSystem.uninstall(conf)
+  }
 }

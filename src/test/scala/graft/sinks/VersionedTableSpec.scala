@@ -1516,4 +1516,400 @@ class VersionedTableSpec extends SparkSpec {
     assert("""writeStatsFile\(""".r.findAllIn(src).size == 2)
     assert("schema drift at".r.findAllIn(src).size == 1)
   }
+
+  // ------------------------------------------------ the one-job write path
+
+  /** The read-back stats query the in-task stats replaced, kept as their
+    * oracle: `groupBy(input_file_name())` over the data files `names`,
+    * rendered as the sidecar lines (zone maps, row counts, bitmaps for
+    * integral and string columns), in sidecar order. */
+  private def oracleSidecar(loc: String, names: Seq[String], cols: Seq[String]): Seq[String] = {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    val df = spark.read.parquet(names.map(n => s"$loc/data/$n"): _*)
+    val bitmapCols = cols.filter(c => df.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType | StringType => true
+      case _ => false
+    }).toSet
+    val aggs = count(lit(1)).as("__rows") +: cols.flatMap(c => Seq(
+      min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
+      sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c")) ++
+      (if (bitmapCols(c)) Seq(collect_set(pmod(hash(col(c).cast("string")), lit(4096)))
+        .as(s"__set_$c")) else Nil))
+    val got = df.groupBy(input_file_name().as("__file")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.map(r => (new org.apache.hadoop.fs.Path(r.getAs[String]("__file")).getName, r))
+    def str(x: String) = graft.util.Json.str(x)
+    def bitmap(bs: Iterable[Int]) = {
+      val bytes = new Array[Byte](512)
+      bs.foreach(b => bytes(b >> 3) = (bytes(b >> 3) | (1 << (b & 7))).toByte)
+      java.util.Base64.getEncoder.encodeToString(bytes)
+    }
+    got.flatMap { case (f, r) => cols.map { c =>
+      ((f, c), s"""{"name":${str(f)},"col":${str(c)},"min":${VersionedTable.canonToken(r.getAs[Any](s"__min_$c"))},""" +
+        s""""max":${VersionedTable.canonToken(r.getAs[Any](s"__max_$c"))},"nulls":${Option(r.getAs[Any](s"__nulls_$c")).fold(0L)(_.toString.toLong)}}""")
+    } }.sortBy(_._1).map(_._2) ++
+      got.sortBy(_._1).map { case (f, r) => s"""{"name":${str(f)},"rows":${r.getAs[Long]("__rows")}}""" } ++
+      got.flatMap { case (f, r) => cols.filter(bitmapCols).map { c =>
+        ((f, c), s"""{"name":${str(f)},"col":${str(c)},"buckets":${str(bitmap(r.getAs[Iterable[Int]](s"__set_$c")))}}""")
+      } }.sortBy(_._1).map(_._2)
+  }
+
+  private def headManifest(loc: String): VersionedTable.Manifest = {
+    val v = VersionedTable.versions(spark, loc).last
+    VersionedTable.Manifest.parse(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(f"$loc/_graft_log/v$v%05d.json")), "UTF-8"))
+  }
+
+  test("write path: the in-task sidecar equals the read-back stats query") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("b", ByteType), StructField("s", ShortType), StructField("i", IntegerType),
+      StructField("l", LongType), StructField("f", FloatType), StructField("d", DoubleType),
+      StructField("dec", DecimalType(10, 2)), StructField("str", StringType),
+      StructField("dt", DateType), StructField("ts", TimestampType)))
+    def row(n: Int, d: java.lang.Double, str: String) = Row(n.toByte, (n * 300).toShort, n * 70000,
+      n * 5000000000L, n / 10.0f, d, java.math.BigDecimal.valueOf(n * 125L, 2), str,
+      java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(n)),
+      java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + n * 3601L, n * 1000L)))
+    val odd = "q\"b\\c\nd\u2028e"
+    // three files: values with nulls and -0.0/0.0 in both orders;
+    // negatives; one file where every column is null
+    val parts = Seq(
+      Seq(row(3, -0.0, odd), row(1, 0.0, "b"), Row.fromSeq(Seq.fill(10)(null)), row(7, 2.5, "a")),
+      Seq(row(-4, 0.0, "zz"), row(-9, -0.0, odd + "x"), row(2, -1e300, "")),
+      Seq(Row.fromSeq(Seq.fill(10)(null)), Row.fromSeq(Seq.fill(10)(null))))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(parts, 3)
+      .mapPartitions(_.flatten), schema)
+    val loc = tmp("oracle")
+    val cols = schema.fieldNames.toSeq
+    VersionedTable.commit(spark, loc, df, "overwrite", statsColumns = cols)
+    val m = headManifest(loc)
+    assert(m.files.size == 3)
+    val sidecar = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$loc/_graft_log/${m.statsFile.get}")), "UTF-8")
+    val expected = oracleSidecar(loc, m.names, cols)
+    assert(expected.count(_.contains("\"buckets\"")) == 3 * 5, "the bitmap kinds got bitmaps")
+    assert(sidecar.split('\n').toSeq == expected)
+    // an append writes the new files' stats the same way, beside the
+    // carried ones; an empty frame's file holds no rows and gets none
+    VersionedTable.commit(spark, loc, df.limit(2).coalesce(1), "append", statsColumns = cols)
+    VersionedTable.commit(spark, loc, df.limit(0), "append", statsColumns = cols)
+    val m3 = headManifest(loc)
+    val sidecar3 = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$loc/_graft_log/${m3.statsFile.get}")), "UTF-8")
+    assert(m3.files.size == 5)
+    assert(sidecar3.split('\n').toSeq == oracleSidecar(loc, m3.names, cols))
+    // NaN has no canonical token: the commit fails as the read-back
+    // query's tokens did, and publishes nothing
+    val nan = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1.0), Row(Double.NaN)), 1), StructType(Seq(StructField("d", DoubleType))))
+    val nanLoc = tmp("oracle-nan")
+    intercept[NumberFormatException](
+      VersionedTable.commit(spark, nanLoc, nan, "overwrite", statsColumns = Seq("d")))
+    assert(VersionedTable.versions(spark, nanLoc).isEmpty)
+    intercept[NumberFormatException](oracleSidecar(nanLoc,
+      new java.io.File(s"$nanLoc/data").list().filter(_.endsWith(".parquet")).toSeq, Seq("d")))
+    // a stats column the frame lacks fails before any file is written
+    val missLoc = tmp("oracle-miss")
+    val e = intercept[graft.config.ConfigError](VersionedTable.commit(spark, missLoc,
+      Seq((1, "a")).toDF("k", "v"), "overwrite", statsColumns = Seq("nope")))
+    assert(e.getMessage.contains("stats columns nope not in the frame (has: k, v)"))
+    assert(new java.io.File(s"$missLoc/data").list().isEmpty)
+  }
+
+  test("write path: data files go straight into data/ under final names, nothing staged") {
+    val loc = tmp("final-names")
+    VersionedTable.commit(spark, loc, (1 to 30).map(i => (i, s"v$i")).toDF("k", "v")
+      .repartition(3), "overwrite", statsColumns = Seq("k"))
+    VersionedTable.merge(spark, loc, Seq((2, "m")).toDF("k", "v"), Seq("k"), statsColumns = Seq("k"))
+    val m = headManifest(loc)
+    val FinalName = """[0-9a-f]{8}-part-[0-9]{5}-[0-9a-f-]{36}-c000\.snappy\.parquet""".r
+    assert(m.names.forall(FinalName.pattern.matcher(_).matches()), m.names)
+    // no stage dir, no committer leftovers at the root or in data/
+    assert(new java.io.File(loc).list().toSet == Set("data", "_graft_log"))
+    assert(new java.io.File(s"$loc/data").list().forall(n =>
+      n.endsWith(".parquet") || n.endsWith(".parquet.crc")))
+    // the recorded bytes are the files' sizes
+    m.files.foreach { case (n, b) => assert(new java.io.File(s"$loc/data/$n").length == b) }
+  }
+
+  /** Every data file referenced by some main manifest of `loc`. */
+  private def referenced(loc: String): Set[String] =
+    new java.io.File(s"$loc/_graft_log").listFiles().toSeq
+      .filter(f => f.getName.matches("v[0-9]+\\.json"))
+      .flatMap(f => VersionedTable.Manifest.parse(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).names).toSet
+
+  private def dataNames(loc: String): Set[String] =
+    dataFiles(loc).map(p => new java.io.File(p).getName).toSet
+
+  test("crash window: a task attempt failing mid-file leaves no file behind or referenced") {
+    import org.apache.spark.sql.functions._
+    val loc = tmp("crash-task")
+    VersionedTable.commit(spark, loc, Seq((1, "a"), (2, "b")).toDF("k", "v"), "overwrite",
+      statsColumns = Seq("k"))
+    VersionedTable.commit(spark, loc, Seq((3, "c")).toDF("k", "v"), "append",
+      statsColumns = Seq("k"))
+    val before = (1L to 2L).map(v => rows(VersionedTable.read(spark, loc, asOf = Some(v))))
+    val filesBefore = dataNames(loc)
+    // one task: 2000 rows reach the writer, then the frame throws
+    val boom = udf((k: Long) => { if (k == 2000L) throw new IllegalStateException("boom"); k })
+    val failing = spark.range(0, 4000, 1, 1)
+      .select(boom(col("id")).cast("int").as("k"), lit("x").as("v"))
+    // the merge's arrivals are sound; its one write task fails mid-file
+    val failOnWrite = (df: org.apache.spark.sql.DataFrame) =>
+      df.coalesce(1).withColumn("k", boom(col("k").cast("long")).cast("int"))
+    Seq("append" -> (() => VersionedTable.commit(spark, loc, failing, "append",
+        statsColumns = Seq("k"))),
+      "merge" -> (() => VersionedTable.merge(spark, loc,
+        spark.range(0, 4000, 1, 1).select(col("id").cast("int").as("k"), lit("x").as("v")),
+        Seq("k"), statsColumns = Seq("k"), publishTransform = failOnWrite))).foreach { case (what, op) =>
+      val e = intercept[Exception](op())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => String.valueOf(x.getMessage).contains("boom")), s"$what: $e")
+    }
+    assert(VersionedTable.versions(spark, loc) == Seq(1L, 2L))
+    // the failed attempts deleted their partial files: data/ holds
+    // exactly the committed files, every one of them referenced
+    assert(dataNames(loc) == filesBefore && referenced(loc) == filesBefore)
+    assert((1L to 2L).map(v => rows(VersionedTable.read(spark, loc, asOf = Some(v)))) == before)
+  }
+
+  test("crash window: a lost CAS leaves only unreferenced files; vacuum's age gate keeps then reclaims them") {
+    val loc = tmp("crash-cas")
+    VersionedTable.commit(spark, loc, (1 to 20).map(i => (i, s"v$i")).toDF("k", "v"),
+      "overwrite", statsColumns = Seq("k"))
+    VersionedTable.commit(spark, loc, Seq((30, "c")).toDF("k", "v"), "append",
+      statsColumns = Seq("k"))
+    val before = (1L to 2L).map(v => rows(VersionedTable.read(spark, loc, asOf = Some(v))))
+    val committed = dataNames(loc)
+    val losing = new CommitCoordinator {
+      def publish(fs: org.apache.hadoop.fs.FileSystem, logDir: org.apache.hadoop.fs.Path,
+                  dst: org.apache.hadoop.fs.Path, content: Array[Byte]): Boolean = false
+    }
+    val prev = VersionedTable.commitCoordinator
+    VersionedTable.setCommitCoordinator(losing)
+    try {
+      intercept[java.util.ConcurrentModificationException](VersionedTable.merge(spark, loc,
+        Seq((5, "m"), (40, "n")).toDF("k", "v"), Seq("k"), statsColumns = Seq("k")))
+      intercept[java.io.IOException](VersionedTable.commit(spark, loc,
+        Seq((50, "x")).toDF("k", "v"), "append", maxRetries = 2))
+    } finally VersionedTable.setCommitCoordinator(prev)
+    val orphans = dataNames(loc) -- committed
+    assert(orphans.nonEmpty && (orphans & referenced(loc)).isEmpty)
+    assert(VersionedTable.versions(spark, loc) == Seq(1L, 2L))
+    assert((1L to 2L).map(v => rows(VersionedTable.read(spark, loc, asOf = Some(v)))) == before)
+    // inside the age gate vacuum keeps them (a live writer's files look the same) ...
+    val kept = VersionedTable.vacuumVersions(spark, loc, 1L)
+    assert(!kept.exists(d => orphans.exists(o => d == s"data/$o")))
+    assert(dataNames(loc) == committed ++ orphans)
+    // ... past it, it reclaims exactly them
+    val reclaimed = VersionedTable.vacuumVersions(spark, loc, 1L, minOrphanAgeMillis = 0L)
+    assert(reclaimed.filter(_.startsWith("data/")).toSet == orphans.map(o => s"data/$o"))
+    assert(dataNames(loc) == committed)
+    assert((1L to 2L).map(v => rows(VersionedTable.read(spark, loc, asOf = Some(v)))) == before)
+  }
+
+  /** The Spark jobs `body` started (as [[jobsStarted]] counts them) and
+    * how many of those wrote bytes, by their tasks' output metrics. */
+  private def writeJobsStarted(body: => Any): (Int, Int) = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val group = s"writes-${java.util.UUID.randomUUID()}"
+    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val writers = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.add(e.jobId)
+          e.stageIds.foreach(stageJob.put(_, e.jobId))
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(stageJob.get(e.stageId)).foreach { j =>
+          if (e.taskMetrics != null && e.taskMetrics.outputMetrics.bytesWritten > 0)
+            writers.add(j): Unit
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "writeJobsStarted")
+      try body finally sc.clearJobGroup()
+      org.apache.spark.GraftTestBus.drain(sc)
+      (jobs.size, writers.size)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("one Spark job per versioned write: an append commit and a stats merge start one write job") {
+    val k = Seq("k")
+    def table(name: String) = {
+      val loc = tmp(name)
+      VersionedTable.commit(spark, loc, (1 to 20).map(i => (i, s"v$i")).toDF("k", "v")
+        .coalesce(1), "overwrite", statsColumns = k)
+      loc
+    }
+    val loc = table("onejob")
+    // a local frame: its write is the only job the commit starts
+    val append = writeJobsStarted(VersionedTable.commit(spark, loc,
+      Seq((21, "a"), (22, "b")).toDF("k", "v"), "append", statsColumns = k))
+    assert(append == ((1, 1)))
+    // the merge's own queries (arrival bounds, the rewrite's join) run
+    // either way; its zone maps add no job, and one job writes
+    val arrivals = Seq((3, "m"), (25, "n")).toDF("k", "v")
+    val (withLoc, withoutLoc) = (table("onejob-s"), table("onejob-n"))
+    val withStats = writeJobsStarted(VersionedTable.merge(spark, withLoc,
+      arrivals, k, statsColumns = k))
+    val without = writeJobsStarted(VersionedTable.merge(spark, withoutLoc, arrivals, k))
+    assert(withStats._2 == 1 && withStats == without, (withStats, without))
+  }
+
+  /** Subprocesses started while `body` ran whose stack passes through
+    * graft code (a JFR recording of `jdk.ProcessStart`); a truncated
+    * stack on the calling thread counts too, as it may hide a graft
+    * frame. */
+  private def forksFromGraft(body: => Any): Int = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart").withStackTrace()
+    val caller = Thread.currentThread().getId
+    rec.start()
+    try body finally rec.stop()
+    val out = java.nio.file.Files.createTempFile("forks", ".jfr")
+    try {
+      rec.dump(out)
+      jdk.jfr.consumer.RecordingFile.readAllEvents(out).asScala.count { e =>
+        val st = Option(e.getStackTrace)
+        st.exists(_.getFrames.asScala.exists(_.getMethod.getType.getName.startsWith("graft."))) ||
+          (st.forall(_.isTruncated) && Option(e.getThread).exists(_.getJavaThreadId == caller))
+      }
+    } finally { rec.close(); java.nio.file.Files.deleteIfExists(out): Unit }
+  }
+
+  test("no subprocess from graft code: append commit, merge without DV, bookmark plan + commit") {
+    val k = Seq("k")
+    val loc = tmp("forks")
+    val bmDir = java.nio.file.Files.createTempDirectory("forks-bm").toString
+    val store = new graft.bookmarks.BookmarkStore(spark, s"$bmDir/_bookmarks/state.json")
+    var n = 0
+    def landFile(): Unit = {
+      n += 1
+      Seq(n).toDF("n").coalesce(1).write.parquet(s"$bmDir/landing/batch-$n")
+    }
+    val ops = Seq[(String, () => Any)](
+      "append commit" -> (() => VersionedTable.commit(spark, loc,
+        Seq((100 + n, "a")).toDF("k", "v"), "append", statsColumns = k)),
+      "merge" -> (() => VersionedTable.merge(spark, loc,
+        Seq((1, "m"), (200 + n, "x")).toDF("k", "v"), k, statsColumns = k)),
+      "bookmark plan + commit" -> (() => store.commit(store.plan("src", s"$bmDir/landing"))))
+    VersionedTable.commit(spark, loc, (1 to 20).map(i => (i, s"v$i")).toDF("k", "v"),
+      "overwrite", statsColumns = k)
+    // once untraced: one-time class initialisation may start processes
+    landFile(); ops.foreach(_._2())
+    landFile(); landFile()
+    val forks = ops.map { case (what, op) => what -> forksFromGraft(op()) }
+    assert(forks.forall(_._2 == 0), forks)
+    // the recorder does see graft-started subprocesses: without the
+    // native library, Hadoop's local create runs chmod
+    if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) {
+      val local = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      assert(forksFromGraft(local.create(new org.apache.hadoop.fs.Path(s"$bmDir/probe"), true)
+        .close()) > 0)
+    }
+  }
+
+  test("rename coordinator: two writers racing for one version on a local disk, one winner every round") {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val logDir = new org.apache.hadoop.fs.Path(
+      java.nio.file.Files.createTempDirectory("cas-race").toUri)
+    val coord = VersionedTable.commitCoordinator
+    assert(coord eq RenameCommitCoordinator)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val badRounds = (1 to 200).filterNot { round =>
+        val dst = new org.apache.hadoop.fs.Path(logDir, f"v$round%05d.json")
+        val barrier = new java.util.concurrent.CyclicBarrier(2)
+        val results = (0 until 2).map { w =>
+          pool.submit(new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = {
+              barrier.await()
+              coord.publish(fs, logDir, dst, s"writer-$w".getBytes("UTF-8"))
+            }
+          })
+        }.map(_.get)
+        val content = new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(dst.toUri)), "UTF-8")
+        results.count(identity) == 1 && content == s"writer-${results.indexOf(true)}"
+      }
+      assert(badRounds.isEmpty, s"rounds without exactly one winner: $badRounds")
+      // nothing but the published versions is left behind
+      assert(new java.io.File(logDir.toUri).list().toSeq.sorted ==
+        (1 to 200).map(r => f"v$r%05d.json"))
+    } finally pool.shutdown()
+  }
+
+  test("txn check: one manifest open for a txn commit after 20 other-app commits") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    CountingFileSystem.install(conf)
+    try {
+      val loc = s"${CountingFileSystem.Scheme}://" + tmp("txn-opens")
+      val df = Seq((1, "a")).toDF("k", "v")
+      VersionedTable.commit(spark, loc, df, "overwrite")
+      (1 to 20).foreach(b => VersionedTable.commit(spark, loc, df, "append", txn = Some(("other", b))))
+      def manifestOpens(op: => Long): (Long, Int) = {
+        CountingFileSystem.reset()
+        val v = op
+        (v, CountingFileSystem.opens.collect { case (n, c) if n.matches("v[0-9]+\\.json") => c }.sum)
+      }
+      assert(manifestOpens(VersionedTable.commit(spark, loc, df, "append",
+        txn = Some(("mine", 1L)))) == ((22L, 1)))
+      // replays answer from the head's map: the version that holds the batch
+      assert(manifestOpens(VersionedTable.commit(spark, loc, df, "append",
+        txn = Some(("mine", 1L)))) == ((22L, 1)))
+      assert(manifestOpens(VersionedTable.commit(spark, loc, df, "append",
+        txn = Some(("other", 5L)))) == ((21L, 1)))
+      assert(VersionedTable.versions(spark, loc).last == 22L)
+    } finally CountingFileSystem.uninstall(conf)
+  }
+
+  test("manifest record: the txns map renders, parses and carries forward") {
+    import VersionedTable.Manifest
+    val odd = "q\"b\\c\nd\u007fe\u2028f"
+    val m = Manifest(8L, Some(1792303411000L), "append", Some((s"app-$odd", 43L)), None, None,
+      Seq(("ab12cd34-part-00000.parquet", 456L)),
+      Some(Map(s"app-$odd" -> ((43L, 8L)), "other" -> ((2L, 5L)))))
+    val bytes = """{"version":8,"ts":1792303411000,"mode":"append","txn_app":"app-q\"b\\c\nd%u007fe%u2028f","txn_batch":43,"txns":{"app-q\"b\\c\nd%u007fe%u2028f":[43,8],"other":[2,5]},"n_files":1,"files":[{"name":"ab12cd34-part-00000.parquet","bytes":456}]}"""
+      .replace("%u", "\\u")
+    assert(m.render == bytes)
+    assert(Manifest.parse(bytes) == m)
+    val empty = m.copy(txn = None, txns = Some(Map.empty))
+    assert(empty.render.contains(""""mode":"append","txns":{},"n_files":1"""))
+    assert(Manifest.parse(empty.render) == empty)
+    // a new manifest carries its parent's map plus its own txn
+    assert(Manifest.next(9L, "append", Nil, txn = Some(("other", 3L)), carried = m.txns.get).txns ==
+      Some(Map(s"app-$odd" -> ((43L, 8L)), "other" -> ((3L, 9L)))))
+    assert(Manifest.next(9L, "merge", Nil).txns == Some(Map.empty))
+  }
+
+  test("manifests written before the txns map keep the walk; the next commit carries the full map") {
+    val loc = tmp("txn-legacy")
+    val df = Seq((1, "a")).toDF("k", "v")
+    VersionedTable.commit(spark, loc, df, "overwrite", txn = Some(("a", 1L)))
+    VersionedTable.commit(spark, loc, df, "append", txn = Some(("b", 7L)))
+    VersionedTable.commit(spark, loc, df, "append")
+    // rewrite the log as the earlier writer left it: no txns field
+    (1L to 3L).foreach { v =>
+      val f = java.nio.file.Paths.get(f"$loc/_graft_log/v$v%05d.json")
+      val m = VersionedTable.Manifest.parse(new String(java.nio.file.Files.readAllBytes(f), "UTF-8"))
+      java.nio.file.Files.write(f, m.copy(txns = None).render.getBytes("UTF-8"))
+    }
+    assert(headManifest(loc).txns.isEmpty)
+    // the replay checks walk back to the older manifests' own txns
+    assert(VersionedTable.commit(spark, loc, df, "append", txn = Some(("a", 1L))) == 1L)
+    assert(VersionedTable.commit(spark, loc, df, "append", txn = Some(("b", 7L))) == 2L)
+    assert(VersionedTable.commit(spark, loc, df, "append", txn = Some(("c", 1L))) == 4L)
+    assert(headManifest(loc).txns == Some(Map("a" -> ((1L, 1L)), "b" -> ((7L, 2L)),
+      "c" -> ((1L, 4L)))))
+    assert(VersionedTable.commit(spark, loc, df, "append", txn = Some(("b", 6L))) == 2L)
+  }
 }
