@@ -228,7 +228,16 @@ object Dedup {
     * viral boilerplate family emits |family|² pairs (ScaleCheck: ~9× per
     * 10× duplicated-content growth). At corpus scale prefer
     * [[minhashLshCapped]], which bounds the fan-out and routes oversized
-    * families to a whole-family report instead. */
+    * families to a whole-family report instead.
+    *
+    * Spread rule: an input on fewer partitions than the session's task
+    * slots (`defaultParallelism`) — a one-file batch is one partition —
+    * is repartitioned to that many before the shingle sets, so the
+    * per-document shingle, signature and band projections run on every
+    * slot. An input with enough partitions (the corpus-scale case), or
+    * one whose count cannot be read from its planned scan, is used as
+    * is. The output is a set of pairs, so it does not depend on the
+    * partitioning. */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, k: Int = 128, bands: Int = 32,
                  threshold: Double = 0.8): DataFrame = {
@@ -238,13 +247,44 @@ object Dedup {
     // intermediate is ~hash-sized (≈1 KB/doc); MEMORY_AND_DISK spills
     // rather than OOMs, and is the standard shape for any multi-pass
     // sketch algorithm.
-    val sets = shingleSets(docs, idCol, textCol, n)
+    val sets = shingleSets(spread(docs), idCol, textCol, n)
     graft.util.Caching.leased(sets) {
       val candidates = lshCandidates(signaturesFromSets(sets, k), bands)
       jaccardVerify(candidates, sets)
         .filter(col("jaccard") >= threshold)
         .withColumn("jaccard", round(col("jaccard"), 6))
     }
+  }
+
+  /** `docs` over every task slot: repartitioned to the session's
+    * `defaultParallelism` when its planned scan has fewer partitions
+    * (see [[minhashLsh]]), else unchanged. */
+  private def spread(docs: DataFrame): DataFrame = {
+    val slots = docs.sparkSession.sparkContext.defaultParallelism
+    scanPartitions(docs) match {
+      case Some(p) if p < slots =>
+        graft.log.Log.info("minhashLsh spreads its input",
+          "partitions" -> p.toString, "slots" -> slots.toString)
+        docs.repartition(slots)
+      case _ => docs
+    }
+  }
+
+  /** Partition count of a frame that is one scan under row-wise
+    * operators (projections, filters): a file scan or an existing RDD.
+    * It is read off `df`'s own planned scan (planned once per frame, and
+    * not again if already planned), which runs no job or SQL execution;
+    * None for any other plan. */
+  private def scanPartitions(df: DataFrame): Option[Int] = {
+    import org.apache.spark.sql.execution._
+    def scan(p: SparkPlan): Option[Int] = p match {
+      case s: FileSourceScanExec => Some(s.inputRDD.getNumPartitions)
+      case s: RDDScanExec => Some(s.rdd.getNumPartitions)
+      case _: ProjectExec | _: FilterExec | _: WholeStageCodegenExec | _: InputAdapter |
+           _: ColumnarToRowExec => scan(p.children.head)
+      case _ => None
+    }
+    scan(df.queryExecution.executedPlan)
   }
 
   // ------------------------------------------------- persisted LSH index
@@ -1277,8 +1317,13 @@ object Dedup {
     * sizes AQE re-measures anyway. */
   private def materializeReset(df: DataFrame): (DataFrame, DataFrame) = {
     val cp = df.localCheckpoint(true)
-    (cp.sparkSession.createDataFrame(cp.rdd, cp.schema), cp)
+    (reset(cp), cp)
   }
+
+  /** The stats-reset frame over an existing checkpoint (see
+    * [[materializeReset]]). */
+  private def reset(cp: DataFrame): DataFrame =
+    cp.sparkSession.createDataFrame(cp.rdd, cp.schema)
 
   /** Connected components over a near-dup pair graph — the transitive
     * closure that turns pairwise matches ([[minhashLsh]], [[jaccardPairs]],
@@ -1324,6 +1369,21 @@ object Dedup {
     * LOUDLY instead of returning a partially-contracted edge set as if
     * it were the answer.
     *
+    * Size-adaptive finish: the canonical edge set is materialized once
+    * (eager localCheckpoint) and sized on the driver from its
+    * block-manager bytes, which needs no job. When those bytes are at
+    * most the session's `spark.sql.autoBroadcastJoinThreshold` (and the
+    * id type is integral or a binary-collated string, whose order the
+    * driver reproduces exactly), the edges are collected and finished by
+    * union-find on the driver (min-id root, path compression), the way
+    * AQE turns a small join side into a broadcast: the result is `docs`
+    * left-joined to a local (id, label, size) relation, with no
+    * contraction round, probe or label aggregation. A threshold ≤ 0
+    * forces the distributed rounds below, which start from that same
+    * checkpoint, so the pairs plan never runs twice. Both paths return
+    * the same rows: the fixpoint is unique. The `clusters converged` log
+    * event records the path, rounds, edge rows and sized bytes.
+    *
     * Scale shape: every per-round operation is keyed on the EDGE set,
     * whose size is the number of near-dup pairs, orders of magnitude
     * below corpus size, and never grows past the undirected edge count
@@ -1340,20 +1400,73 @@ object Dedup {
     * method's doc. */
   def clusters(docs: DataFrame, idCol: String, pairs: DataFrame,
                maxIters: Int = 50): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+    val spark = docs.sparkSession
     // Canonical edge set: one row per pair, LARGER endpoint first, no
     // self-loops. ONE traversal of the (often expensive: LSH/SNM-derived)
-    // pairs plan; no pre-distinct — duplicate pairs cannot change any
-    // window minimum, and round 1's closing distinct dedups them for
-    // every later round. The frame is consumed exactly once (inside
-    // round 1's materialization), so unlike the r14 hop scheme nothing
-    // is persisted up front.
+    // pairs plan, materialized here whichever path finishes; no
+    // pre-distinct — duplicate pairs cannot change any window minimum or
+    // union-find root, and round 1's closing distinct dedups them for
+    // every later round. The observation counts the rows in the same job.
+    val observed = s"clusters_edges_${edgeSets.incrementAndGet()}"
     val e0 = pairs.select(
         greatest(col("doc_a"), col("doc_b")).as("u"),
         least(col("doc_a"), col("doc_b")).as("v"))
       .where(col("u") =!= col("v"))
-    var edges = e0
-    var edgesCp: DataFrame = null
+      .observe(observed, count(lit(1)).as("n"))
+    val e0Cp = e0.localCheckpoint(true)
+    val bytes = graft.util.Caching.checkpointBytes(e0Cp)
+    val bound = org.apache.spark.sql.GraftSqlBridge.sqlConf(spark).autoBroadcastJoinThreshold
+    def logConverged(path: String, rounds: Int, edges: Long): Unit =
+      graft.log.Log.info("clusters converged", "path" -> path,
+        "rounds" -> rounds.toString, "max_iters" -> maxIters.toString,
+        "edges" -> edges.toString, "edge_bytes" -> bytes.toString,
+        "bound_bytes" -> bound.toString)
+    val order = idOrdering(e0Cp.schema("u").dataType)
+    if (bound > 0 && bytes <= bound && order.isDefined) {
+      val edges = e0Cp.collect()
+      graft.util.Caching.freeCheckpoint(e0Cp)
+      logConverged("driver", 0, edges.length.toLong)
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        e0Cp.schema("u").copy(name = "id"), e0Cp.schema("u").copy(name = "label"),
+        org.apache.spark.sql.types.StructField("sz", org.apache.spark.sql.types.LongType,
+          nullable = false)))
+      labelDocs(docs, idCol, spark.createDataFrame(
+        java.util.Arrays.asList(localComponents(edges, order.get): _*), schema))
+    } else {
+      val (edges, edgesCp, converged, rounds) = contract(e0Cp, maxIters)
+      // convergence observability: rounds is THE cost driver of this
+      // operator (each round = one materialization + one probe job), so a
+      // tuning pass must see it without instrumenting
+      logConverged("distributed", rounds,
+        e0.queryExecution.observedMetrics.get(observed).fold(-1L)(_.getLong(0)))
+      if (!converged) {
+        // release the final edges checkpoint before failing: nothing will
+        // ever read it, and the session keeps running after the error
+        graft.util.Caching.freeCheckpoint(edgesCp)
+        sys.error(
+          s"clusters: star contraction did not converge in $maxIters rounds " +
+            "— component structure exceeds the budget")
+      }
+      // the converged edge set is (child → component-min root); roots
+      // appear only as targets, so labels = children ∪ dedup'd roots
+      val labels = edges.select(col("u").as("id"), col("v").as("label"))
+        .unionAll(edges.select(col("v").as("id"), col("v").as("label")).distinct())
+      val sizes = labels.groupBy(col("label").as("sz_label"))
+        .agg(count(lit(1)).as("sz"))
+      labelDocs(docs, idCol, labels.join(sizes, col("label") === col("sz_label"))
+        .select(col("id"), col("label"), col("sz")))
+    }
+  }
+
+  /** [[clusters]]' distributed finish: alternating large-star /
+    * small-star rounds from the materialized canonical edge set `e0Cp`
+    * (freed once round 1 has materialized) until the structural
+    * fixpoint or `maxIters` rounds. Returns (the last round's edges,
+    * their checkpoint, whether they converged, rounds run). */
+  private def contract(e0Cp: DataFrame, maxIters: Int): (DataFrame, DataFrame, Boolean, Int) = {
+    import org.apache.spark.sql.expressions.Window
+    var edges = reset(e0Cp)
+    var edgesCp = e0Cp
     var converged = false
     var it = 0
     while (!converged && it < maxIters) {
@@ -1397,40 +1510,77 @@ object Dedup {
         .where(col("srcs") > 1 || (col("srcs") > 0 && col("tgts") > 0))
         .isEmpty
       // `next` is materialized before the superseded previous edge
-      // checkpoint is freed — without that a deep component leaves dead
-      // edge-frame copies per round in storage until RDD GC. The LAST
-      // checkpoint stays alive: the returned plan reads it lazily.
-      if (edgesCp != null) graft.util.Caching.freeCheckpoint(edgesCp)
+      // checkpoint (round 1: the canonical edge set) is freed — without
+      // that a deep component leaves dead edge-frame copies per round in
+      // storage until RDD GC. The LAST checkpoint stays alive: the
+      // returned plan reads it lazily.
+      graft.util.Caching.freeCheckpoint(edgesCp)
       edges = next
       edgesCp = nextCp
       it += 1
     }
-    // convergence observability (r14): rounds is THE cost driver of this
-    // operator (each round = one materialization + one probe job), so a
-    // tuning pass must see it without instrumenting
-    graft.log.Log.info("clusters converged", "rounds" -> it.toString,
-      "max_iters" -> maxIters.toString)
-    if (!converged) {
-      // release the final edges checkpoint before failing: nothing will
-      // ever read it, and the session keeps running after the error
-      if (edgesCp != null) graft.util.Caching.freeCheckpoint(edgesCp)
-      sys.error(
-        s"clusters: star contraction did not converge in $maxIters rounds " +
-          "— component structure exceeds the budget")
-    }
-    // the converged edge set is (child → component-min root); roots
-    // appear only as targets, so labels = children ∪ dedup'd roots
-    val labels = edges.select(col("u").as("id"), col("v").as("label"))
-      .unionAll(edges.select(col("v").as("id"), col("v").as("label")).distinct())
-    val sizes = labels.groupBy(col("label").as("sz_label"))
-      .agg(count(lit(1)).as("sz"))
+    (edges, edgesCp, converged, it)
+  }
+
+  private val edgeSets = new java.util.concurrent.atomic.AtomicLong()
+
+  /** [[clusters]]' output from its (id, label, sz) rows, one per
+    * clustered node: `docs` left-joined to them, so a document outside
+    * every edge is its own singleton cluster. One definition for both
+    * finishes, so their columns, types and keeper rule cannot differ. */
+  private def labelDocs(docs: DataFrame, idCol: String, clustered: DataFrame): DataFrame =
     docs.select(col(idCol).as("doc_id"))
-      .join(labels.select(col("id").as("doc_id"), col("label")), Seq("doc_id"), "left")
+      .join(clustered.select(col("id").as("doc_id"), col("label"), col("sz")),
+        Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("label"), col("doc_id")))
-      .join(sizes, col("cluster_id") === col("sz_label"), "left")
       .select(col("doc_id"), col("cluster_id"),
         coalesce(col("sz"), lit(1L)).as("cluster_size"),
         (col("doc_id") === col("cluster_id")).as("is_keeper"))
+
+  /** The order of `dt` values as Spark's `least`/`min` compare them, for
+    * the id types the driver finish handles: integral numbers and
+    * binary-collated strings (UTF-8 byte order, which Java's UTF-16
+    * `compareTo` does not match past the BMP). None sends any other id
+    * type to the distributed rounds. */
+  private def idOrdering(dt: org.apache.spark.sql.types.DataType): Option[Ordering[Any]] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some(Ordering.by((v: Any) => v.asInstanceOf[Number].longValue))
+      case StringType =>
+        Some(Ordering.fromLessThan[Any] { (a, b) =>
+          org.apache.spark.unsafe.types.UTF8String.fromString(a.asInstanceOf[String])
+            .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b.asInstanceOf[String])) < 0
+        })
+      case _ => None
+    }
+  }
+
+  /** Connected components of a collected (u, v) edge list by union-find
+    * with path compression: one Row(id, label, sz) per node, label = the
+    * component's minimum id under `order`, sz = its node count. Nodes are
+    * ranked in id order and a union keeps the lower-ranked root, so every
+    * root is its component's minimum. */
+  private def localComponents(edges: Array[org.apache.spark.sql.Row],
+                              order: Ordering[Any]): Seq[org.apache.spark.sql.Row] = {
+    val ids = edges.flatMap(e => Array[Any](e.get(0), e.get(1))).distinct.sorted(order)
+    val rank = ids.iterator.zipWithIndex.toMap
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i
+      while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+      root
+    }
+    edges.foreach { e =>
+      val a = find(rank(e.get(0))); val b = find(rank(e.get(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val roots = Array.tabulate(ids.length)(find)
+    val size = new Array[Long](ids.length)
+    roots.foreach(r => size(r) += 1)
+    ids.indices.map(i => org.apache.spark.sql.Row(ids(i), ids(roots(i)), size(roots(i))))
   }
 
   /** Duplicated-SPAN detection — the token-position analog of suffix-array

@@ -736,8 +736,8 @@ object Similarity {
     * subspace is an `array_min` over k (distance, index) structs, ties
     * to the lowest index so the code assignment is total. Output:
     * (id, code_csv, mse_e6 = floor(Σⱼ min-dist² ·1e6 + 0.5)). */
-  def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
-               model: PqModel): DataFrame = {
+  private[operators] def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
+                                  model: PqModel): DataFrame = {
     val codes = (0 until model.m).map { j =>
       val sub = slice(col("__vd"), j * model.subDim + 1, model.subDim)
       // size the index sequence to the ACTUAL codebook (k-means can

@@ -46,17 +46,20 @@ object Sources {
     case SourceSpec.File(location, format, options, schema) =>
       if (!knownFormats(format))
         throw new ConfigError(s"unsupported input format '$format' (supported: ${knownFormats.mkString(", ")})")
-      val reader = spark.read
-        .format(format)
-        .options(mapOptions(options))
-        .option("recursiveFileLookup",
-          options.getOrElse("recursiveFileLookup", "true"))
+      val readerOptions = mapOptions(options) +
+        ("recursiveFileLookup" -> options.getOrElse("recursiveFileLookup", "true"))
       // explicit DDL schema: names headerless columns and skips the
       // inference pre-scan (a full extra read of the input at scale)
-      schema.foreach(ddl => reader.schema(
+      val declared = schema.map(ddl =>
         try org.apache.spark.sql.types.StructType.fromDDL(ddl)
         catch { case e: Exception =>
-          throw new ConfigError(s"invalid schema DDL '$ddl': ${e.getMessage}") }))
+          throw new ConfigError(s"invalid schema DDL '$ddl': ${e.getMessage}") })
+      // without one, a parquet load pins the schema inference would
+      // return from one driver-side footer read ([[dirSchema]])
+      def reader(p: String) = {
+        val r = spark.read.format(format).options(readerOptions)
+        declared.orElse(dirSchema(spark, format, readerOptions, p)).fold(r)(r.schema)
+      }
       // pointer-layout tables (plain sinks published on overwrite-only
       // deployments via the generation-pointer protocol) resolve to
       // their current generation; everything else reads the location
@@ -67,7 +70,7 @@ object Sources {
       // action (no wrapper installed here can catch it) — the grace
       // window (keepGenerations) is the first line for those, and the
       // caller re-reads through withPointerRetry on the loud failure.
-      graft.sinks.Sinks.withPointerRetry(spark, location)(p => reader.load(p))
+      graft.sinks.Sinks.withPointerRetry(spark, location)(p => reader(p).load(p))
 
     case SourceSpec.Versioned(location, format, options, asOf0, prune, asOfTs, Some(branch)) =>
       // branch HEAD read — the WAP audit scan (parse guarantees no
@@ -160,12 +163,8 @@ object Sources {
     * falls back to inference. */
   private[graft] def footerSchema(spark: SparkSession, format: String,
                                   options: Map[String, String],
-                                  paths: Seq[String]): Option[StructType] = {
-    val mergeSchema = options.collectFirst {
-      case (k, v) if k.equalsIgnoreCase("mergeSchema") => v
-    }.getOrElse(spark.conf.get("spark.sql.parquet.mergeSchema", "false"))
-    if (format != "parquet" || paths.isEmpty || !mergeSchema.equalsIgnoreCase("false") ||
-        options.keys.exists(k => fileFilterOptions(k.toLowerCase))) None
+                                  paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty || !firstFilePick(spark, format, options)) None
     else try {
       import org.apache.hadoop.fs.Path
       import org.apache.parquet.hadoop.ParquetFileReader
@@ -185,7 +184,64 @@ object Sources {
       val kv = try in.getFooter.getFileMetaData.getKeyValueMetaData finally in.close()
       Option(kv.get(SparkSchemaKey)).map(DataType.fromJson).collect { case s: StructType => s }
     } catch { case NonFatal(_) => None }
+
+  /** True where parquet inference reads one file's footer, the first in
+    * path order: the format is parquet, `mergeSchema` is off (the reader
+    * option, else the session's `spark.sql.parquet.mergeSchema`), and no
+    * file-filter option can drop files from the listing. */
+  private def firstFilePick(spark: SparkSession, format: String,
+                            options: Map[String, String]): Boolean = {
+    val mergeSchema = options.collectFirst {
+      case (k, v) if k.equalsIgnoreCase("mergeSchema") => v
+    }.getOrElse(spark.conf.get("spark.sql.parquet.mergeSchema", "false"))
+    format == "parquet" && mergeSchema.equalsIgnoreCase("false") &&
+      !options.keys.exists(k => fileFilterOptions(k.toLowerCase))
   }
+
+  /** The schema parquet inference would return for a load of `location`
+    * (a directory, or one file), read on the driver: [[footerSchema]] of
+    * the leaf files the load lists, under Spark's listing rule (names
+    * starting `_` or `.` skipped at every level below the root), so
+    * Spark's pick, the smallest path, is the file read. None (the load
+    * infers, as before) where that pick could differ or cost more than
+    * the job it saves: summary files (`_metadata`, `_common_metadata`,
+    * which inference prefers) are present, a Hadoop input path filter is
+    * configured, more directories than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` would be
+    * listed (Spark lists those with a job), or any [[footerSchema]]
+    * fallback applies. */
+  private[graft] def dirSchema(spark: SparkSession, format: String,
+                               options: Map[String, String],
+                               location: String): Option[StructType] =
+    if (!firstFilePick(spark, format, options)) None
+    else try {
+      import org.apache.hadoop.fs.{FileStatus, Path}
+      import org.apache.spark.sql.GraftSqlBridge
+      val conf = GraftSqlBridge.newHadoopConf(spark, options)
+      val maxDirs = GraftSqlBridge.sqlConf(spark).parallelPartitionDiscoveryThreshold
+      val root = new Path(location)
+      val fs = root.getFileSystem(conf)
+      var dirs = 0
+      def leaves(st: FileStatus): Seq[FileStatus] =
+        if (!st.isDirectory) Seq(st)
+        else {
+          dirs += 1
+          if (dirs > maxDirs) throw new IllegalStateException("listing too wide to pin")
+          fs.listStatus(st.getPath).toSeq
+            .filterNot(c => GraftSqlBridge.hiddenPathName(c.getPath.getName))
+            .flatMap(leaves)
+        }
+      val rootStatus = fs.getFileStatus(root)
+      val files =
+        if (rootStatus.isDirectory) leaves(rootStatus)
+        else Seq(rootStatus).filterNot(f => GraftSqlBridge.hiddenPathName(f.getPath.getName))
+      val summary = files.exists { f =>
+        val n = f.getPath.getName
+        n.startsWith("_metadata") || n.startsWith("_common_metadata")
+      }
+      if (summary || conf.get("mapreduce.input.pathFilter.class") != null) None
+      else footerSchema(spark, format, options, files.map(_.getPath.toString))
+    } catch { case NonFatal(_) => None }
 
   /** File scan with MALFORMED-ROW quarantine (beyond-reference; the
     * config surface is `quarantine: <path>` on a csv/json input with an

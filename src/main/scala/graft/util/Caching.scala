@@ -132,9 +132,17 @@ object Caching {
     * Dataset (the Dataset API has no unpersist that reaches it: the
     * blocks belong to the internal RDD and otherwise live until RDD GC). */
   def freeCheckpoint(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(blocking = false))
+
+  /** Block-manager bytes (memory plus disk) behind an eagerly
+    * `localCheckpoint`ed Dataset, read on the driver without a job; 0
+    * for a frame that is not a checkpoint. */
+  def checkpointBytes(df: DataFrame): Long =
+    checkpointRdd(df).fold(0L)(org.apache.spark.sql.GraftSqlBridge.storedBytes)
+
+  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false): Unit
-      case _ => ()
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Some(lr.rdd)
+      case _ => None
     }
 }

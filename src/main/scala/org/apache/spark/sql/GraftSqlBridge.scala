@@ -9,8 +9,9 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** The `private[sql]` doorways graft needs: turn a hand-built
   * LogicalPlan into a DataFrame, parse SQL with the session's parser,
-  * build the Hadoop conf a file read runs with, and write a frame's
-  * files through a caller's commit protocol. Lives in
+  * build the Hadoop conf a file read runs with, write a frame's files
+  * through a caller's commit protocol, read the typed SQL conf, apply
+  * Spark's hidden-path rule, and size an RDD's stored blocks. Lives in
   * `org.apache.spark.sql` for the access scope only — the standard
   * pattern for Spark-extension libraries that contribute their own plan
   * nodes (no Spark internals are modified or shadowed here).
@@ -32,6 +33,28 @@ object GraftSqlBridge {
   def newHadoopConf(spark: SparkSession,
                     options: Map[String, String]): org.apache.hadoop.conf.Configuration =
     spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConfWithOptions(options)
+
+  /** The session's SQL conf, typed (`spark.conf.get` returns strings). */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** True for a file or directory name a file-source listing skips
+    * (Spark's hidden-path rule: `_`/`.` prefixes and `._COPYING_`,
+    * except the `_metadata`/`_common_metadata` summary files). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** Bytes the block manager holds for `rdd`'s cached or checkpointed
+    * blocks, memory plus disk, over every block manager. Read from the
+    * block manager master on the driver (one local RPC, no job); tasks
+    * report each stored block before they finish, so the figure is
+    * complete once the materializing job has returned. */
+  def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Long =
+    org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks.iterator)
+      .collect { case (org.apache.spark.storage.RDDBlockId(id, _), b) if id == rdd.id =>
+        b.memSize + b.diskSize }
+      .sum
 
   /** The file format `format` names, as `df.write.format(format)`
     * resolves it (a v2 file source falls back to its v1 format); None

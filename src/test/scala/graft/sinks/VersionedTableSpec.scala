@@ -1260,24 +1260,7 @@ class VersionedTableSpec extends SparkSpec {
   /** `body`'s result and the Spark jobs it started (jobs tagged with a
     * fresh job group, so no other thread's job is counted; the listener
     * bus is drained before the count is read). */
-  private def jobsStarted[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet(): Unit
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "jobsStarted")
-      val out = try body finally sc.clearJobGroup()
-      org.apache.spark.GraftTestBus.drain(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  private def jobsStarted[T](body: => T): (T, Int) = graft.JobCount.started(spark)(body)
 
   private def dataFiles(loc: String): Seq[String] =
     new java.io.File(s"$loc/data").listFiles().toSeq
