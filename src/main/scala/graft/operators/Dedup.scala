@@ -230,14 +230,17 @@ object Dedup {
     * [[minhashLshCapped]], which bounds the fan-out and routes oversized
     * families to a whole-family report instead.
     *
-    * Spread rule: an input on fewer partitions than the session's task
-    * slots (`defaultParallelism`) — a one-file batch is one partition —
-    * is repartitioned to that many before the shingle sets, so the
-    * per-document shingle, signature and band projections run on every
-    * slot. An input with enough partitions (the corpus-scale case), or
-    * one whose count cannot be read from its planned scan, is used as
-    * is. The output is a set of pairs, so it does not depend on the
-    * partitioning. */
+    * Spread rule: an input on at most half as many partitions as the
+    * session's task slots (`defaultParallelism`) — a one-file batch is
+    * one partition — is hash-partitioned on `idCol` over every slot
+    * before the shingle sets, so the per-document shingle, signature and
+    * band projections run on all of them. Hash partitioning needs no
+    * pre-sort of the rows (a round-robin repartition sorts each input
+    * partition on every column, text included). An input with more
+    * partitions (the corpus-scale case, where a shuffle of the text would
+    * gain at most a few slots), or one whose count cannot be read from
+    * its planned scan, is used as is. The output is a set of pairs, so
+    * it does not depend on the partitioning. */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  n: Int = 3, k: Int = 128, bands: Int = 32,
                  threshold: Double = 0.8): DataFrame = {
@@ -247,7 +250,7 @@ object Dedup {
     // intermediate is ~hash-sized (≈1 KB/doc); MEMORY_AND_DISK spills
     // rather than OOMs, and is the standard shape for any multi-pass
     // sketch algorithm.
-    val sets = shingleSets(spread(docs), idCol, textCol, n)
+    val sets = shingleSets(spread(docs, idCol), idCol, textCol, n)
     graft.util.Caching.leased(sets) {
       val candidates = lshCandidates(signaturesFromSets(sets, k), bands)
       jaccardVerify(candidates, sets)
@@ -256,16 +259,16 @@ object Dedup {
     }
   }
 
-  /** `docs` over every task slot: repartitioned to the session's
-    * `defaultParallelism` when its planned scan has fewer partitions
-    * (see [[minhashLsh]]), else unchanged. */
-  private def spread(docs: DataFrame): DataFrame = {
+  /** `docs` over every task slot: hash-partitioned on `idCol` into the
+    * session's `defaultParallelism` when its planned scan has at most
+    * half that many partitions (see [[minhashLsh]]), else unchanged. */
+  private def spread(docs: DataFrame, idCol: String): DataFrame = {
     val slots = docs.sparkSession.sparkContext.defaultParallelism
     scanPartitions(docs) match {
-      case Some(p) if p < slots =>
+      case Some(p) if p * 2 <= slots =>
         graft.log.Log.info("minhashLsh spreads its input",
           "partitions" -> p.toString, "slots" -> slots.toString)
-        docs.repartition(slots)
+        docs.repartition(slots, col(idCol))
       case _ => docs
     }
   }

@@ -167,23 +167,28 @@ object Sources {
     if (paths.isEmpty || !firstFilePick(spark, format, options)) None
     else try {
       import org.apache.hadoop.fs.Path
-      import org.apache.parquet.hadoop.ParquetFileReader
-      import org.apache.parquet.hadoop.util.HadoopInputFile
       val conf = org.apache.spark.sql.GraftSqlBridge.newHadoopConf(spark, options)
       val first = paths.map { p =>
         val path = new Path(p)
         path.getFileSystem(conf).makeQualified(path)
       }.minBy(_.toString)
-      val readOptions = org.apache.parquet.HadoopReadOptions.builder(conf, first)
-        .withMetadataFilter(
-          org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
-        .build()
-      val in = ParquetFileReader.open(
-        HadoopInputFile.fromStatus(first.getFileSystem(conf).getFileStatus(first), conf),
-        readOptions)
-      val kv = try in.getFooter.getFileMetaData.getKeyValueMetaData finally in.close()
-      Option(kv.get(SparkSchemaKey)).map(DataType.fromJson).collect { case s: StructType => s }
+      sparkSchemaOf(first.getFileSystem(conf).getFileStatus(first), conf)
     } catch { case NonFatal(_) => None }
+
+  /** The Spark schema stored in the footer of the parquet file `status`
+    * (row groups skipped), or None when the footer carries none. */
+  private def sparkSchemaOf(status: org.apache.hadoop.fs.FileStatus,
+                            conf: org.apache.hadoop.conf.Configuration): Option[StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val readOptions = org.apache.parquet.HadoopReadOptions.builder(conf, status.getPath)
+      .withMetadataFilter(
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      .build()
+    val in = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf), readOptions)
+    val kv = try in.getFooter.getFileMetaData.getKeyValueMetaData finally in.close()
+    Option(kv.get(SparkSchemaKey)).map(DataType.fromJson).collect { case s: StructType => s }
+  }
 
   /** True where parquet inference reads one file's footer, the first in
     * path order: the format is parquet, `mergeSchema` is off (the reader
@@ -208,8 +213,11 @@ object Sources {
     * which inference prefers) are present, a Hadoop input path filter is
     * configured, more directories than
     * `spark.sql.sources.parallelPartitionDiscovery.threshold` would be
-    * listed (Spark lists those with a job), or any [[footerSchema]]
-    * fallback applies. */
+    * listed (Spark lists those with a job), the walk meets more than
+    * [[MaxPinnedEntries]] entries (the load lists them again, so a wide
+    * location would pay two listings to save one small job), or any
+    * [[footerSchema]] fallback applies. The pick's footer is opened from
+    * its walked status, not statted again. */
   private[graft] def dirSchema(spark: SparkSession, format: String,
                                options: Map[String, String],
                                location: String): Option[StructType] =
@@ -222,12 +230,17 @@ object Sources {
       val root = new Path(location)
       val fs = root.getFileSystem(conf)
       var dirs = 0
+      var entries = 0
       def leaves(st: FileStatus): Seq[FileStatus] =
         if (!st.isDirectory) Seq(st)
         else {
+          def tooWide = new IllegalStateException("listing too wide to pin")
           dirs += 1
-          if (dirs > maxDirs) throw new IllegalStateException("listing too wide to pin")
-          fs.listStatus(st.getPath).toSeq
+          if (dirs > maxDirs) throw tooWide
+          val listed = fs.listStatus(st.getPath)
+          entries += listed.length
+          if (entries > MaxPinnedEntries) throw tooWide
+          listed.toSeq
             .filterNot(c => GraftSqlBridge.hiddenPathName(c.getPath.getName))
             .flatMap(leaves)
         }
@@ -239,9 +252,14 @@ object Sources {
         val n = f.getPath.getName
         n.startsWith("_metadata") || n.startsWith("_common_metadata")
       }
-      if (summary || conf.get("mapreduce.input.pathFilter.class") != null) None
-      else footerSchema(spark, format, options, files.map(_.getPath.toString))
+      if (summary || files.isEmpty || conf.get("mapreduce.input.pathFilter.class") != null) None
+      else sparkSchemaOf(files.minBy(_.getPath.toString), conf)
     } catch { case NonFatal(_) => None }
+
+  /** Entries (files and directories, hidden ones included) [[dirSchema]]
+    * lists before it leaves the location to inference: one object-store
+    * listing page (S3 and GCS return at most 1,000 keys per request). */
+  private[graft] val MaxPinnedEntries = 1000
 
   /** File scan with MALFORMED-ROW quarantine (beyond-reference; the
     * config surface is `quarantine: <path>` on a csv/json input with an

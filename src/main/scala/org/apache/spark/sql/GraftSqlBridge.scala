@@ -48,7 +48,11 @@ object GraftSqlBridge {
     * blocks, memory plus disk, over every block manager. Read from the
     * block manager master on the driver (one local RPC, no job); tasks
     * report each stored block before they finish, so the figure is
-    * complete once the materializing job has returned. */
+    * complete once the materializing job has returned.
+    * `SparkContext.getRDDStorageInfo` is not that figure: it reads the
+    * status store, which the listener bus fills asynchronously (and at
+    * most every `spark.ui.liveUpdate.period`), so right after the job it
+    * can read low or zero and send a large graph to the driver. */
   def storedBytes(rdd: org.apache.spark.rdd.RDD[_]): Long =
     org.apache.spark.SparkEnv.get.blockManager.master.getStorageStatus.iterator
       .flatMap(_.rddBlocks.iterator)

@@ -113,6 +113,19 @@ class SourcesSpec extends SparkSpec {
       Map("mergeSchema" -> "true"))).columns.toSeq == Seq("id", "s", "x"))
     // a file filter may drop the smallest path
     assert(jobsAtLoad(s"$root/t", Map("pathGlobFilter" -> "*.parquet")) > 0)
+    // a listing wider than one page: the load lists it again, so it infers
+    val wide = s"$root/wide"
+    Seq((1, "a")).toDF("id", "s").write.parquet(wide)
+    val widePath = new org.apache.hadoop.fs.Path(wide)
+    val listed = widePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(widePath).length // the local file system hides .crc files
+    (listed until Sources.MaxPinnedEntries).foreach(i =>
+      new java.io.File(s"$wide/.pad-$i").createNewFile())
+    assert(jobsAtLoad(wide) == 0)
+    new java.io.File(s"$wide/.pad-over").createNewFile()
+    assert(jobsAtLoad(wide) > 0)
+    assert(Sources.load(spark, SourceSpec.File(wide, "parquet", Map.empty))
+      .columns.toSeq == Seq("id", "s"))
     // a summary file is what inference reads first
     java.nio.file.Files.copy(
       new java.io.File(s"$root/t").listFiles().filter(_.getName.endsWith(".parquet")).head.toPath,
