@@ -36,6 +36,16 @@ import scala.jdk.CollectionConverters._
   *    loser re-reads the new latest and REBASES (append: new base file
   *    list; overwrite: nothing to rebase) up to `maxRetries` times.
   *    Optimistic concurrency, the Delta/Iceberg commit shape.
+  *  - SERIALIZABLE WRITES ([[merge]], [[deleteWhere]], [[updateWhere]],
+  *    [[compactDeletes]], [[restore]], [[publishBranch]]) take the same
+  *    three steps, each written once: OPEN the head ([[open]]: the
+  *    versions, the `expectedLatest` check, the head manifest and its
+  *    sidecar, each read once); CLAIM what the next version adds
+  *    ([[claim]]: new data files with their sidecar, and the next
+  *    deletion vector — the head's, restricted to the carried files,
+  *    plus the newly claimed (file, position) rows — all under
+  *    commit-unique names); PUBLISH it ([[publishNext]]: one CAS at
+  *    latest+1; losing it is a serializable conflict, never a rebase).
   *  - READ: resolve the latest (or `asOf`) manifest and load EXACTLY its
   *    file list. A reader planned at version N never sees version N+1's
   *    files — snapshot isolation by construction. Data files never
@@ -198,8 +208,8 @@ object VersionedTable {
     * from the fork point. Finishes any crashed rebase it finds first
     * ([[recoverRebase]]), so a branch is never unreadable under its real
     * name because a rebase died mid-publish. */
-  def branchVersions(spark: SparkSession, location: String,
-                     branch: String): Seq[Long] = {
+  private[sinks] def branchVersions(spark: SparkSession, location: String,
+                                    branch: String): Seq[Long] = {
     val root = new Path(location)
     val fs = fsFor(spark, root)
     val suffix = s"@$branch.json"
@@ -387,6 +397,12 @@ object VersionedTable {
     }
   }
 
+  /** The (file, pos) rows of a [[livePositions]] frame: DV entries. */
+  private def dvEntries(live: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    live.select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
+  }
+
   /** Anti-join `df` (which must carry parquet `_metadata`) against the
     * deletion vector: rows whose (file basename, row position) appear in
     * the DV disappear. */
@@ -475,9 +491,9 @@ object VersionedTable {
     * skips a file whose [min,max] spans the value but whose bucket bit
     * is clear (the ORC-bloom / Iceberg-value-set shape, one-hash form —
     * false positives only cost an open, never correctness). */
-  private final case class SidecarStats(cols: Seq[(String, String, ColStats)],
-                                        rows: Seq[(String, Long)],
-                                        sets: Seq[(String, String, String)] = Nil) {
+  private[sinks] final case class SidecarStats(cols: Seq[(String, String, ColStats)],
+                                               rows: Seq[(String, Long)],
+                                               sets: Seq[(String, String, String)] = Nil) {
     def isEmpty: Boolean = cols.isEmpty && rows.isEmpty && sets.isEmpty
     def ++(o: SidecarStats): SidecarStats =
       SidecarStats(cols ++ o.cols, rows ++ o.rows, sets ++ o.sets)
@@ -485,8 +501,37 @@ object VersionedTable {
       SidecarStats(cols.filter(x => keep.contains(x._1)),
         rows.filter(x => keep.contains(x._1)),
         sets.filter(x => keep.contains(x._1)))
+
+    /** The sidecar file: one JSON object per line — the zone maps by
+      * (file, column), `{"name","col","min","max","nulls"}` with min/max
+      * as their canonical tokens; then the row counts by file,
+      * `{"name","rows"}`; then the bitmaps by (file, column),
+      * `{"name","col","buckets"}`. */
+    def render: String =
+      (cols.sortBy(x => (x._1, x._2)).map { case (f, c, s) =>
+        s"""{"name":${Json.str(f)},"col":${Json.str(c)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}}"""
+      } ++ rows.sortBy(_._1).map { case (f, n) =>
+        s"""{"name":${Json.str(f)},"rows":$n}"""
+      } ++ sets.sortBy(x => (x._1, x._2)).map { case (f, c, b) =>
+        s"""{"name":${Json.str(f)},"col":${Json.str(c)},"buckets":${Json.str(b)}}"""
+      }).mkString("", "\n", "\n")
   }
-  private object SidecarStats { val empty: SidecarStats = SidecarStats(Nil, Nil) }
+  private[sinks] object SidecarStats {
+    val empty: SidecarStats = SidecarStats(Nil, Nil)
+
+    /** Reads [[SidecarStats.render]]'s text back; min/max keep the exact
+      * text of their tokens ([[Json.rawObjects]]). */
+    def parse(text: String): SidecarStats = {
+      val lines = Json.rawObjects(text).map(_.toMap)
+      def str(line: Map[String, String], k: String) = Json.unstr(line(k))
+      SidecarStats(
+        cols = lines.collect { case l if l.contains("min") =>
+          (str(l, "name"), str(l, "col"), ColStats(l("min"), l("max"), l("nulls").toLong)) },
+        rows = lines.collect { case l if l.contains("rows") => (str(l, "name"), l("rows").toLong) },
+        sets = lines.collect { case l if l.contains("buckets") =>
+          (str(l, "name"), str(l, "col"), str(l, "buckets")) })
+    }
+  }
 
   /** The bucket of one probe value under the bitmap's hashing
     * ([[FileWrite.bucketOf]]: murmur3, Spark's `hash()` with seed 42, of
@@ -534,60 +579,20 @@ object VersionedTable {
     (written.files, stats)
   }
 
-  // one JSON string token, quotes included: the group Json.unstr decodes
-  private final val JsonTok = """("(?:[^"\\]|\\.)*")"""
-
-  private def statsLine(file: String, col: String, s: ColStats): String =
-    s"""{"name":${Json.str(file)},"col":${Json.str(col)},"min":${s.min},"max":${s.max},"nulls":${s.nulls}}"""
-
-  private def rowsLine(file: String, rows: Long): String =
-    s"""{"name":${Json.str(file)},"rows":$rows}"""
-
-  private val RowsLineRe =
-    ("""\{"name":""" + JsonTok + ""","rows":(\d+)\}""").r
-
-  private def setLine(file: String, col: String, b64: String): String =
-    s"""{"name":${Json.str(file)},"col":${Json.str(col)},"buckets":${Json.str(b64)}}"""
-
-  private val SetLineRe =
-    ("""\{"name":""" + JsonTok + ""","col":""" + JsonTok +
-      ""","buckets":"([A-Za-z0-9+/=]*)"\}""").r
-
-  // min/max are canonical tokens: null | decimal | JSON string — match
-  // them precisely (a greedy .* would split wrong on a string value
-  // containing ","max":)
-  private val StatsLineRe =
-    ("""\{"name":""" + JsonTok + ""","col":""" + JsonTok + "," +
-      """"min":(null|-?\d+(?:\.\d+)?|"(?:[^"\\]|\\.)*"),""" +
-      """"max":(null|-?\d+(?:\.\d+)?|"(?:[^"\\]|\\.)*"),"nulls":(\d+)\}""").r
-
-  private def renderSidecar(all: SidecarStats): Seq[String] =
-    all.cols.sortBy(x => (x._1, x._2)).map { case (f, c, s) => statsLine(f, c, s) } ++
-      all.rows.sortBy(_._1).map { case (f, n) => rowsLine(f, n) } ++
-      all.sets.sortBy(x => (x._1, x._2)).map { case (f, c, b) => setLine(f, c, b) }
-
   private def writeStatsFile(fs: FileSystem, root: Path, name: String,
-                             lines: Seq[String]): Unit = {
+                             all: SidecarStats): Unit = {
     // commit-unique name: safe to overwrite on a rebase retry
     graft.util.Fs.write(fs, new Path(logDir(root), name),
-      (lines.mkString("\n") + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-  }
-
-  private def readStatsLines(fs: FileSystem, root: Path,
-                             name: String): SidecarStats = {
-    val p = new Path(logDir(root), name)
-    if (!fs.exists(p)) return SidecarStats.empty // conservative: prune nothing
-    val lines = readText(fs, p).split('\n').toSeq.filter(_.nonEmpty)
-    SidecarStats(
-      cols = lines.collect { case StatsLineRe(f, c, mn, mx, nulls) =>
-        (Json.unstr(f), Json.unstr(c), ColStats(mn, mx, nulls.toLong)) },
-      rows = lines.collect { case RowsLineRe(f, n) => (Json.unstr(f), n.toLong) },
-      sets = lines.collect { case SetLineRe(f, c, b) => (Json.unstr(f), Json.unstr(c), b) })
+      all.render.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** The stats sidecar `m` references (empty when it has none). */
   private def sidecarOf(fs: FileSystem, root: Path, m: Manifest): SidecarStats =
-    m.statsFile.fold(SidecarStats.empty)(readStatsLines(fs, root, _))
+    m.statsFile.fold(SidecarStats.empty) { name =>
+      val p = new Path(logDir(root), name)
+      if (!fs.exists(p)) SidecarStats.empty // conservative: prune nothing
+      else SidecarStats.parse(readText(fs, p))
+    }
 
   private def sidecarAt(spark: SparkSession, location: String, v: Long): SidecarStats = {
     val root = new Path(location)
@@ -613,7 +618,7 @@ object VersionedTable {
     if (all.isEmpty) None
     else {
       val name = s"stats-$commitId.jsonl"
-      writeStatsFile(fs, root, name, renderSidecar(all))
+      writeStatsFile(fs, root, name, all)
       Some(name)
     }
 
@@ -699,6 +704,104 @@ object VersionedTable {
     * manifest first. */
   private def writeDv(root: Path, df: DataFrame, name: String): Unit =
     df.write.mode(SaveMode.Overwrite).parquet(new Path(logDir(root), name).toString)
+
+  // ------------------------------------------------ open → claim → publish
+
+  /** What a serializable writer `op` opened ([[open]]): main's versions,
+    * each manifest opened at most once, the head and — on first use —
+    * the head's stats sidecar. `retry` ends its conflict messages. */
+  private final class Opened(val location: String, val fs: FileSystem, val vs: Seq[Long],
+                             val op: String, val retry: String) {
+    val root = new Path(location)
+    val manifest: Long => Manifest = manifestCache(fs, root)
+    def latest: Long = vs.last
+    def next: Long = latest + 1
+    lazy val head: Manifest = manifest(latest)
+    lazy val sidecar: SidecarStats = sidecarOf(fs, root, head)
+  }
+
+  /** OPEN: list main's versions; an empty table fails unless
+    * `allowEmpty`, and a latest version other than `expectedLatest` (a
+    * commit since the caller's snapshot) is a serializable conflict. */
+  private def open(spark: SparkSession, location: String, op: String, retry: String,
+                   expectedLatest: Option[Long] = None, allowEmpty: Boolean = false): Opened = {
+    val t = new Opened(location, fsFor(spark, new Path(location)), versions(spark, location),
+      op, retry)
+    if (t.vs.isEmpty && !allowEmpty) throw new graft.config.ConfigError(
+      s"versioned $op: no committed versions at '$location'")
+    val latest = t.vs.lastOption.getOrElse(0L)
+    expectedLatest.foreach { exp =>
+      if (latest != exp) throw new java.util.ConcurrentModificationException(
+        s"versioned $op: serializable conflict at '$location' — snapshot " +
+          s"was v$exp, latest is v$latest; $retry")
+    }
+    t
+  }
+
+  /** The next manifest's content: its files, stats sidecar and DV. */
+  private final case class Claim(files: Seq[(String, Long)], statsFile: Option[String],
+                                 dv: Option[(String, Long)])
+  private object Claim {
+    /** Exactly `m`'s files, sidecar and DV, by reference. */
+    def of(m: Manifest): Claim = Claim(m.files, m.statsFile, m.dv)
+  }
+
+  /** CLAIM: write what the next version adds over the head of `t`, whose
+    * files `carried` (None: all of them) stay by reference:
+    *  - `images`, if any, become new data files ([[writeData]], zone maps
+    *    for `statsColumns`) and the sidecar `stats-<commitId>.jsonl`
+    *    holds the carried files' stats and theirs; with no images the
+    *    head's sidecar carries by name;
+    *  - the next deletion vector is the head's restricted to the carried
+    *    files plus the `claimed` (file, pos) rows (with their count),
+    *    written once as `dv-<commitId>`, or not at all when empty. Kept
+    *    whole, the head's DV keeps its recorded count; restricted, it is
+    *    counted (one job).
+    * Every write lands under a commit-unique name before the CAS. */
+  private def claim(spark: SparkSession, t: Opened, carried: Option[Seq[String]],
+                    claimed: Option[(DataFrame, Long)], images: Option[DataFrame],
+                    statsColumns: Seq[String], format: String,
+                    options: Map[String, String]): Claim = {
+    import org.apache.spark.sql.functions.col
+    val commitId = newCommitId()
+    val keep = carried.map(_.toSet)
+    val kept = keep.fold(t.head.files)(k => t.head.files.filter(f => k(f._1)))
+    val (files, statsFile) = images.fold((kept, t.head.statsFile)) { df =>
+      val (written, fresh) = writeData(t.root, df, commitId, statsColumns, format, options)
+      (kept ++ written, writeSidecar(t.fs, t.root, commitId,
+        keep.fold(t.sidecar)(t.sidecar.filterFiles) ++ fresh))
+    }
+    val prev = t.head.dv.flatMap { case (name, n) =>
+      val dv = readDv(spark, t.root, name)
+      carried.fold(Option((dv, n))) { names =>
+        val cdv = dv.filter(col("file").isin(names: _*))
+        Some((cdv, cdv.count())).filter(_._2 > 0L)
+      }
+    }
+    val dv = (prev ++ claimed).reduceOption[(DataFrame, Long)] {
+      case ((a, na), (b, nb)) => (a.unionByName(b), na + nb)
+    }.map { case (df, n) =>
+      writeDv(t.root, df, s"dv-$commitId")
+      (s"dv-$commitId", n)
+    }
+    Claim(files, statsFile, dv)
+  }
+
+  /** PUBLISH: one CAS attempt of `c` as version latest+1 (mode `mode`,
+    * main's txns carried). Losing it means a concurrent commit landed
+    * since the head was opened, and `c` was built from a stale snapshot:
+    * a serializable conflict, never a rebase. Then logs `event` with
+    * `fields` after the location. Returns the new version. */
+  private def publishNext(t: Opened, mode: String, c: Claim)(
+      event: String, fields: (String, String)*): Long = {
+    if (!writeManifestCas(t.fs, t.root, Manifest.next(t.next, mode, c.files, None,
+      c.statsFile, c.dv, txnsAt(t.vs)(t.manifest))))
+      throw new java.util.ConcurrentModificationException(
+        s"versioned ${t.op}: serializable conflict at '${t.location}' — snapshot " +
+          s"was v${t.latest}; a concurrent commit won v${t.next}; ${t.retry}")
+    graft.log.Log.info(event, ("location" -> t.location) +: fields: _*)
+    t.next
+  }
 
   /** Atomically commit `df` as the next version. `mode` = "overwrite"
     * (the new version IS this frame) or "append" (new version = latest
@@ -839,16 +942,9 @@ object VersionedTable {
     import org.apache.spark.sql.functions.{col, min => fmin, max => fmax}
     require(keys.nonEmpty, "versioned merge: keys must be non-empty")
     val conditional = actions != MergeActions.RowReplace
-    val root = new Path(location)
-    val fs = fsFor(spark, root)
-    val vs = versions(spark, location)
-    expectedLatest.foreach { exp =>
-      if (vs.lastOption.getOrElse(0L) != exp)
-        throw new java.util.ConcurrentModificationException(
-          s"versioned merge: serializable conflict at '$location' — snapshot " +
-            s"was v$exp, latest is v${vs.lastOption.getOrElse(0L)}; re-read and re-merge")
-    }
-    if (vs.isEmpty && conditional) throw new graft.config.ConfigError(
+    val t = open(spark, location, "merge", "re-read and re-merge", expectedLatest,
+      allowEmpty = true)
+    if (t.vs.isEmpty && conditional) throw new graft.config.ConfigError(
       s"versioned merge: conditional MERGE actions need an existing versioned " +
         s"table at '$location' (the action semantics are defined against the " +
         "target schema) — seed it with a commit first")
@@ -893,18 +989,15 @@ object VersionedTable {
           "conditional MERGE requires a key-unique source (ANSI cardinality " +
           "rule: a multi-match result would be order-dependent)")
     }
-    if (vs.isEmpty)
+    if (t.vs.isEmpty)
       // expectedLatest = 0 keeps the bootstrap SERIALIZABLE: losing the
       // v1 race must abort loudly, not rebase over the winner's rows
       return commit(spark, location, publishTransform(arrivals), "overwrite",
         format, options, statsColumns = statsColumns,
         expectedLatest = Some(0L))
-    val latest = vs.last
-    val manifest = manifestCache(fs, root)
-    val head = manifest(latest)
+    val (root, head) = (t.root, t.head)
     val files = head.names
-    val sidecar = sidecarOf(fs, root, head)
-    val stats = statsByFile(sidecar)
+    val stats = statsByFile(t.sidecar)
     val k0 = keys.head
     val bounds = arrivals.agg(fmin(col(k0)), fmax(col(k0))).head()
     val (lo, hi) = (canonToken(bounds.get(0)), canonToken(bounds.get(1)))
@@ -935,13 +1028,12 @@ object VersionedTable {
       else Nil // insert/BY SOURCE only: nothing rewrites in place
     val isTouched = touched.toSet
     val untouched = files.filterNot(isTouched)
-    val untouchedSized = head.files.filterNot(f => isTouched(f._1))
     // ONE footer read serves the conditional path's target-schema needs
     // (star-action validation + the insert-only projection) — lazy so
     // the row-replace path never pays it
     lazy val tableSchema: org.apache.spark.sql.types.StructType = {
       if (files.isEmpty) throw new graft.config.ConfigError(
-        s"versioned merge: version $latest of '$location' references no data " +
+        s"versioned merge: version ${t.latest} of '$location' references no data " +
           "files — conditional MERGE needs the target schema; seed the table " +
           "with a committed snapshot first")
       loadData(spark, root, Seq(files.head), format, options).schema
@@ -1044,52 +1136,15 @@ object VersionedTable {
         else None
     }
     val publishFrame = bySourceReimages.fold(merged)(merged.unionByName(_))
-    val commitId = newCommitId()
-    val (written, newStats) = writeData(root, publishTransform(publishFrame), commitId,
-      statsColumns, format, options)
-    val statsFile = writeSidecar(fs, root, commitId,
-      sidecar.filterFiles(untouched.toSet) ++ newStats)
-    // deletion vector: rewritten files materialized their deletes away;
-    // entries for the CARRIED files stay live and move to a fresh
-    // filtered sidecar, joined by the BY SOURCE claimed positions
-    // (an exact dv_rows keeps metadata counts honest)
-    val dvNext: Option[(String, Long)] = {
-      val carriedDv: Option[(DataFrame, Long)] = latestDv.flatMap {
-        case (name, _) =>
-          val cdv = readDv(spark, root, name)
-            .filter(col("file").isin(untouched: _*))
-          val n = cdv.count()
-          if (n == 0L) None else Some((cdv, n))
-      }
-      val added: Option[(DataFrame, Long)] = bySourceClaimed.map {
-        case (claimed, n) =>
-          (claimed.select(col("__dv_file").as("file"),
-            col("__dv_pos").as("pos")), n)
-      }
-      val combined = (carriedDv, added) match {
-        case (Some((a, na)), Some((b, nb))) => Some((a.unionByName(b), na + nb))
-        case (a, b) => a.orElse(b)
-      }
-      combined.map { case (dvDf, n) =>
-        val dvName = s"dv-$commitId"
-        writeDv(root, dvDf, dvName)
-        (dvName, n)
-      }
-    }
-    // serializable: exactly one CAS attempt at latest+1 — losing means a
-    // concurrent commit landed since our snapshot, and our merged frame
-    // is stale (it would silently drop that writer's rows)
-    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "merge",
-      untouchedSized ++ written, None, statsFile, dvNext, txnsAt(vs)(manifest))))
-      throw new java.util.ConcurrentModificationException(
-        s"versioned merge: serializable conflict at '$location' — snapshot " +
-          s"was v$latest; a concurrent commit won v${latest + 1}; re-read and re-merge")
-    graft.log.Log.info("versioned merge",
-      "location" -> location, "version" -> s"v${latest + 1}",
+    // the rewritten files materialized their deletes away; the carried
+    // files keep their DV entries, joined by the BY SOURCE claims
+    val c = claim(spark, t, Some(untouched),
+      bySourceClaimed.map { case (claimed, n) => (dvEntries(claimed), n) },
+      Some(publishTransform(publishFrame)), statsColumns, format, options)
+    publishNext(t, "merge", c)("versioned merge", "version" -> s"v${t.next}",
       "files_rewritten" -> touched.size.toString,
       "files_carried" -> untouched.size.toString,
       "by_source_dv_rows" -> bySourceClaimed.map(_._2).getOrElse(0L).toString)
-    latest + 1
     } finally {
       if (conditional) arrivals.unpersist(blocking = false): Unit
     }
@@ -1117,55 +1172,8 @@ object VersionedTable {
   def deleteWhere(spark: SparkSession, location: String, condition: String,
                   format: String = "parquet",
                   options: Map[String, String] = Map.empty,
-                  expectedLatest: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions._
-    require(format == "parquet",
-      "versioned delete: deletion vectors need parquet row positions")
-    val root = new Path(location)
-    val fs = fsFor(spark, root)
-    val vs = versions(spark, location)
-    if (vs.isEmpty) throw new graft.config.ConfigError(
-      s"versioned delete: no committed versions at '$location'")
-    val latest = vs.last
-    expectedLatest.foreach { exp =>
-      if (latest != exp) throw new java.util.ConcurrentModificationException(
-        s"versioned delete: serializable conflict at '$location' — snapshot " +
-          s"was v$exp, latest is v$latest; re-read and re-delete")
-    }
-    val manifest = manifestCache(fs, root)
-    val head = manifest(latest)
-    val dvPrev = head.dv
-    val base = loadData(spark, root, head.names, format, options)
-    // only LIVE rows can match (a row deleted twice would double-count)
-    val live = livePositions(spark, root, base, dvPrev.map(_._1))
-    // PINNED once (localCheckpoint, eager): the matched set feeds both
-    // the count and the DV write — re-evaluating the plan per consumer
-    // would let a nondeterministic condition (rand(), now()) produce a
-    // DV that disagrees with what the count reported. Cost ∝ matched
-    // (file,pos) pairs, i.e. the delete size itself.
-    val matches = live.filter(expr(condition))
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-      .localCheckpoint()
-    val nMatched = matches.count()
-    if (nMatched == 0L) {
-      graft.log.Log.info("versioned delete: no matching rows",
-        "location" -> location, "version" -> s"v$latest")
-      return latest
-    }
-    val dvName = s"dv-${newCommitId()}"
-    writeDv(root, dvPrev.fold(matches) { case (name, _) =>
-      readDv(spark, root, name).unionByName(matches) }, dvName)
-    val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "delete", head.files,
-      None, head.statsFile, Some((dvName, dvRows)), txnsAt(vs)(manifest))))
-      throw new java.util.ConcurrentModificationException(
-        s"versioned delete: serializable conflict at '$location' — snapshot " +
-          s"was v$latest; a concurrent commit won v${latest + 1}; re-delete")
-    graft.log.Log.info("versioned delete",
-      "location" -> location, "version" -> s"v${latest + 1}",
-      "rows_deleted" -> nMatched.toString, "files_rewritten" -> "0")
-    latest + 1
-  }
+                  expectedLatest: Option[Long] = None): Long =
+    changeWhere(spark, location, condition, Map.empty, format, options, expectedLatest)
 
   /** Row-level UPDATE via deletion vectors: matching LIVE rows get their
     * old positions added to the DV and their updated images appended as
@@ -1182,83 +1190,67 @@ object VersionedTable {
                   format: String = "parquet",
                   options: Map[String, String] = Map.empty,
                   expectedLatest: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions._
-    require(format == "parquet",
-      "versioned update: deletion vectors need parquet row positions")
     require(set.nonEmpty, "versioned update: set must be non-empty")
-    val root = new Path(location)
-    val fs = fsFor(spark, root)
-    val vs = versions(spark, location)
-    if (vs.isEmpty) throw new graft.config.ConfigError(
-      s"versioned update: no committed versions at '$location'")
-    val latest = vs.last
-    expectedLatest.foreach { exp =>
-      if (latest != exp) throw new java.util.ConcurrentModificationException(
-        s"versioned update: serializable conflict at '$location' — snapshot " +
-          s"was v$exp, latest is v$latest; re-read and re-update")
-    }
-    val manifest = manifestCache(fs, root)
-    val head = manifest(latest)
-    val dvPrev = head.dv
-    val base = loadData(spark, root, head.names, format, options)
-    val live = livePositions(spark, root, base, dvPrev.map(_._1))
-    val dataCols = base.columns.filterNot(Set("__dv_file", "__dv_pos")).toSeq
+    changeWhere(spark, location, condition, set, format, options, expectedLatest)
+  }
+
+  /** [[updateWhere]], or with no `set` [[deleteWhere]] — its no-image
+    * case: the live rows matching `condition` give their positions to
+    * the DV, and an update appends their images. */
+  private def changeWhere(spark: SparkSession, location: String, condition: String,
+                          set: Map[String, String], format: String,
+                          options: Map[String, String], expectedLatest: Option[Long]): Long = {
+    import org.apache.spark.sql.functions._
+    val (op, what) = if (set.isEmpty) ("delete", "deleted") else ("update", "updated")
+    require(format == "parquet",
+      s"versioned $op: deletion vectors need parquet row positions")
+    val t = open(spark, location, op, s"re-read and re-$op", expectedLatest)
+    val base = loadData(spark, t.root, t.head.names, format, options)
+    // only LIVE rows can match (a row deleted twice would double-count)
+    val live = livePositions(spark, t.root, base, t.head.dv.map(_._1))
+    val dataCols = base.columns.toSeq
     set.keys.foreach { c =>
       require(dataCols.contains(c),
         s"versioned update: set column '$c' not in the table (has: ${dataCols.mkString(", ")})")
     }
-    // PINNED once (localCheckpoint, eager): THREE consumers derive from
-    // the matched set — the count, the updated images, and the DV
-    // positions. Without pinning, a nondeterministic condition would
-    // evaluate independently per consumer and the DV could disagree
-    // with the appended images inside one "atomic" commit (silently
-    // losing or duplicating rows). Cost ∝ matched rows — the same rows
-    // the update appends anyway.
-    val matched = live.filter(expr(condition)).localCheckpoint()
-    val nMatched = matched.count()
+    // PINNED once (localCheckpoint, eager): the count, the DV positions
+    // and an update's images all derive from the matched set. Without
+    // pinning, a nondeterministic condition (rand(), now()) would
+    // evaluate independently per consumer and the DV could disagree with
+    // the count or the images inside one "atomic" commit (silently
+    // losing or duplicating rows). A delete pins the (file, pos) pairs
+    // alone; an update the matched rows, which it appends anyway — cost
+    // ∝ the change itself.
+    val matched = live.filter(expr(condition))
+    val pinned = (if (set.isEmpty) dvEntries(matched) else matched).localCheckpoint()
+    val nMatched = pinned.count()
     if (nMatched == 0L) {
-      graft.log.Log.info("versioned update: no matching rows",
-        "location" -> location, "version" -> s"v$latest")
-      return latest
+      graft.log.Log.info(s"versioned $op: no matching rows",
+        "location" -> location, "version" -> s"v${t.latest}")
+      return t.latest
     }
     // the updated images: SET expressions evaluate against the OLD row
-    val updated = matched.select(dataCols.map { c =>
+    val images = if (set.isEmpty) None else Some(pinned.select(dataCols.map { c =>
       set.get(c).map(e => expr(e).as(c)).getOrElse(col(c))
-    }: _*)
+    }: _*))
     // TYPE-PRESERVING contract: a SET expression that silently changes
     // the column's type would publish mixed-schema files the snapshot
     // read then fails on (INT literal vs BIGINT column is the classic)
     // — reject loudly, requiring an explicit CAST in the expression
-    dataCols.foreach { c =>
+    images.foreach(updated => dataCols.foreach { c =>
       val oldT = base.schema(c).dataType
       val newT = updated.schema(c).dataType
       if (oldT != newT) throw new graft.config.ConfigError(
         s"versioned update: SET would change column '$c' from $oldT to $newT — " +
           s"add an explicit CAST(... AS ${oldT.sql}) to the expression")
-    }
-    // stats: carried by name (still sound over-approximations for the
-    // old files); the NEW files get fresh stats for the tracked columns
-    val carried = sidecarOf(fs, root, head)
-    val commitId = newCommitId()
-    val (written, fresh) = writeData(root, updated, commitId, trackedColumns(carried),
-      format, options)
-    // old positions join the DV
-    val dvName = s"dv-$commitId"
-    val oldPositions = matched
-      .select(col("__dv_file").as("file"), col("__dv_pos").as("pos"))
-    writeDv(root, dvPrev.fold(oldPositions) { case (name, _) =>
-      readDv(spark, root, name).unionByName(oldPositions) }, dvName)
-    val dvRows = dvPrev.fold(0L)(_._2) + nMatched
-    val statsFile = writeSidecar(fs, root, commitId, carried ++ fresh)
-    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "update",
-      head.files ++ written, None, statsFile, Some((dvName, dvRows)), txnsAt(vs)(manifest))))
-      throw new java.util.ConcurrentModificationException(
-        s"versioned update: serializable conflict at '$location' — snapshot " +
-          s"was v$latest; a concurrent commit won v${latest + 1}; re-update")
-    graft.log.Log.info("versioned update",
-      "location" -> location, "version" -> s"v${latest + 1}",
-      "rows_updated" -> nMatched.toString, "files_rewritten" -> "0")
-    latest + 1
+    })
+    // every file carries (its stats stay sound over-approximations); the
+    // images get fresh stats for the tracked columns
+    val c = claim(spark, t, None,
+      Some((if (set.isEmpty) pinned else dvEntries(pinned), nMatched)),
+      images, images.fold(Seq.empty[String])(_ => trackedColumns(t.sidecar)), format, options)
+    publishNext(t, op, c)(s"versioned $op", "version" -> s"v${t.next}",
+      s"rows_$what" -> nMatched.toString, "files_rewritten" -> "0")
   }
 
   /** ROW-LEVEL DIFF of two snapshots — the CDC fallback for the commits
@@ -1300,30 +1292,22 @@ object VersionedTable {
     import org.apache.spark.sql.functions._
     require(minDeletedFraction > 0 && minDeletedFraction <= 1,
       s"compactDeletes: minDeletedFraction must be in (0,1], got $minDeletedFraction")
-    val root = new Path(location)
-    val fs = fsFor(spark, root)
-    val vs = versions(spark, location)
-    if (vs.isEmpty) throw new graft.config.ConfigError(
-      s"versioned compactDeletes: no committed versions at '$location'")
-    val latest = vs.last
-    val manifest = manifestCache(fs, root)
-    val head = manifest(latest)
-    val dvPrev = head.dv match {
-      case None => return (latest, 0)
+    val t = open(spark, location, "compactDeletes", "re-run")
+    val dvPrev = t.head.dv match {
+      case None => return (t.latest, 0)
       case Some(x) => x
     }
-    val files = head.names
-    val sidecar = sidecarOf(fs, root, head)
+    val files = t.head.names
     // deleted counts per file — the DV is delete-sized
-    val delCounts = readDv(spark, root, dvPrev._1)
+    val delCounts = readDv(spark, t.root, dvPrev._1)
       .groupBy(col("file")).agg(count(lit(1)).as("n_del"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val knownRows = sidecar.rows.toMap
+    val knownRows = t.sidecar.rows.toMap
     val uncounted = delCounts.keySet.filter(f =>
       files.contains(f) && !knownRows.contains(f)).toSeq
     val countedRows: Map[String, Long] =
       if (uncounted.isEmpty) Map.empty
-      else loadData(spark, root, uncounted, format, options)
+      else loadData(spark, t.root, uncounted, format, options)
         .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
@@ -1333,40 +1317,19 @@ object VersionedTable {
         rowsOf.get(f).exists(n => n > 0 && nd.toDouble / n >= minDeletedFraction)
       }
     }
-    if (rewrite.isEmpty) return (latest, 0)
-    val isRewritten = rewrite.toSet
-    val carried = files.filterNot(isRewritten)
-    val liveBase = loadData(spark, root, rewrite, format, options)
-    val live = applyDv(spark, root, liveBase, dvPrev._1)
-    // stats: fresh for the rewritten output; carried for untouched files
-    val commitId = newCommitId()
-    val (written, fresh) = writeData(root, live, commitId, trackedColumns(sidecar),
-      format, options)
-    // DV: drop entries for the rewritten files, keep the rest
-    val remaining = readDv(spark, root, dvPrev._1)
-      .filter(!col("file").isin(rewrite: _*))
-    val nRemain = remaining.count()
-    val dvNext =
-      if (nRemain == 0L) None
-      else {
-        val name = s"dv-$commitId"
-        writeDv(root, remaining, name)
-        Some((name, nRemain))
-      }
-    val statsFile = writeSidecar(fs, root, commitId,
-      sidecar.filterFiles(carried.toSet) ++ fresh)
-    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "compact_deletes",
-      head.files.filterNot(f => isRewritten(f._1)) ++ written, None,
-      statsFile, dvNext, txnsAt(vs)(manifest))))
-      throw new java.util.ConcurrentModificationException(
-        s"versioned compactDeletes: serializable conflict at '$location' — " +
-          s"a concurrent commit won v${latest + 1}; re-run")
-    graft.log.Log.info("versioned delete compaction",
-      "location" -> location, "version" -> s"v${latest + 1}",
+    if (rewrite.isEmpty) return (t.latest, 0)
+    val carried = files.filterNot(rewrite.toSet)
+    val live = applyDv(spark, t.root, loadData(spark, t.root, rewrite, format, options),
+      dvPrev._1)
+    // the rewritten output gets fresh stats; the carried files keep
+    // theirs and their DV entries
+    val c = claim(spark, t, Some(carried), None, Some(live),
+      trackedColumns(t.sidecar), format, options)
+    (publishNext(t, "compact_deletes", c)("versioned delete compaction",
+      "version" -> s"v${t.next}",
       "files_rewritten" -> rewrite.size.toString,
       "files_carried" -> carried.size.toString,
-      "dv_remaining" -> nRemain.toString)
-    (latest + 1, rewrite.size)
+      "dv_remaining" -> c.dv.fold(0L)(_._2).toString), rewrite.size)
   }
 
   // ---------------------------------------------------------------- branches
@@ -1489,30 +1452,19 @@ object VersionedTable {
     * the published main version. */
   def publishBranch(spark: SparkSession, location: String,
                     branch: String): Long = {
-    val root = new Path(location)
-    val fs = fsFor(spark, root)
     val bvs = branchVersions(spark, location, branch)
     if (bvs.isEmpty) throw new graft.config.ConfigError(
       s"versioned publish: branch '$branch' does not exist at '$location'")
     val forkBase = bvs.head
-    val mainVs = versions(spark, location)
-    val mainLatest = mainVs.last
-    if (mainLatest != forkBase)
+    val t = open(spark, location, "publish", "re-fork and re-stage")
+    if (t.latest != forkBase)
       throw new java.util.ConcurrentModificationException(
         s"versioned publish: serializable conflict at '$location' — branch " +
-          s"'$branch' forked at v$forkBase but main is at v$mainLatest; " +
+          s"'$branch' forked at v$forkBase but main is at v${t.latest}; " +
           "rebaseBranch (append-only staging) or re-fork and re-stage")
-    val head = manifestAt(fs, branchManifestPath(root, bvs.last, branch))
     // main's txns carry on; the branch's own stay on the branch
-    if (!writeManifestCas(fs, root, Manifest.next(forkBase + 1, "publish",
-      head.files, None, head.statsFile, head.dv, txnsAt(mainVs)(manifestCache(fs, root)))))
-      throw new java.util.ConcurrentModificationException(
-        s"versioned publish: serializable conflict at '$location' — a " +
-          s"concurrent commit won v${forkBase + 1}; re-fork and re-stage")
-    graft.log.Log.info("versioned branch published",
-      "location" -> location, "branch" -> branch,
-      "version" -> s"v${forkBase + 1}")
-    forkBase + 1
+    publishNext(t, "publish", Claim.of(manifestAt(t.fs, branchManifestPath(t.root, bvs.last, branch))))(
+      "versioned branch published", "branch" -> branch, "version" -> s"v${t.next}")
   }
 
   /** REBASE an append-only branch onto the moved main head — the retry
@@ -1635,7 +1587,7 @@ object VersionedTable {
   }
 
   /** Names of live branches at the location. */
-  def branches(spark: SparkSession, location: String): Seq[String] = {
+  private[sinks] def branches(spark: SparkSession, location: String): Seq[String] = {
     val root = new Path(location)
     val fs = fsFor(spark, root)
     if (!fs.exists(logDir(root))) Seq.empty
@@ -1825,29 +1777,17 @@ object VersionedTable {
     * [[changesBetween]] refuses to cross a restore (mode != append),
     * the same CDC contract as overwrite/merge/delete. */
   def restore(spark: SparkSession, location: String, toVersion: Long): Long = {
-    val root = new Path(location)
-    val fs = fsFor(spark, root)
-    val vs = versions(spark, location)
-    if (!vs.contains(toVersion)) throw new graft.config.ConfigError(
-      s"versioned restore: version $toVersion not in committed set ${vs.mkString("[", ",", "]")}")
-    val latest = vs.last
-    if (toVersion == latest) {
+    val t = open(spark, location, "restore", "re-inspect and re-restore", allowEmpty = true)
+    if (!t.vs.contains(toVersion)) throw new graft.config.ConfigError(
+      s"versioned restore: version $toVersion not in committed set ${t.vs.mkString("[", ",", "]")}")
+    if (toVersion == t.latest) {
       graft.log.Log.info("versioned restore: already at target",
-        "location" -> location, "version" -> s"v$latest")
-      return latest
+        "location" -> location, "version" -> s"v${t.latest}")
+      return t.latest
     }
-    val manifest = manifestCache(fs, root)
-    val target = manifest(toVersion)
     // the log's txns are history, not table content: they carry from the head
-    if (!writeManifestCas(fs, root, Manifest.next(latest + 1, "restore",
-      target.files, None, target.statsFile, target.dv, txnsAt(vs)(manifest))))
-      throw new java.util.ConcurrentModificationException(
-        s"versioned restore: serializable conflict at '$location' — a " +
-          s"concurrent commit won v${latest + 1}; re-inspect and re-restore")
-    graft.log.Log.info("versioned restore",
-      "location" -> location, "restored_to" -> s"v$toVersion",
-      "version" -> s"v${latest + 1}")
-    latest + 1
+    publishNext(t, "restore", Claim.of(t.manifest(toVersion)))("versioned restore",
+      "restored_to" -> s"v$toVersion", "version" -> s"v${t.next}")
   }
 
   /** Manifest byte total of ONE committed version — a single manifest

@@ -4,9 +4,10 @@ package graft.util
   * graft writes: log events, Bench's result line, `oracle_sql.json`,
   * versioned-table manifests and stats sidecars, materialized-view state,
   * generation pointers, sink manifests, `_graft_metrics.json` and bookmark
-  * state — and the one reader ([[read]]) for the state files graft parses
-  * back: manifests, rebase markers, materialized-view state, generation
-  * pointers and CDC offsets. */
+  * state — and the readers for the state files graft parses back:
+  * [[read]] for manifests, rebase markers, materialized-view state,
+  * generation pointers and CDC offsets, [[rawObjects]] for stats
+  * sidecars. */
 object Json {
   import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
@@ -23,6 +24,37 @@ object Json {
   /** The integer field `key` of the object `n`, if present. */
   def long(n: JsonNode, key: String): Option[Long] =
     Option(n.get(key)).filter(_.isIntegralNumber).map(_.longValue)
+
+  /** The flat JSON objects `text` holds one after another (JSON Lines),
+    * each as its members in order, every value as the exact text of its
+    * token: a number as written (`1000` stays `1000`, `-0.0` keeps its
+    * sign, a 25-digit decimal keeps every digit), a string quoted and
+    * escaped as written, `null` as itself. Malformed JSON, or a value
+    * that is an object or an array, throws an IOException. */
+  private[graft] def rawObjects(text: String): Seq[Seq[(String, String)]] = {
+    import com.fasterxml.jackson.core.JsonToken._
+    val p = mapper.getFactory.createParser(text)
+    def fail(what: String) = throw new java.io.IOException(
+      s"$what at offset ${p.currentTokenLocation.getCharOffset}: ${text.take(200)}")
+    try Iterator.continually(p.nextToken()).takeWhile(_ != null).map { t =>
+      if (t != START_OBJECT) fail("not a JSON object")
+      Iterator.continually(p.nextToken()).takeWhile(_ != END_OBJECT).map { _ =>
+        val key = p.currentName
+        p.nextToken() match {
+          case VALUE_STRING =>
+            // the token's own text, from its opening quote to its closing one
+            val start = p.currentTokenLocation.getCharOffset.toInt
+            p.getText: Unit // decodes the string: a malformed escape throws here
+            var end = start + 1
+            while (text.charAt(end) != '"') end += (if (text.charAt(end) == '\\') 2 else 1)
+            key -> text.substring(start, end + 1)
+          case START_OBJECT | START_ARRAY => fail(s"nested value for '$key'")
+          case _ => key -> p.getText
+        }
+      }.toVector
+    }.toVector
+    finally p.close()
+  }
 
   /** `s` as a quoted JSON string: `\"`, `\\`, `\n`, `\r`, `\t`, and every
     * other control character as `\u00XX`. The line and paragraph

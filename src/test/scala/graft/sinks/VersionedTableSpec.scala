@@ -1422,6 +1422,39 @@ class VersionedTableSpec extends SparkSpec {
       Manifest(2L, None, "overwrite", None, None, None, Seq(("a", 5L))))
   }
 
+  test("stats sidecar record: parse keeps every token's text, render writes the same bytes") {
+    import VersionedTable.{ColStats, SidecarStats}
+    // spelled %u: a triple-quoted literal decodes unicode escapes
+    val golden = Seq(
+      """{"name":"a.parquet","col":"k","min":-0.0,"max":1234567890123456789012345.5,"nulls":0}""",
+      """{"name":"a.parquet","col":"n","min":1000,"max":-0.0000000000000000000000001,"nulls":0}""",
+      """{"name":"a.parquet","col":"s","min":"\",\"max\":","max":"q\"b\\c\nd%u2028e","nulls":1}""",
+      """{"name":"b.parquet","col":"k","min":null,"max":null,"nulls":3}""",
+      """{"name":"b.parquet","col":"s","min":null,"max":null,"nulls":3}""",
+      """{"name":"c%u2028.parquet","col":"s","min":"a%u000ab","max":"b","nulls":0}""",
+      """{"name":"a.parquet","rows":4}""",
+      """{"name":"b.parquet","rows":3}""",
+      """{"name":"a.parquet","col":"k","buckets":"AAE="}""").map(_.replace("%u", "\\u"))
+      .mkString("", "\n", "\n")
+    val parsed = SidecarStats.parse(golden)
+    assert(parsed == SidecarStats(
+      cols = Seq(
+        ("a.parquet", "k", ColStats("-0.0", "1234567890123456789012345.5", 0L)),
+        ("a.parquet", "n", ColStats("1000", "-0.0000000000000000000000001", 0L)),
+        ("a.parquet", "s", ColStats(graft.util.Json.str("\",\"max\":"),
+          graft.util.Json.str("q\"b\\c\nd\u2028e"), 1L)),
+        ("b.parquet", "k", ColStats("null", "null", 3L)),
+        ("b.parquet", "s", ColStats("null", "null", 3L)),
+        // an escape Json.str would not write comes back as written
+        ("c\u2028.parquet", "s", ColStats("\"a\\u000ab\"", "\"b\"", 0L))),
+      rows = Seq(("a.parquet", 4L), ("b.parquet", 3L)),
+      sets = Seq(("a.parquet", "k", "AAE="))))
+    assert(parsed.render == golden)
+    // a torn or foreign line fails loudly rather than reading as no stats
+    intercept[java.io.IOException](SidecarStats.parse("""{"name":"a.parquet","rows":"""))
+    intercept[java.io.IOException](SidecarStats.parse("""[1,2]"""))
+  }
+
   test("createBranch publishes its fork manifest through the commit coordinator") {
     val loc = tmp("br-coord")
     VersionedTable.commit(spark, loc, Seq((1, "a")).toDF("k", "v"), "overwrite")
