@@ -32,7 +32,7 @@ import graft.config.{ConfigError, JobSpec, SourceSpec, Interpolate}
   *    VALUES (e, ...)`, and `WHEN NOT MATCHED BY SOURCE [AND <cond>]
   *    THEN UPDATE SET ... | DELETE`. The exact row-replace shape
   *    (`UPDATE SET * / INSERT *`, unconditional) takes the classic
-  *    zone-map-pruned file-level merge; every other combination runs
+  *    zone-map-pruned row-replace merge; every other combination runs
   *    [[graft.sinks.MergeActions]]' conditional evaluator with the
   *    file-carry contract preserved (only NOT MATCHED BY SOURCE — whose
   *    semantics touch every unmatched target row — forces a whole-table

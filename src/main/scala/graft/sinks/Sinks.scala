@@ -447,8 +447,8 @@ object Sinks {
     * multiply the counts. Attached on the merged frame the metrics
     * describe the table as PUBLISHED, which is what a publish audit
     * certifies anyway. Under PRUNED merges (partitioned upsert,
-    * versioned file-level merge) the executed-once frame covers the
-    * REWRITTEN portion only — untouched partitions/files carry by
+    * versioned merge) the executed-once frame covers the WRITTEN
+    * portion only — untouched partitions/files carry by
     * reference and are deliberately not re-scanned for metrics (a
     * whole-table metrics pass would defeat the pruning). */
   /** `mask:` release transform — applied to every sink path (batch and
@@ -582,11 +582,12 @@ object Sinks {
             if (before.contains(v) && pendingObs.nonEmpty)
               frame.foreach(_ => ())
           case Refresh.Upsert =>
-            // FILE-LEVEL merge: only files whose zone maps can contain
-            // an arrival key are rewritten; the rest carry by
-            // reference (stats_columns on the merge key makes the
-            // pruning sharp; without stats it degrades to a full
-            // rewrite — correct, just unpruned). Serializable.
+            // only files whose zone maps can contain an arrival key
+            // are read; on parquet their replaced rows go to the
+            // deletion vector and every file carries by reference
+            // (stats_columns on the merge key makes the pruning sharp;
+            // without stats every file is read — correct, just
+            // unpruned). Serializable.
             VersionedTable.merge(spark, location, data,
               out.mergeKeys, out.format, out.options,
               statsColumns = out.statsColumns,

@@ -68,8 +68,10 @@ import scala.jdk.CollectionConverters._
   *    metadata DESCRIBE HISTORY ([[history]]); CDC over appends
   *    ([[changesBetween]]) and the two-snapshot row diff for everything
   *    else ([[diffVersions]])
-  *  - FILE-LEVEL MERGE ([[merge]]): narrow upserts rewrite only
-  *    zone-map-matched files
+  *  - MERGE ([[merge]]): a parquet upsert claims the replaced rows of
+  *    its zone-map-matched files into the deletion vector and writes
+  *    only the arrivals; a file whose deleted fraction would reach 0.3
+  *    is rewritten instead
   *  - row-level DELETE/UPDATE via DELETION VECTORS ([[deleteWhere]],
   *    [[updateWhere]] — type-preserving SETs enforced): (file, position)
   *    sidecars, zero data files rewritten; [[compactDeletes]] rewrites
@@ -366,6 +368,142 @@ object VersionedTable {
   private def readDv(spark: SparkSession, root: Path, name: String): DataFrame =
     spark.read.schema(DvSchema).parquet(new Path(logDir(root), name).toString)
 
+  /** Deletion-vector rows and their count: held on the driver
+    * ([[DriverDv]]) when small enough ([[dvOnDriver]]), else a Spark
+    * frame ([[SparkDv]]). */
+  private sealed trait Dv {
+    def n: Long
+    def frame(spark: SparkSession): DataFrame
+    /** The rows of the data files `names`, None when that is none at
+      * all; `known` is their count when the caller has it (a restricted
+      * Spark frame is counted otherwise, one job). */
+    def over(names: Seq[String], known: Option[Long] = None): Option[Dv]
+    /** The DV a scan of the data files `names` anti-joins: rows held on
+      * the driver restricted to those files (None when none is), a Spark
+      * frame whole (its rows of other files match nothing). */
+    def scanning(names: Seq[String]): Option[Dv]
+    /** Rows per data file (a Spark frame counts them in one job). */
+    def perFile: Map[String, Long]
+  }
+  private final case class DriverDv(rows: Seq[(String, Long)]) extends Dv {
+    def n: Long = rows.size.toLong
+    def frame(spark: SparkSession): DataFrame = spark.createDataFrame(rows).toDF("file", "pos")
+    def over(names: Seq[String], known: Option[Long]): Option[Dv] = {
+      val keep = names.toSet
+      Some(DriverDv(rows.filter(r => keep(r._1)))).filter(_.rows.nonEmpty)
+    }
+    def scanning(names: Seq[String]): Option[Dv] = over(names)
+    def perFile: Map[String, Long] = rows.groupMapReduce(_._1)(_ => 1L)(_ + _)
+  }
+  private final case class SparkDv(df: DataFrame, n: Long) extends Dv {
+    def frame(spark: SparkSession): DataFrame = df
+    def over(names: Seq[String], known: Option[Long]): Option[Dv] = {
+      val kept = df.filter(org.apache.spark.sql.functions.col("file").isin(names: _*))
+      Some(SparkDv(kept, known.getOrElse(kept.count()))).filter(_.n > 0L)
+    }
+    def scanning(names: Seq[String]): Option[Dv] = Some(this)
+    def perFile: Map[String, Long] = {
+      import org.apache.spark.sql.functions.{col, count, lit}
+      df.groupBy(col("file")).agg(count(lit(1))).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toMap
+    }
+  }
+  private object Dv {
+    def union(spark: SparkSession, a: Dv, b: Dv): Dv = (a, b) match {
+      case (DriverDv(x), DriverDv(y)) => DriverDv(x ++ y)
+      case _ => SparkDv(a.frame(spark).unionByName(b.frame(spark)), a.n + b.n)
+    }
+  }
+
+  /** True when `rows` deletion-vector rows over data files named like
+    * `names` fit under the session's `spark.sql.autoBroadcastJoinThreshold`
+    * (-1 turns the driver path off), each sized as Spark holds a (file,
+    * pos) row: 24 bytes plus the name rounded up to 8. Callers pass counts
+    * known before any job runs: a manifest's `dv_rows` and the sidecar
+    * row counts of the files whose rows may be claimed. */
+  private def dvOnDriver(spark: SparkSession, rows: Long, names: Seq[String]): Boolean = {
+    val limit = org.apache.spark.sql.GraftSqlBridge.sqlConf(spark).autoBroadcastJoinThreshold
+    val rowBytes = 24L + (names.map(_.length).maxOption.getOrElse(0) + 7) / 8 * 8
+    limit > 0 && rows <= limit / rowBytes
+  }
+
+  /** The deletion vector `dv` (sidecar name, recorded rows) of a version
+    * whose data files are `names`: read on the driver when it is small
+    * ([[dvOnDriver]]), else left to Spark. */
+  private def openDv(spark: SparkSession, fs: FileSystem, root: Path,
+                     dv: (String, Long), names: Seq[String]): Dv =
+    if (dvOnDriver(spark, dv._2, names)) DriverDv(readDvRows(fs, root, dv._1))
+    else SparkDv(readDv(spark, root, dv._1), dv._2)
+
+  /** The rows of the DV sidecar `name`, read on the driver with parquet-mr:
+    * every part file of the directory, skipping the names Spark's listing
+    * skips (`_SUCCESS`, `.crc` and other `_`/`.` names). */
+  private[sinks] def readDvRows(fs: FileSystem, root: Path, name: String): Seq[(String, Long)] = {
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.ColumnIOFactory
+    fs.listStatus(new Path(logDir(root), name)).toSeq
+      .filter { st => val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".") }
+      .sortBy(_.getPath.getName)
+      .flatMap { st =>
+        val in = ParquetFileReader.open(HadoopInputFile.fromStatus(st, fs.getConf))
+        try {
+          val schema = in.getFooter.getFileMetaData.getSchema
+          val io = new ColumnIOFactory().getColumnIO(schema)
+          Iterator.continually(in.readNextRowGroup()).takeWhile(_ != null).flatMap { pages =>
+            val rows = io.getRecordReader(pages, new GroupRecordConverter(schema))
+            Iterator.fill(pages.getRowCount.toInt)(rows.read())
+              .map(g => (g.getString("file", 0), g.getLong("pos", 0)))
+          }.toVector
+        } finally in.close()
+      }
+  }
+
+  /** Write `rows` as the DV sidecar `name`: one snappy parquet file, rows
+    * in (file, pos) order, built in memory with parquet-mr and written
+    * through [[graft.util.Fs.write]] — no Spark job, no committer. */
+  private def writeDvRows(fs: FileSystem, root: Path, name: String,
+                          rows: Seq[(String, Long)]): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message spark_schema { optional binary file (STRING); optional int64 pos; }")
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new org.apache.parquet.io.OutputFile {
+      private def stream = new org.apache.parquet.io.PositionOutputStream {
+        def getPos: Long = bytes.size.toLong
+        def write(b: Int): Unit = bytes.write(b)
+        override def write(b: Array[Byte], off: Int, len: Int): Unit = bytes.write(b, off, len)
+      }
+      def create(blockSizeHint: Long): org.apache.parquet.io.PositionOutputStream = stream
+      def createOrOverwrite(blockSizeHint: Long): org.apache.parquet.io.PositionOutputStream = stream
+      def supportsBlockSize: Boolean = false
+      def defaultBlockSize: Long = 0L
+    }
+    val groups = new SimpleGroupFactory(schema)
+    val w = ExampleParquetWriter.builder(out).withType(schema).withConf(fs.getConf)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows.sorted.foreach { case (f, p) => w.write(groups.newGroup().append("file", f).append("pos", p)) }
+    finally w.close()
+    graft.util.Fs.write(fs, new Path(new Path(logDir(root), name), s"part-00000-$name.snappy.parquet"),
+      bytes.toByteArray)
+  }
+
+  /** Write `dv` as the DV sidecar `name` under `_graft_log/`: rows held
+    * on the driver as one file ([[writeDvRows]]); a Spark frame through
+    * Spark's committer path (`df.write`: a temporary directory, then a
+    * rename into place), unlike data files ([[writeData]]): readers load
+    * a DV by listing its directory, so a failed task attempt's file
+    * written in place would join the DV. */
+  private def writeDv(fs: FileSystem, root: Path, dv: Dv, name: String): Unit = dv match {
+    case DriverDv(rows) => writeDvRows(fs, root, name, rows)
+    case SparkDv(df, _) =>
+      df.write.mode(SaveMode.Overwrite).parquet(new Path(logDir(root), name).toString)
+  }
+
   /** The data files `names` of the table at `root`, opened through
     * [[graft.sources.Sources.loadFiles]]: a parquet schema is pinned
     * from one driver-side footer read, so opening starts no Spark job.
@@ -377,21 +515,20 @@ object VersionedTable {
       names.map(n => new Path(dataDir(root), n).toString))
 
   /** `df` (which must carry parquet `_metadata`) with its row
-    * positions exposed as `__dv_file` (file basename) / `__dv_pos`
-    * (row index) and the deletion vector — when one is named —
-    * anti-joined away (the DV is the small side; AQE broadcasts it).
-    * The ONE position-derivation in this file: [[applyDv]],
-    * [[deleteWhere]], [[updateWhere]], and the BY SOURCE merge path
-    * all read through it, so the DV layout cannot fork. */
-  private def livePositions(spark: SparkSession, root: Path, df: DataFrame,
-                            dv: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
+    * positions exposed as `__dv_file` (`_metadata.file_name`) /
+    * `__dv_pos` (row index) and the deletion vector `dv` anti-joined
+    * away — the DV is the small side: rows held on the driver join as a
+    * `LocalRelation`, a Spark frame as its scan, and AQE broadcasts
+    * either. The ONE position-derivation in this file: [[applyDv]],
+    * [[deleteWhere]], [[updateWhere]] and both DV routes of [[merge]]
+    * read through it, so the DV layout cannot fork. */
+  private def livePositions(spark: SparkSession, df: DataFrame, dv: Option[Dv]): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val withPos = df
-      .withColumn("__dv_file",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
+      .withColumn("__dv_file", col("_metadata.file_name"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
-    dv.fold(withPos) { name =>
-      withPos.join(readDv(spark, root, name)
+    dv.fold(withPos) { d =>
+      withPos.join(d.frame(spark)
           .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
         Seq("__dv_file", "__dv_pos"), "left_anti")
     }
@@ -404,22 +541,21 @@ object VersionedTable {
   }
 
   /** Anti-join `df` (which must carry parquet `_metadata`) against the
-    * deletion vector: rows whose (file basename, row position) appear in
+    * deletion vector: rows whose (file name, row position) appear in
     * the DV disappear. */
-  private def applyDv(spark: SparkSession, root: Path, df: DataFrame,
-                      dvName: String): DataFrame = {
+  private def applyDv(spark: SparkSession, df: DataFrame, dv: Option[Dv]): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val outCols = df.columns.toSeq
-    livePositions(spark, root, df, Some(dvName)).select(outCols.map(col): _*)
+    dv.fold(df)(d => livePositions(spark, df, Some(d)).select(df.columns.toSeq.map(col): _*))
   }
 
-  /** The live rows of the data files `names`: `dv`'s rows anti-joined away. */
+  /** The live rows of the data files `names`: `dv`'s rows anti-joined
+    * away; a DV read on the driver joins only its rows of `names`, and
+    * not at all when it holds none. */
   private def liveRows(spark: SparkSession, root: Path, names: Seq[String],
                        dv: Option[(String, Long)], format: String,
-                       options: Map[String, String]): DataFrame = {
-    val base = loadData(spark, root, names, format, options)
-    dv.fold(base) { case (name, _) => applyDv(spark, root, base, name) }
-  }
+                       options: Map[String, String]): DataFrame =
+    applyDv(spark, loadData(spark, root, names, format, options),
+      dv.flatMap(d => openDv(spark, fsFor(spark, root), root, d, names).scanning(names)))
 
   /** The snapshot `m` of the main table at `location`: exactly its files,
     * minus its deletion vector. */
@@ -469,6 +605,17 @@ object VersionedTable {
     case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
     case d: java.time.LocalDate => d.toEpochDay.toString
     case s => Json.str(s.toString)
+  }
+
+  /** [[canonToken]] of a zone-map bound, or None for NaN and ±Infinity:
+    * Spark orders them past every decimal (NaN largest of all), which no
+    * decimal token can, so such a bound is UNKNOWN — the file records no
+    * zone map for that column, a merge treats every file as a hit, and a
+    * probe keeps every file. */
+  private[sinks] def boundToken(v: Any): Option[String] = v match {
+    case d: Double if d.isNaN || d.isInfinite => None
+    case f: Float if f.isNaN || f.isInfinite => None
+    case _ => Some(canonToken(v))
   }
 
   /** cmp on canonical tokens; None = not comparable (null / kind
@@ -551,7 +698,8 @@ object VersionedTable {
     * in `data/` ([[FileWrite]]: one Spark job, no staging or rename), with
     * zone maps for `cols` computed inside the write tasks. Returns the
     * files `(name, bytes)` and their sidecar stats: min/max as canonical
-    * tokens of the values Spark's own min/max pick, null and row counts,
+    * tokens of the values Spark's own min/max pick (none for a column
+    * whose min or max is NaN or infinite, [[boundToken]]), null and row counts,
     * and bucket bitmaps for integral and string columns (the bitmap feed
     * is bounded at 4096 buckets per file and column). A stats column the
     * frame lacks fails before any file is written. */
@@ -564,12 +712,13 @@ object VersionedTable {
     val written = FileWrite(df, format, graft.sources.Sources.mapOptions(options),
       dataDir(root).toString, commitId, cols)
     val types = cols.map(c => df.schema(c).dataType)
-    def token(v: Any, t: org.apache.spark.sql.types.DataType): String =
-      canonToken(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(v, t))
+    def token(v: Any, t: org.apache.spark.sql.types.DataType): Option[String] =
+      boundToken(org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToScala(v, t))
     val stats = SidecarStats(
       cols = written.stats.flatMap { f =>
-        cols.indices.map(i => (f.name, cols(i),
-          ColStats(token(f.min(i), types(i)), token(f.max(i), types(i)), f.nulls(i))))
+        cols.indices.flatMap(i =>
+          for (lo <- token(f.min(i), types(i)); hi <- token(f.max(i), types(i)))
+            yield (f.name, cols(i), ColStats(lo, hi, f.nulls(i))))
       },
       rows = written.stats.map(f => (f.name, f.rows)),
       sets = written.stats.flatMap { f =>
@@ -695,29 +844,21 @@ object VersionedTable {
 
   private def newCommitId(): String = java.util.UUID.randomUUID().toString.take(8)
 
-  /** Write `df` as the deletion-vector sidecar `name` under `_graft_log/`.
-    * DV sidecars keep Spark's committer path (`df.write`: a temporary
-    * directory, then a rename into place), unlike data files
-    * ([[writeData]]): readers load a DV by listing its directory, so a
-    * failed task attempt's file written in place would join the DV.
-    * Writing DVs under final names needs the DV's file list in the
-    * manifest first. */
-  private def writeDv(root: Path, df: DataFrame, name: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(new Path(logDir(root), name).toString)
-
   // ------------------------------------------------ open → claim → publish
 
   /** What a serializable writer `op` opened ([[open]]): main's versions,
     * each manifest opened at most once, the head and — on first use —
-    * the head's stats sidecar. `retry` ends its conflict messages. */
-  private final class Opened(val location: String, val fs: FileSystem, val vs: Seq[Long],
-                             val op: String, val retry: String) {
+    * the head's stats sidecar and deletion vector. `retry` ends its
+    * conflict messages. */
+  private final class Opened(spark: SparkSession, val location: String, val fs: FileSystem,
+                             val vs: Seq[Long], val op: String, val retry: String) {
     val root = new Path(location)
     val manifest: Long => Manifest = manifestCache(fs, root)
     def latest: Long = vs.last
     def next: Long = latest + 1
     lazy val head: Manifest = manifest(latest)
     lazy val sidecar: SidecarStats = sidecarOf(fs, root, head)
+    lazy val dv: Option[Dv] = head.dv.map(openDv(spark, fs, root, _, head.names))
   }
 
   /** OPEN: list main's versions; an empty table fails unless
@@ -725,8 +866,8 @@ object VersionedTable {
     * commit since the caller's snapshot) is a serializable conflict. */
   private def open(spark: SparkSession, location: String, op: String, retry: String,
                    expectedLatest: Option[Long] = None, allowEmpty: Boolean = false): Opened = {
-    val t = new Opened(location, fsFor(spark, new Path(location)), versions(spark, location),
-      op, retry)
+    val t = new Opened(spark, location, fsFor(spark, new Path(location)),
+      versions(spark, location), op, retry)
     if (t.vs.isEmpty && !allowEmpty) throw new graft.config.ConfigError(
       s"versioned $op: no committed versions at '$location'")
     val latest = t.vs.lastOption.getOrElse(0L)
@@ -753,37 +894,37 @@ object VersionedTable {
     *    holds the carried files' stats and theirs; with no images the
     *    head's sidecar carries by name;
     *  - the next deletion vector is the head's restricted to the carried
-    *    files plus the `claimed` (file, pos) rows (with their count),
-    *    written once as `dv-<commitId>`, or not at all when empty. Kept
-    *    whole, the head's DV keeps its recorded count; restricted, it is
-    *    counted (one job).
+    *    files plus the `claimed` (file, pos) rows, written once as
+    *    `dv-<commitId>` ([[writeDv]]: on the driver when every part is
+    *    held there, else by Spark), or not at all when empty. With every
+    *    file carried and nothing claimed, the head's DV carries by name.
+    *    Kept whole, the head's DV keeps its recorded count; restricted,
+    *    the driver counts its rows, and a Spark DV takes
+    *    `carriedDvRows` when the caller knows it, else one job counts it.
     * Every write lands under a commit-unique name before the CAS. */
   private def claim(spark: SparkSession, t: Opened, carried: Option[Seq[String]],
-                    claimed: Option[(DataFrame, Long)], images: Option[DataFrame],
+                    claimed: Option[Dv], images: Option[DataFrame],
                     statsColumns: Seq[String], format: String,
-                    options: Map[String, String]): Claim = {
-    import org.apache.spark.sql.functions.col
+                    options: Map[String, String],
+                    carriedDvRows: Option[Long] = None): Claim = {
     val commitId = newCommitId()
-    val keep = carried.map(_.toSet)
+    // None: every head file carries
+    val keep = carried.map(_.toSet).filterNot(k => t.head.names.forall(k))
     val kept = keep.fold(t.head.files)(k => t.head.files.filter(f => k(f._1)))
     val (files, statsFile) = images.fold((kept, t.head.statsFile)) { df =>
       val (written, fresh) = writeData(t.root, df, commitId, statsColumns, format, options)
       (kept ++ written, writeSidecar(t.fs, t.root, commitId,
         keep.fold(t.sidecar)(t.sidecar.filterFiles) ++ fresh))
     }
-    val prev = t.head.dv.flatMap { case (name, n) =>
-      val dv = readDv(spark, t.root, name)
-      carried.fold(Option((dv, n))) { names =>
-        val cdv = dv.filter(col("file").isin(names: _*))
-        Some((cdv, cdv.count())).filter(_._2 > 0L)
+    val dv =
+      if (keep.isEmpty && claimed.isEmpty) t.head.dv
+      else {
+        val prev = t.dv.flatMap(d => keep.fold(Option(d))(k => d.over(k.toSeq, carriedDvRows)))
+        (prev ++ claimed.filter(_.n > 0L)).reduceOption(Dv.union(spark, _, _)).map { d =>
+          writeDv(t.fs, t.root, d, s"dv-$commitId")
+          (s"dv-$commitId", d.n)
+        }
       }
-    }
-    val dv = (prev ++ claimed).reduceOption[(DataFrame, Long)] {
-      case ((a, na), (b, nb)) => (a.unionByName(b), na + nb)
-    }.map { case (df, n) =>
-      writeDv(t.root, df, s"dv-$commitId")
-      (s"dv-$commitId", n)
-    }
     Claim(files, statsFile, dv)
   }
 
@@ -900,26 +1041,35 @@ object VersionedTable {
     snapshot(spark, root, location, manifestOf(fs, root, v), format, options)
   }
 
-  /** FILE-LEVEL MERGE (upsert): arrivals replace table rows with equal
-    * `keys`, new keys insert — and only the files whose zone maps can
-    * contain an arrival key are read and REWRITTEN; every other file
-    * carries into the new manifest BY REFERENCE, zero bytes moved. The
-    * Delta/Iceberg MERGE shape: at 100 TB a day's upsert touching 0.1%
-    * of the key space rewrites ~0.1% of the files, not the table.
-    * Pruning is the [min(arrival key), max(arrival key)] range against
-    * each file's `keys.head` zone map — conservative (missing stats →
-    * file rewritten; sound for multi-key merges since it prunes on the
-    * leading key only); an all-null-key file is never touched (equality
-    * never matches NULL). SERIALIZABLE: a concurrent commit since the
-    * snapshot aborts loudly — a silent rebase would resurrect rows the
-    * concurrent writer replaced. Returns the committed version. */
+  /** MERGE (upsert): arrivals replace table rows with equal `keys`, new
+    * keys insert. Only the files whose zone maps can contain an arrival
+    * key (the zone-hit files) are read; pruning is the [min(arrival key),
+    * max(arrival key)] range against each file's `keys.head` zone map —
+    * conservative (missing stats → a hit; sound for multi-key merges
+    * since it prunes on the leading key only); an all-null-key file is
+    * never hit (equality never matches NULL).
+    *
+    * On parquet the row-replace upsert rewrites no file it need not: the
+    * live rows of the zone-hit files whose key equals an arrival key give
+    * their positions to the next DELETION VECTOR, the arrivals are
+    * written as the only new rows, and every file carries BY REFERENCE —
+    * the Delta deletion-vector shape, bytes written ∝ the change. A
+    * zone-hit file whose deleted fraction would reach
+    * [[RewriteFraction]] with this merge's claims is rewritten instead
+    * (its live, unreplaced rows), in the same write job as the arrivals.
+    * Non-parquet formats have no row positions and conditional MATCHED
+    * actions change rows in place: those rewrite the zone-hit files.
+    * SERIALIZABLE: a concurrent commit since the snapshot aborts loudly
+    * — a silent rebase would resurrect rows the concurrent writer
+    * replaced. Returns the committed version. */
   def merge(spark: SparkSession, location: String, arrivals: DataFrame,
             keys: Seq[String], format: String = "parquet",
             options: Map[String, String] = Map.empty,
             statsColumns: Seq[String] = Nil,
-            // applied to the MERGED frame right before staging — the hook
+            // applied to the frame this commit writes (the arrivals and
+            // any rewritten rows) right before staging — the hook
             // sink-level Observations attach through (the arrivals frame
-            // appears twice in the merge plan, so observing it upstream
+            // appears twice in a rewrite plan, so observing it upstream
             // would double the counts)
             publishTransform: DataFrame => DataFrame = identity,
             // a caller that computed `arrivals` against a pinned snapshot
@@ -1000,22 +1150,27 @@ object VersionedTable {
     val stats = statsByFile(t.sidecar)
     val k0 = keys.head
     val bounds = arrivals.agg(fmin(col(k0)), fmax(col(k0))).head()
-    val (lo, hi) = (canonToken(bounds.get(0)), canonToken(bounds.get(1)))
+    // None: a NaN or infinite bound, unknown to the zone maps
+    val (lo, hi) = (boundToken(bounds.get(0)), boundToken(bounds.get(1)))
     def touchedBy(f: String): Boolean =
-      if (lo == "null") false // every arrival key NULL: equality never matches
+      if (lo.contains("null")) false // every arrival key NULL: equality never matches
       else stats.get(f).flatMap(_.get(k0)) match {
         case None => true // no zone map: must assume a match
         case Some(s) =>
           if (s.min == "null" && s.max == "null") false // all-null-key file
-          else (cmpTokens(s.max, lo), cmpTokens(s.min, hi)) match {
+          else (lo.flatMap(cmpTokens(s.max, _)), hi.flatMap(cmpTokens(s.min, _))) match {
             case (Some(a), Some(b)) => a >= 0 && b <= 0 // ranges overlap
-            case _ => true // kinds incomparable: conservative rewrite
+            case _ => true // kinds incomparable or bound unknown: conservative hit
           }
       }
     // the zone-hit files: the only files whose rows CAN match an
     // arrival key (pruning on the leading key; conservative)
     val touchedProbe = files.filter(touchedBy)
-    // files REWRITTEN this commit. MATCHED actions change rows in
+    if (!conditional && format == "parquet")
+      return upsertViaDv(spark, t, arrivals, keys, touchedProbe, statsColumns,
+        publishTransform, options)
+    // files REWRITTEN this commit: a non-parquet upsert's zone-hit
+    // files. MATCHED actions change rows in
     // place, so the zone-hit files rewrite through the evaluator;
     // insert actions never touch existing files; BY SOURCE actions
     // reach every unmatched target row, but on parquet they route
@@ -1065,7 +1220,6 @@ object VersionedTable {
     if (!conditional && touched.isEmpty)
       checkDrift(spark, root, location, "merge: arrival", head,
         arrivals.columns.toSeq, format, options)
-    val latestDv = head.dv
     // live rows of the named files (a touched file's deleted rows must
     // not resurrect — the DV applies to the snapshot being merged).
     // The EVALUATOR reads the rewrite set (`touched` — which is ALL
@@ -1074,7 +1228,8 @@ object VersionedTable {
     // zone-miss file's rows from the rewrite); the no-matched-action
     // anti-join reads the probe set alone.
     def liveOf(names: Seq[String]): DataFrame =
-      liveRows(spark, root, names, latestDv, format, options)
+      applyDv(spark, loadData(spark, root, names, format, options),
+        t.dv.flatMap(_.scanning(names)))
     val merged =
       if (!conditional) {
         if (touched.isEmpty) arrivals
@@ -1114,7 +1269,7 @@ object VersionedTable {
       if (!bySourceViaDv || untouched.isEmpty) None
       else {
         val base = loadData(spark, root, untouched, format, options)
-        val live = livePositions(spark, root, base, latestDv.map(_._1))
+        val live = livePositions(spark, base, t.dv.flatMap(_.scanning(untouched)))
         // zone-miss files cannot hold an arrival key, but carried
         // zone-HIT files (no matched actions) can — those matched rows
         // are NOT "not matched by source": anti-join the arrival keys
@@ -1139,7 +1294,7 @@ object VersionedTable {
     // the rewritten files materialized their deletes away; the carried
     // files keep their DV entries, joined by the BY SOURCE claims
     val c = claim(spark, t, Some(untouched),
-      bySourceClaimed.map { case (claimed, n) => (dvEntries(claimed), n) },
+      bySourceClaimed.map { case (claimed, n) => SparkDv(dvEntries(claimed), n) },
       Some(publishTransform(publishFrame)), statsColumns, format, options)
     publishNext(t, "merge", c)("versioned merge", "version" -> s"v${t.next}",
       "files_rewritten" -> touched.size.toString,
@@ -1150,12 +1305,94 @@ object VersionedTable {
     }
   }
 
+  /** The deleted fraction at which a merge rewrites a file it claims
+    * rows in rather than growing its deletion vector, and the default
+    * `minDeletedFraction` of [[compactDeletes]]. */
+  private val RewriteFraction = 0.3
+
+  /** The parquet row-replace [[merge]] over the zone-hit files `hit` of
+    * `t`'s head: the live rows of `hit` whose `keys` equal an arrival's
+    * are claimed into the next DV, and the arrivals are written as the
+    * only new rows — every file carries by reference, except a file
+    * this merge claims rows in whose deleted fraction (the head DV's
+    * rows of it plus these claims, over its sidecar row count) reaches
+    * [[RewriteFraction]], or whose row count is unknown: its rows that
+    * are neither deleted nor claimed are written with the arrivals, in
+    * one job.
+    *
+    * The claims are at most `hit`'s rows. When that count plus the head
+    * DV's recorded rows fits under the broadcast threshold
+    * ([[dvOnDriver]]), the claimed positions are collected to the driver
+    * (one job: the collected set is the one evaluation every count and
+    * the DV derive from) and the next DV is counted and written there;
+    * otherwise one job counts the claims per file and Spark writes the
+    * DV. The arrivals are never collected. */
+  private def upsertViaDv(spark: SparkSession, t: Opened, arrivals: DataFrame,
+                          keys: Seq[String], hit: Seq[String], statsColumns: Seq[String],
+                          publishTransform: DataFrame => DataFrame,
+                          options: Map[String, String]): Long = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val rowsOf = t.sidecar.rows.toMap
+    def scan(names: Seq[String]) = loadData(spark, t.root, names, "parquet", options)
+    def dvOf(names: Seq[String]) = t.dv.flatMap(_.scanning(names))
+    lazy val hits = dvEntries(livePositions(spark, scan(hit), dvOf(hit))
+      .join(arrivals.select(keys.map(col): _*), keys, "left_semi"))
+    val onDriver = hit.forall(rowsOf.contains) && dvOnDriver(spark,
+      t.head.dv.fold(0L)(_._2) + hit.map(rowsOf).sum, t.head.names)
+    // the claims, and per hit file: (rows claimed now, rows the head DV holds)
+    val (claims, perFile): (Dv, Map[String, (Long, Long)]) =
+      if (hit.isEmpty) (DriverDv(Nil), Map.empty)
+      else if (onDriver) {
+        val claimed = DriverDv(hits.collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
+        val held = t.dv.fold(Map.empty[String, Long])(_.perFile)
+        (claimed, claimed.perFile.map { case (f, n) => f -> ((n, held.getOrElse(f, 0L))) })
+      } else {
+        val tagged = hits.select(col("file"), lit(true).as("now"))
+        val counts = t.dv.fold(tagged)(d => tagged.unionByName(d.frame(spark)
+            .filter(col("file").isin(hit: _*)).select(col("file"), lit(false).as("now"))))
+          .groupBy("file", "now").agg(count(lit(1))).collect()
+          .map(r => ((r.getString(0), r.getBoolean(1)), r.getLong(2))).toMap
+        val per = counts.collect { case ((f, true), n) => f -> ((n, counts.getOrElse((f, false), 0L))) }
+        (SparkDv(hits, per.values.map(_._1).sum), per)
+      }
+    val rewrite = hit.filter(f => perFile.get(f).exists { case (now, held) =>
+      rowsOf.get(f).forall(n => (now + held).toDouble >= RewriteFraction * n) })
+    val gone = rewrite.toSet
+    val carried = t.head.names.filterNot(gone)
+    val images =
+      if (rewrite.isEmpty) {
+        // no rewritten rows' union checks the arrivals' columns: one footer read
+        checkDrift(spark, t.root, t.location, "merge: arrival", t.head,
+          arrivals.columns.toSeq, "parquet", options)
+        arrivals
+      } else {
+        // a rewritten file keeps the rows neither its DV entries nor this
+        // merge's claims (its live rows an arrival replaces) name
+        val dropped = (dvOf(rewrite) ++ claims.over(rewrite, Some(rewrite.map(perFile(_)._1).sum)))
+          .reduceOption(Dv.union(spark, _, _))
+        applyDv(spark, scan(rewrite), dropped).unionByName(arrivals)
+      }
+    val kept = claims match {
+      case DriverDv(rows) => DriverDv(rows.filterNot(r => gone(r._1)))
+      case d: SparkDv if rewrite.isEmpty => d
+      case SparkDv(df, n) => SparkDv(df.filter(!col("file").isin(rewrite: _*)),
+        n - rewrite.map(perFile(_)._1).sum)
+    }
+    val c = claim(spark, t, Some(carried), Some(kept).filter(_.n > 0L),
+      Some(publishTransform(images)), statsColumns, "parquet", options,
+      carriedDvRows = t.head.dv.map(_._2 - rewrite.map(perFile(_)._2).sum))
+    publishNext(t, "merge", c)("versioned merge", "version" -> s"v${t.next}",
+      "files_rewritten" -> rewrite.size.toString,
+      "files_carried" -> carried.size.toString,
+      "dv_rows_claimed" -> kept.n.toString,
+      "by_source_dv_rows" -> "0")
+  }
+
   /** Row-level DELETE via DELETION VECTORS — the Iceberg v2 / Delta DV
     * shape: matching rows are recorded as (file, row-position) pairs in
     * a parquet sidecar the manifest references; NO data file is
-    * rewritten or moved. [[merge]] rewrites whole files to change rows;
-    * a delete touching 0.001% of a 100 TB table moves kilobytes of
-    * metadata instead. Readers ([[read]]/[[readPruned]]) anti-join the
+    * rewritten or moved: a delete touching 0.001% of a 100 TB table
+    * moves kilobytes of metadata. Readers ([[read]]/[[readPruned]]) anti-join the
     * DV (broadcast-sized until a compaction materializes it away);
     * [[compact]]/cluster maintenance reads through the DV, so their
     * overwrite commit purges it naturally.
@@ -1207,23 +1444,33 @@ object VersionedTable {
     val t = open(spark, location, op, s"re-read and re-$op", expectedLatest)
     val base = loadData(spark, t.root, t.head.names, format, options)
     // only LIVE rows can match (a row deleted twice would double-count)
-    val live = livePositions(spark, t.root, base, t.head.dv.map(_._1))
+    val live = livePositions(spark, base, t.dv.flatMap(_.scanning(t.head.names)))
     val dataCols = base.columns.toSeq
     set.keys.foreach { c =>
       require(dataCols.contains(c),
         s"versioned update: set column '$c' not in the table (has: ${dataCols.mkString(", ")})")
     }
-    // PINNED once (localCheckpoint, eager): the count, the DV positions
-    // and an update's images all derive from the matched set. Without
+    // PINNED once: the count, the DV positions and an update's images
+    // all derive from one evaluation of the matched set. Without
     // pinning, a nondeterministic condition (rand(), now()) would
     // evaluate independently per consumer and the DV could disagree with
     // the count or the images inside one "atomic" commit (silently
-    // losing or duplicating rows). A delete pins the (file, pos) pairs
-    // alone; an update the matched rows, which it appends anyway — cost
-    // ∝ the change itself.
+    // losing or duplicating rows). An update pins the matched rows
+    // (localCheckpoint, eager), which it appends anyway — cost ∝ the
+    // change itself. The positions come to the driver when the table's
+    // rows and the head DV's fit under the broadcast threshold
+    // ([[dvOnDriver]]) — for a delete that collect is the one
+    // evaluation — else a delete pins the (file, pos) pairs alone.
     val matched = live.filter(expr(condition))
-    val pinned = (if (set.isEmpty) dvEntries(matched) else matched).localCheckpoint()
-    val nMatched = pinned.count()
+    val rowsOf = t.sidecar.rows.toMap
+    val onDriver = t.head.names.forall(rowsOf.contains) && dvOnDriver(spark,
+      t.head.dv.fold(0L)(_._2) + t.head.names.map(rowsOf).sum, t.head.names)
+    val pinned = if (set.isEmpty && onDriver) matched else
+      (if (set.isEmpty) dvEntries(matched) else matched).localCheckpoint()
+    val claimed: Dv =
+      if (onDriver) DriverDv(dvEntries(pinned).collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
+      else SparkDv(if (set.isEmpty) pinned else dvEntries(pinned), pinned.count())
+    val nMatched = claimed.n
     if (nMatched == 0L) {
       graft.log.Log.info(s"versioned $op: no matching rows",
         "location" -> location, "version" -> s"v${t.latest}")
@@ -1246,9 +1493,8 @@ object VersionedTable {
     })
     // every file carries (its stats stay sound over-approximations); the
     // images get fresh stats for the tracked columns
-    val c = claim(spark, t, None,
-      Some((if (set.isEmpty) pinned else dvEntries(pinned), nMatched)),
-      images, images.fold(Seq.empty[String])(_ => trackedColumns(t.sidecar)), format, options)
+    val c = claim(spark, t, None, Some(claimed), images,
+      images.fold(Seq.empty[String])(_ => trackedColumns(t.sidecar)), format, options)
     publishNext(t, op, c)(s"versioned $op", "version" -> s"v${t.next}",
       s"rows_$what" -> nMatched.toString, "files_rewritten" -> "0")
   }
@@ -1286,29 +1532,28 @@ object VersionedTable {
     * Serializable single-attempt CAS (mode `compact_deletes`). Returns
     * (version, filesRewritten) — (latest, 0) when nothing qualifies. */
   def compactDeletes(spark: SparkSession, location: String,
-                     minDeletedFraction: Double = 0.3,
+                     minDeletedFraction: Double = RewriteFraction,
                      format: String = "parquet",
                      options: Map[String, String] = Map.empty): (Long, Int) = {
     import org.apache.spark.sql.functions._
     require(minDeletedFraction > 0 && minDeletedFraction <= 1,
       s"compactDeletes: minDeletedFraction must be in (0,1], got $minDeletedFraction")
     val t = open(spark, location, "compactDeletes", "re-run")
-    val dvPrev = t.head.dv match {
+    val dv = t.dv match {
       case None => return (t.latest, 0)
       case Some(x) => x
     }
     val files = t.head.names
-    // deleted counts per file — the DV is delete-sized
-    val delCounts = readDv(spark, t.root, dvPrev._1)
-      .groupBy(col("file")).agg(count(lit(1)).as("n_del"))
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
+    // deleted counts per file — the DV is delete-sized (counted on the
+    // driver when it is read there, else one job)
+    val delCounts = dv.perFile
     val knownRows = t.sidecar.rows.toMap
     val uncounted = delCounts.keySet.filter(f =>
       files.contains(f) && !knownRows.contains(f)).toSeq
     val countedRows: Map[String, Long] =
       if (uncounted.isEmpty) Map.empty
       else loadData(spark, t.root, uncounted, format, options)
-        .groupBy(element_at(split(col("_metadata.file_path"), "/"), -1).as("f"))
+        .groupBy(col("_metadata.file_name").as("f"))
         .agg(count(lit(1)).as("n"))
         .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     val rowsOf = knownRows ++ countedRows
@@ -1319,12 +1564,13 @@ object VersionedTable {
     }
     if (rewrite.isEmpty) return (t.latest, 0)
     val carried = files.filterNot(rewrite.toSet)
-    val live = applyDv(spark, t.root, loadData(spark, t.root, rewrite, format, options),
-      dvPrev._1)
+    val live = applyDv(spark, loadData(spark, t.root, rewrite, format, options),
+      dv.scanning(rewrite))
     // the rewritten output gets fresh stats; the carried files keep
-    // theirs and their DV entries
+    // theirs and their DV entries, whose count is the per-file sum
     val c = claim(spark, t, Some(carried), None, Some(live),
-      trackedColumns(t.sidecar), format, options)
+      trackedColumns(t.sidecar), format, options,
+      carriedDvRows = Some(carried.map(delCounts.getOrElse(_, 0L)).sum))
     (publishNext(t, "compact_deletes", c)("versioned delete compaction",
       "version" -> s"v${t.next}",
       "files_rewritten" -> rewrite.size.toString,
@@ -1647,8 +1893,9 @@ object VersionedTable {
       case s: String => Some(s)
       case _ => None
     }
-    val preds = predicates.map(p => (p.column, p.op, canonToken(p.value),
-      if (p.op == "=") bitmapCanonical(p.value).map(bitmapBucket) else None))
+    // a NaN or infinite probe value has no token: it keeps every file
+    val preds = predicates.flatMap(p => boundToken(p.value).map(tok => (p.column, p.op, tok,
+      if (p.op == "=") bitmapCanonical(p.value).map(bitmapBucket) else None)))
     def mayMatch(f: String): Boolean = preds.forall { case (c, op, tok, bkt) =>
       val rangeOk = stats.get(f).flatMap(_.get(c)) match {
         case None => true // no stats for this file/column: keep

@@ -216,6 +216,42 @@ class VersionedTableSpec extends SparkSpec {
     assert(rows(s.df.filter($"v" === odd)) == Set((1, odd)))
   }
 
+  test("zone maps: NaN and ±Infinity bounds are unknown — commit, merge and pruned reads keep the file") {
+    val loc = tmp("nan")
+    val x = Seq("x")
+    def commit(rs: Seq[(Double, String)], mode: String) = VersionedTable.commit(spark, loc,
+      rs.toDF("x", "v").coalesce(1), mode, statsColumns = x)
+    val (nan, inf) = (Double.NaN, Double.PositiveInfinity)
+    commit(Seq((1.0, "a"), (nan, "nan")), "overwrite")
+    commit(Seq((-inf, "ninf"), (2.0, "b")), "append")
+    commit(Seq((3.0, "c"), (inf, "pinf")), "append")
+    commit(Seq((5.0, "d"), (6.0, "e")), "append")
+    // doubles as their strings: NaN equals itself there
+    def got(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getDouble(0).toString, r.getString(1))).toSet
+    // three files record no zone map for x; the finite one does
+    val stats = VersionedTable.fileStats(spark, loc, 4L)
+    assert(VersionedTable.fileRows(spark, loc, 4L).size == 4)
+    assert(stats.count(_._2.contains("x")) == 1, stats)
+    // Spark orders NaN above +Infinity: both pass x > 100, and pruning
+    // keeps every file whose bounds are unknown
+    val hi = VersionedTable.readPruned(spark, loc, Seq(VersionedTable.Prune("x", ">", 100.0)))
+    assert(hi.keptFiles == 3 && got(hi.df.filter("x > 100")) ==
+      Set(("NaN", "nan"), ("Infinity", "pinf")))
+    val lo = VersionedTable.readPruned(spark, loc, Seq(VersionedTable.Prune("x", "<", -100.0)))
+    assert(lo.keptFiles == 3 && got(lo.df.filter("x < -100")) == Set(("-Infinity", "ninf")))
+    // a NaN probe has no token: it keeps every file
+    val probe = VersionedTable.readPruned(spark, loc, Seq(VersionedTable.Prune("x", "=", nan)))
+    assert(probe.keptFiles == 4 && got(probe.df.filter("x = double('NaN')")) == Set(("NaN", "nan")))
+    // a merge keyed on x: its key bounds are NaN, so every file is a hit
+    VersionedTable.merge(spark, loc, Seq((nan, "nan2"), (inf, "pinf2"), (-inf, "ninf2"),
+      (7.0, "f")).toDF("x", "v"), x, statsColumns = x)
+    assert(got(VersionedTable.read(spark, loc)) == Set(("1.0", "a"), ("NaN", "nan2"),
+      ("-Infinity", "ninf2"), ("2.0", "b"), ("3.0", "c"), ("Infinity", "pinf2"),
+      ("5.0", "d"), ("6.0", "e"), ("7.0", "f")))
+    assert(got(VersionedTable.read(spark, loc, asOf = Some(4L))).size == 8)
+  }
+
   test("zone maps: canonical tokens order timestamps/dates numerically") {
     // Timestamp.toString renders in the writer JVM's default zone (not
     // comparable across writers); the canonical token is epoch micros
@@ -394,13 +430,14 @@ class VersionedTableSpec extends SparkSpec {
       Seq((12, "X"), (15, "Y"), (99, "NEW")).toDF("k", "v").coalesce(1), Seq("k"),
       statsColumns = Seq("k"))
     assert(v == 2L)
-    val after = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$loc/_graft_log/v00002.json")), "UTF-8")
     // pruning is the arrival [min,max] range = [12,99], which spans the
-    // three upper files (the documented coarseness); file 1 (1..10)
-    // must carry by reference
-    val carried = before.filter(after.contains)
-    assert(carried.nonEmpty && carried.size < 4)
+    // three upper files (the documented coarseness); keys 12 and 15 hit
+    // 2 of the 11..20 file's 10 rows, under the 0.3 rewrite fraction, so
+    // EVERY file carries by reference, the two replaced rows go to the
+    // deletion vector, and the arrivals are the one new file
+    val m = headManifest(loc)
+    assert(before.subsetOf(m.names.toSet) && m.names.size == 5, m.names)
+    assert(m.dv.map(_._2).contains(2L))
     // content exact
     val got = VersionedTable.read(spark, loc).collect()
       .map(r => (r.getAs[Int]("k"), r.getAs[String]("v"))).toMap
@@ -421,14 +458,42 @@ class VersionedTableSpec extends SparkSpec {
     VersionedTable.merge(spark, loc,
       Seq((12, "X"), (15, "Y")).toDF("k", "v").coalesce(1), Seq("k"),
       statsColumns = Seq("k"))
-    val after = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$loc/_graft_log/v00002.json")), "UTF-8")
-    assert(before.count(after.contains) == 3) // only the 11..20 file rewritten
+    // the 11..20 file loses 2 of 10 rows to the DV: all four files carry,
+    // and the arrivals are the one new file
+    val m = headManifest(loc)
+    assert(before.subsetOf(m.names.toSet) && m.names.size == 5, m.names)
+    assert(m.dv.map(_._2).contains(2L))
     assert(VersionedTable.read(spark, loc).count() == 40)
     // history shows the merge commit
     val modes = VersionedTable.history(spark, loc).collect()
       .map(r => (r.getAs[Long]("version"), r.getAs[String]("mode"))).toMap
     assert(modes == Map(1L -> "overwrite", 2L -> "merge"))
+  }
+
+  test("merge rewrites a claimed file once its deleted fraction reaches 0.3, in the arrivals' write") {
+    val loc = tmp("m4")
+    VersionedTable.commit(spark, loc,
+      spark.range(1, 41).selectExpr("CAST(id AS INT) AS k", "CAST(id AS STRING) AS v")
+        .repartitionByRange(4, $"k"),
+      "overwrite", statsColumns = Seq("k"))
+    VersionedTable.deleteWhere(spark, loc, "k IN (21, 22)") // 2 of the 21..30 file
+    val before = headManifest(loc)
+    def fileOf(k: Int) = VersionedTable.fileStats(spark, loc, before.version).collectFirst {
+      case (f, cs) if BigDecimal(cs("k").min) <= k && k <= BigDecimal(cs("k").max) => f }.get
+    // 13 claims 1 of 10 rows of its file (0.1): it carries with a DV
+    // entry. 23 brings the 21..30 file to 3 of 10 deleted (0.3): that
+    // file is rewritten, its DV entries materialized away
+    VersionedTable.merge(spark, loc, Seq((13, "X"), (23, "Y"), (99, "NEW")).toDF("k", "v")
+      .coalesce(1), Seq("k"), statsColumns = Seq("k"))
+    val m = headManifest(loc)
+    assert(m.names.toSet.intersect(before.names.toSet) == before.names.toSet - fileOf(23))
+    assert(m.dv.map(_._2).contains(1L))
+    // three carried files, and written: the arrivals and the 21..30
+    // file's 7 rows neither deleted nor replaced
+    assert(VersionedTable.fileRows(spark, loc, m.version).values.sum == 30 + 3 + 7)
+    assert(rows(VersionedTable.read(spark, loc)) == ((1 to 40).toSet -- Set(21, 22))
+      .map(k => (k, k.toString)) -- Set((13, "13"), (23, "23")) ++
+      Set((13, "X"), (23, "Y"), (99, "NEW")))
   }
 
   test("merge without zone maps degrades to a full rewrite, still exact") {
@@ -646,6 +711,24 @@ class VersionedTableSpec extends SparkSpec {
     // no-match delete is a no-op (no new version)
     assert(VersionedTable.deleteWhere(spark, loc, "k = 99") == 3L)
     assert(VersionedTable.versions(spark, loc) == Seq(1L, 2L, 3L))
+  }
+
+  test("golden: a DV the Spark committer wrote (part files, _SUCCESS, .crc) reads the same on the driver") {
+    // written by the earlier committer path: three files over k = 1..30,
+    // then k % 4 = 0 deleted — a DV of 7 rows in three part files
+    val loc = "src/test/golden/dv-table"
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val onDriver = VersionedTable.readDvRows(fs, new org.apache.hadoop.fs.Path(loc), "dv-295b74c1")
+    val bySpark = spark.read.parquet(s"$loc/_graft_log/dv-295b74c1").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq
+    assert(onDriver.size == 7 && onDriver.sorted == bySpark.sorted)
+    val expected = (1 to 30).filterNot(_ % 4 == 0).map(k => (k, k.toString)).toSet
+    assert(rows(VersionedTable.read(spark, loc)) == expected)
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(threshold)
+    spark.conf.set(threshold, "-1") // the DV read by Spark
+    try assert(rows(VersionedTable.read(spark, loc)) == expected)
+    finally spark.conf.set(threshold, prev)
   }
 
   test("deleteWhere: append carries the DV; merge never resurrects deleted rows") {
@@ -1616,16 +1699,18 @@ class VersionedTableSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$loc/_graft_log/${m3.statsFile.get}")), "UTF-8")
     assert(m3.files.size == 5)
     assert(sidecar3.split('\n').toSeq == oracleSidecar(loc, m3.names, cols))
-    // NaN has no canonical token: the commit fails as the read-back
-    // query's tokens did, and publishes nothing
+    // NaN has no canonical token (the read-back query's tokens throw on
+    // it): the commit records that file's bounds as unknown — its row
+    // count, no zone map
     val nan = spark.createDataFrame(spark.sparkContext.parallelize(
       Seq(Row(1.0), Row(Double.NaN)), 1), StructType(Seq(StructField("d", DoubleType))))
     val nanLoc = tmp("oracle-nan")
-    intercept[NumberFormatException](
-      VersionedTable.commit(spark, nanLoc, nan, "overwrite", statsColumns = Seq("d")))
-    assert(VersionedTable.versions(spark, nanLoc).isEmpty)
-    intercept[NumberFormatException](oracleSidecar(nanLoc,
-      new java.io.File(s"$nanLoc/data").list().filter(_.endsWith(".parquet")).toSeq, Seq("d")))
+    VersionedTable.commit(spark, nanLoc, nan, "overwrite", statsColumns = Seq("d"))
+    assert(VersionedTable.versions(spark, nanLoc) == Seq(1L))
+    val nanFile = headManifest(nanLoc).names.head
+    assert(VersionedTable.fileStats(spark, nanLoc, 1L).isEmpty)
+    assert(VersionedTable.fileRows(spark, nanLoc, 1L) == Map(nanFile -> 2L))
+    intercept[NumberFormatException](oracleSidecar(nanLoc, Seq(nanFile), Seq("d")))
     // a stats column the frame lacks fails before any file is written
     val missLoc = tmp("oracle-miss")
     val e = intercept[graft.config.ConfigError](VersionedTable.commit(spark, missLoc,
@@ -1812,19 +1897,32 @@ class VersionedTableSpec extends SparkSpec {
       n += 1
       Seq(n).toDF("n").coalesce(1).write.parquet(s"$bmDir/landing/batch-$n")
     }
+    // a second table takes the deletes: each deletes one row, and each
+    // merge over its DV claims one more (under the 0.3 rewrite fraction)
+    val dvLoc = tmp("forks-dv")
+    var d = 0
     val ops = Seq[(String, () => Any)](
       "append commit" -> (() => VersionedTable.commit(spark, loc,
         Seq((100 + n, "a")).toDF("k", "v"), "append", statsColumns = k)),
       "merge" -> (() => VersionedTable.merge(spark, loc,
         Seq((1, "m"), (200 + n, "x")).toDF("k", "v"), k, statsColumns = k)),
+      "deleteWhere" -> { () => d += 1; VersionedTable.deleteWhere(spark, dvLoc, s"k = $d") },
+      "merge over a DV" -> (() => VersionedTable.merge(spark, dvLoc,
+        Seq((20 - d, "m"), (300 + d, "x")).toDF("k", "v"), k, statsColumns = k)),
       "bookmark plan + commit" -> (() => store.commit(store.plan("src", s"$bmDir/landing"))))
-    VersionedTable.commit(spark, loc, (1 to 20).map(i => (i, s"v$i")).toDF("k", "v"),
-      "overwrite", statsColumns = k)
+    Seq(loc, dvLoc).foreach(l => VersionedTable.commit(spark, l,
+      (1 to 20).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1), "overwrite", statsColumns = k))
+    val seedFile = headManifest(dvLoc).names.head
     // once untraced: one-time class initialisation may start processes
     landFile(); ops.foreach(_._2())
     landFile(); landFile()
     val forks = ops.map { case (what, op) => what -> forksFromGraft(op()) }
     assert(forks.forall(_._2 == 0), forks)
+    // the DV route ran: every merge over the DV claimed its row into it
+    val dvHead = headManifest(dvLoc)
+    assert(dvHead.names.contains(seedFile) && dvHead.dv.map(_._2).contains(4L), dvHead)
+    assert(rows(VersionedTable.read(spark, dvLoc)).map(_._1) ==
+      (3 to 20).toSet ++ Set(301, 302))
     // the recorder does see graft-started subprocesses: without the
     // native library, Hadoop's local create runs chmod
     if (!org.apache.hadoop.util.NativeCodeLoader.isNativeCodeLoaded) {
