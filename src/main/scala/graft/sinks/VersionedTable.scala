@@ -378,9 +378,10 @@ object VersionedTable {
       * all; `known` is their count when the caller has it (a restricted
       * Spark frame is counted otherwise, one job). */
     def over(names: Seq[String], known: Option[Long] = None): Option[Dv]
-    /** The DV a scan of the data files `names` anti-joins: rows held on
-      * the driver restricted to those files (None when none is), a Spark
-      * frame whole (its rows of other files match nothing). */
+    /** The DV a scan of the data files `names` applies
+      * ([[livePositions]]): rows held on the driver restricted to those
+      * files (None when none is), a Spark frame whole (its rows of other
+      * files match nothing). */
     def scanning(names: Seq[String]): Option[Dv]
     /** Rows per data file (a Spark frame counts them in one job). */
     def perFile: Map[String, Long]
@@ -409,6 +410,9 @@ object VersionedTable {
     }
   }
   private object Dv {
+    /** The (file, pos) rows of `entries` ([[dvEntries]]), collected: one job. */
+    def collect(entries: DataFrame): DriverDv =
+      DriverDv(entries.collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
     def union(spark: SparkSession, a: Dv, b: Dv): Dv = (a, b) match {
       case (DriverDv(x), DriverDv(y)) => DriverDv(x ++ y)
       case _ => SparkDv(a.frame(spark).unionByName(b.frame(spark)), a.n + b.n)
@@ -516,21 +520,29 @@ object VersionedTable {
 
   /** `df` (which must carry parquet `_metadata`) with its row
     * positions exposed as `__dv_file` (`_metadata.file_name`) /
-    * `__dv_pos` (row index) and the deletion vector `dv` anti-joined
-    * away — the DV is the small side: rows held on the driver join as a
-    * `LocalRelation`, a Spark frame as its scan, and AQE broadcasts
-    * either. The ONE position-derivation in this file: [[applyDv]],
-    * [[deleteWhere]], [[updateWhere]] and both DV routes of [[merge]]
-    * read through it, so the DV layout cannot fork. */
+    * `__dv_pos` (row index) and the deletion vector `dv` removed. Rows
+    * held on the driver filter the scan through a per-file sorted
+    * position array the tasks receive with their closure (broadcasting
+    * a local relation for a join would start a Spark job); a Spark frame
+    * is anti-joined, the small side that AQE broadcasts. The ONE
+    * position-derivation in this file: [[applyDv]], [[deleteWhere]],
+    * [[updateWhere]] and both DV routes of [[merge]] read through it, so
+    * the DV layout cannot fork. */
   private def livePositions(spark: SparkSession, df: DataFrame, dv: Option[Dv]): DataFrame = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, udf}
     val withPos = df
       .withColumn("__dv_file", col("_metadata.file_name"))
       .withColumn("__dv_pos", col("_metadata.row_index"))
-    dv.fold(withPos) { d =>
-      withPos.join(d.frame(spark)
-          .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
-        Seq("__dv_file", "__dv_pos"), "left_anti")
+    dv.fold(withPos) {
+      case DriverDv(rows) =>
+        val dead = rows.groupMap(_._1)(_._2).map { case (f, ps) => f -> ps.toArray.sorted }
+        val live = udf((f: String, p: Long) =>
+          dead.get(f).forall(java.util.Arrays.binarySearch(_, p) < 0))
+        withPos.filter(live(col("__dv_file"), col("__dv_pos")))
+      case d =>
+        withPos.join(d.frame(spark)
+            .select(col("file").as("__dv_file"), col("pos").as("__dv_pos")),
+          Seq("__dv_file", "__dv_pos"), "left_anti")
     }
   }
 
@@ -548,9 +560,9 @@ object VersionedTable {
     dv.fold(df)(d => livePositions(spark, df, Some(d)).select(df.columns.toSeq.map(col): _*))
   }
 
-  /** The live rows of the data files `names`: `dv`'s rows anti-joined
-    * away; a DV read on the driver joins only its rows of `names`, and
-    * not at all when it holds none. */
+  /** The live rows of the data files `names`: `dv`'s rows removed; a
+    * DV read on the driver applies only its rows of `names`, and not at
+    * all when it holds none. */
   private def liveRows(spark: SparkSession, root: Path, names: Seq[String],
                        dv: Option[(String, Long)], format: String,
                        options: Map[String, String]): DataFrame =
@@ -1057,8 +1069,10 @@ object VersionedTable {
     * zone-hit file whose deleted fraction would reach
     * [[RewriteFraction]] with this merge's claims is rewritten instead
     * (its live, unreplaced rows), in the same write job as the arrivals.
-    * Non-parquet formats have no row positions and conditional MATCHED
-    * actions change rows in place: those rewrite the zone-hit files.
+    * Non-parquet formats have no row positions, conditional MATCHED
+    * actions change rows in place, and a zone-hit file without a recorded
+    * row count (a table written without `statsColumns`) has no deleted
+    * fraction: those merges rewrite the zone-hit files.
     * SERIALIZABLE: a concurrent commit since the snapshot aborts loudly
     * — a silent rebase would resurrect rows the concurrent writer
     * replaced. Returns the committed version. */
@@ -1166,11 +1180,15 @@ object VersionedTable {
     // the zone-hit files: the only files whose rows CAN match an
     // arrival key (pruning on the leading key; conservative)
     val touchedProbe = files.filter(touchedBy)
-    if (!conditional && format == "parquet")
+    // the DV route weighs each zone-hit file's deleted fraction, so it
+    // needs the file's recorded row count; a table written without stats
+    // columns records none and rewrites its zone-hit files below
+    val counted = t.sidecar.rows.map(_._1).toSet
+    if (!conditional && format == "parquet" && touchedProbe.forall(counted))
       return upsertViaDv(spark, t, arrivals, keys, touchedProbe, statsColumns,
         publishTransform, options)
-    // files REWRITTEN this commit: a non-parquet upsert's zone-hit
-    // files. MATCHED actions change rows in
+    // files REWRITTEN this commit: the zone-hit files of an upsert off
+    // the DV route. MATCHED actions change rows in
     // place, so the zone-hit files rewrite through the evaluator;
     // insert actions never touch existing files; BY SOURCE actions
     // reach every unmatched target row, but on parquet they route
@@ -1315,8 +1333,8 @@ object VersionedTable {
     * are claimed into the next DV, and the arrivals are written as the
     * only new rows — every file carries by reference, except a file
     * this merge claims rows in whose deleted fraction (the head DV's
-    * rows of it plus these claims, over its sidecar row count) reaches
-    * [[RewriteFraction]], or whose row count is unknown: its rows that
+    * rows of it plus these claims, over its sidecar row count, which
+    * every file of `hit` has) reaches [[RewriteFraction]]: its rows that
     * are neither deleted nor claimed are written with the arrivals, in
     * one job.
     *
@@ -1337,13 +1355,13 @@ object VersionedTable {
     def dvOf(names: Seq[String]) = t.dv.flatMap(_.scanning(names))
     lazy val hits = dvEntries(livePositions(spark, scan(hit), dvOf(hit))
       .join(arrivals.select(keys.map(col): _*), keys, "left_semi"))
-    val onDriver = hit.forall(rowsOf.contains) && dvOnDriver(spark,
-      t.head.dv.fold(0L)(_._2) + hit.map(rowsOf).sum, t.head.names)
+    val onDriver = dvOnDriver(spark, t.head.dv.fold(0L)(_._2) + hit.map(rowsOf).sum,
+      t.head.names)
     // the claims, and per hit file: (rows claimed now, rows the head DV holds)
     val (claims, perFile): (Dv, Map[String, (Long, Long)]) =
       if (hit.isEmpty) (DriverDv(Nil), Map.empty)
       else if (onDriver) {
-        val claimed = DriverDv(hits.collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
+        val claimed = Dv.collect(hits)
         val held = t.dv.fold(Map.empty[String, Long])(_.perFile)
         (claimed, claimed.perFile.map { case (f, n) => f -> ((n, held.getOrElse(f, 0L))) })
       } else {
@@ -1356,9 +1374,10 @@ object VersionedTable {
         (SparkDv(hits, per.values.map(_._1).sum), per)
       }
     val rewrite = hit.filter(f => perFile.get(f).exists { case (now, held) =>
-      rowsOf.get(f).forall(n => (now + held).toDouble >= RewriteFraction * n) })
+      (now + held).toDouble >= RewriteFraction * rowsOf(f) })
     val gone = rewrite.toSet
     val carried = t.head.names.filterNot(gone)
+    val rewrittenClaims = rewrite.map(perFile(_)._1).sum
     val images =
       if (rewrite.isEmpty) {
         // no rewritten rows' union checks the arrivals' columns: one footer read
@@ -1368,23 +1387,19 @@ object VersionedTable {
       } else {
         // a rewritten file keeps the rows neither its DV entries nor this
         // merge's claims (its live rows an arrival replaces) name
-        val dropped = (dvOf(rewrite) ++ claims.over(rewrite, Some(rewrite.map(perFile(_)._1).sum)))
+        val dropped = (dvOf(rewrite) ++ claims.over(rewrite, Some(rewrittenClaims)))
           .reduceOption(Dv.union(spark, _, _))
         applyDv(spark, scan(rewrite), dropped).unionByName(arrivals)
       }
-    val kept = claims match {
-      case DriverDv(rows) => DriverDv(rows.filterNot(r => gone(r._1)))
-      case d: SparkDv if rewrite.isEmpty => d
-      case SparkDv(df, n) => SparkDv(df.filter(!col("file").isin(rewrite: _*)),
-        n - rewrite.map(perFile(_)._1).sum)
-    }
-    val c = claim(spark, t, Some(carried), Some(kept).filter(_.n > 0L),
+    // the claims in carried files (every claim is in a hit file)
+    val kept = claims.over(hit.filterNot(gone), Some(claims.n - rewrittenClaims))
+    val c = claim(spark, t, Some(carried), kept,
       Some(publishTransform(images)), statsColumns, "parquet", options,
       carriedDvRows = t.head.dv.map(_._2 - rewrite.map(perFile(_)._2).sum))
     publishNext(t, "merge", c)("versioned merge", "version" -> s"v${t.next}",
       "files_rewritten" -> rewrite.size.toString,
       "files_carried" -> carried.size.toString,
-      "dv_rows_claimed" -> kept.n.toString,
+      "dv_rows_claimed" -> kept.fold(0L)(_.n).toString,
       "by_source_dv_rows" -> "0")
   }
 
@@ -1392,8 +1407,9 @@ object VersionedTable {
     * shape: matching rows are recorded as (file, row-position) pairs in
     * a parquet sidecar the manifest references; NO data file is
     * rewritten or moved: a delete touching 0.001% of a 100 TB table
-    * moves kilobytes of metadata. Readers ([[read]]/[[readPruned]]) anti-join the
-    * DV (broadcast-sized until a compaction materializes it away);
+    * moves kilobytes of metadata. Readers ([[read]]/[[readPruned]]) drop
+    * the DV's positions ([[livePositions]]; broadcast-sized until a
+    * compaction materializes it away);
     * [[compact]]/cluster maintenance reads through the DV, so their
     * overwrite commit purges it naturally.
     *
@@ -1468,7 +1484,7 @@ object VersionedTable {
     val pinned = if (set.isEmpty && onDriver) matched else
       (if (set.isEmpty) dvEntries(matched) else matched).localCheckpoint()
     val claimed: Dv =
-      if (onDriver) DriverDv(dvEntries(pinned).collect().toSeq.map(r => (r.getString(0), r.getLong(1))))
+      if (onDriver) Dv.collect(dvEntries(pinned))
       else SparkDv(if (set.isEmpty) pinned else dvEntries(pinned), pinned.count())
     val nMatched = claimed.n
     if (nMatched == 0L) {
@@ -1935,7 +1951,7 @@ object VersionedTable {
         snapshot(spark, root, location, m, format, options).limit(0)
       else
         // deleted rows stay invisible on the pruned path too (DV entries
-        // for pruned-away files anti-join to nothing, harmlessly)
+        // for pruned-away files match nothing, harmlessly)
         liveRows(spark, root, kept, m.dv, format, options)
     graft.log.Log.info("versioned pruned read",
       "location" -> location, "version" -> s"v$v",

@@ -500,8 +500,12 @@ class VersionedTableSpec extends SparkSpec {
     val loc = tmp("m3")
     VersionedTable.commit(spark, loc,
       Seq((1, "a"), (2, "b")).toDF("k", "v").coalesce(1), "overwrite") // no stats
+    val before = headManifest(loc).names
     VersionedTable.merge(spark, loc, Seq((2, "B"), (3, "c")).toDF("k", "v"), Seq("k"))
     assert(rows(VersionedTable.read(spark, loc)) == Set((1, "a"), (2, "B"), (3, "c")))
+    // no recorded row counts: the zone-hit file is rewritten, no DV
+    val m = headManifest(loc)
+    assert(m.dv.isEmpty && m.names.intersect(before).isEmpty, m)
   }
 
   test("BY SOURCE merge routes through the DV: every file carries, claimed rows flip or vanish") {
